@@ -98,6 +98,8 @@ object Bench {
       System.gc()
       name -> ((cold, steady, sentinel))
     }
+    java.nio.file.Files.deleteIfExists(sentinelDir.resolve("probe.bin"))
+    java.nio.file.Files.deleteIfExists(sentinelDir)
     // Locale.ROOT: under a comma-decimal default locale (de_DE etc.)
     // f"%.3f" would emit "1,234" and the JSON line would not parse.
     def r3(x: Double): String =

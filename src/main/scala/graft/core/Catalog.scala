@@ -1272,12 +1272,10 @@ final class Catalog(spark: SparkSession, warehouse: String,
         after.opSeq
       }
       crashPoint("multi-staged")
-      writeString(txnRecordPath(id),
-        s"""{"tables": [${names.map(n => "\"" + n + "\"").mkString(", ")}], """ +
-          s""""expected": [${expected.mkString(", ")}], """ +
-          s""""next": [${next.mkString(", ")}]}""")
+      val rec = TxnRecord(tables = names, expected = expected, next = next)
+      writeString(txnRecordPath(id), TableMeta.encode(rec))
       crashPoint("multi-committed")
-      applyTxnRecord(id, names, expected, next)
+      applyTxn(id, rec, txnRecordPath(id))
     } }
     // post-commit maintenance, same trigger as tryCommit (each call
     // takes its own per-table lock/marker)
@@ -1286,8 +1284,6 @@ final class Catalog(spark: SparkSession, warehouse: String,
     names.map(n => n -> getTable(n)).toMap
   }
 
-  /** Roll a committed transaction record forward (idempotent), then
-    * drop the record file. */
   /**
    * COPY INTO (r14) — idempotent FILE-granularity bulk ingest, the
    * Delta/Snowflake `COPY INTO` shape a 100 TB ingestion pipeline
@@ -1350,26 +1346,13 @@ final class Catalog(spark: SparkSession, warehouse: String,
     newFiles.length.toLong
   }
 
-  private def applyTxnRecord(id: String, names: Seq[String],
-                             expected: Seq[Long], next: Seq[Long]): Unit = {
-    applyTxnBody(id, names, expected, next)
-    fs.delete(txnRecordPath(id), false)
-  }
-
-  /** Roll THIS participant's share of a committed cross-catalog
-    * transaction forward, then drop the part record. The DECISION file
-    * (at the coordinator) is deliberately untouched — only the
-    * coordinator retires it, once every participant's part is gone. */
-  private def applyTxnPart(id: String, names: Seq[String],
-                           expected: Seq[Long], next: Seq[Long]): Unit = {
-    applyTxnBody(id, names, expected, next)
-    fs.delete(txnPartPath(id), false)
-  }
-
-  /** The shared roll-forward core (idempotent per table). */
-  private def applyTxnBody(id: String, names: Seq[String],
-                           expected: Seq[Long], next: Seq[Long]): Unit = {
-    names.lazyZip(expected).lazyZip(next).foreach { (n, e, x) =>
+  /** Roll a committed transaction forward (idempotent per table), then
+    * drop its `record`: a [[commitMulti]] record, or THIS participant's
+    * part record of a cross-catalog transaction. A DECISION file (at the
+    * coordinator) is deliberately untouched — only the coordinator
+    * retires it, once every participant's part is gone. */
+  private def applyTxn(id: String, rec: TxnRecord, record: Path): Unit = {
+    rec.tables.lazyZip(rec.expected).lazyZip(rec.next).foreach { (n, e, x) =>
       val meta = readMeta(n)
       if (meta.opSeq == e) writeMeta(n, meta.copy(opSeq = x))
       else require(meta.opSeq == x,
@@ -1401,6 +1384,7 @@ final class Catalog(spark: SparkSession, warehouse: String,
       crashPoint(s"multi-done-$n")
     }
     deleteRecursively(new Path(txnRoot, id))
+    fs.delete(record, false)
   }
 
   /**
@@ -1413,14 +1397,6 @@ final class Catalog(spark: SparkSession, warehouse: String,
    */
   def recoverTxns(): Unit = if (isDir(txnRoot)) {
     val entries = fs.listStatus(txnRoot).toSeq
-    def fields(json: String, field: String): Seq[String] =
-      (s""""$field"\\s*:\\s*\\[([^\\]]*)\\]""").r
-        .findFirstMatchIn(json).map(_.group(1)).filter(_.trim.nonEmpty)
-        .map(_.split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).toSeq)
-        .getOrElse(Nil)
-    def one(json: String, field: String): Option[String] =
-      (s""""$field"\\s*:\\s*"([^"]+)"""").r
-        .findFirstMatchIn(json).map(_.group(1))
     def ownerAliveFor(id: String): Boolean =
       try fs.listStatus(new Path(txnRoot, id)).exists(c => c.isDirectory &&
         pathExists(new Path(dir(c.getPath.getName), "_commit.lock")))
@@ -1433,11 +1409,10 @@ final class Catalog(spark: SparkSession, warehouse: String,
     entries.filter(s => s.isFile && s.getPath.getName.endsWith(".part.json"))
       .foreach { s =>
         val id = s.getPath.getName.stripSuffix(".part.json")
-        val json = readString(s.getPath)
-        val tables = fields(json, "tables")
+        val rec = TableMeta.decodeTxn(readString(s.getPath))
         // None = coordinator unreachable (leave everything for a later
         // pass); Some(true/false) = decision present/absent
-        val decided: Option[Boolean] = one(json, "coordinator").flatMap { c =>
+        val decided: Option[Boolean] = rec.coordinator.flatMap { c =>
           try {
             val decision = new Path(new Path(new Path(c), "_txn"),
               id + ".json")
@@ -1446,11 +1421,9 @@ final class Catalog(spark: SparkSession, warehouse: String,
         }
         decided match {
           case Some(true) =>
-            try withLocks(tables.toList.sorted) {
-              withMarkers(tables.toList.sorted) {
-                applyTxnPart(id, tables,
-                  fields(json, "expected").map(_.toLong),
-                  fields(json, "next").map(_.toLong))
+            try withLocks(rec.tables.toList.sorted) {
+              withMarkers(rec.tables.toList.sorted) {
+                applyTxn(id, rec, txnPartPath(id))
               }
             } catch { case _: ConcurrentModificationException => () }
           case Some(false) =>
@@ -1473,8 +1446,8 @@ final class Catalog(spark: SparkSession, warehouse: String,
         !s.getPath.getName.endsWith(".part.json"))
       .foreach { s =>
         val id = s.getPath.getName.stripSuffix(".json")
-        val json = readString(s.getPath)
-        val participants = fields(json, "participants")
+        val rec = TableMeta.decodeTxn(readString(s.getPath))
+        val participants = rec.participants
         if (participants.nonEmpty) {
           def partPending(uri: String): Boolean =
             try {
@@ -1493,18 +1466,15 @@ final class Catalog(spark: SparkSession, warehouse: String,
           if (participants.forall(u => !partPending(u)))
             fs.delete(s.getPath, false)
         } else {
-          val tables = fields(json, "tables")
           // A record whose tables' markers are HELD belongs to a LIVE
           // writer mid-roll-forward — recovery is for the dead.
           // Skipping on contention keeps catalog construction and
           // unrelated commitMulti calls from failing spuriously while a
           // healthy writer finishes; the next pass completes the record
           // if the writer died.
-          try withLocks(tables.toList.sorted) {
-            withMarkers(tables.toList.sorted) {
-              applyTxnRecord(id, tables,
-                fields(json, "expected").map(_.toLong),
-                fields(json, "next").map(_.toLong))
+          try withLocks(rec.tables.toList.sorted) {
+            withMarkers(rec.tables.toList.sorted) {
+              applyTxn(id, rec, txnRecordPath(id))
             }
           } catch { case _: ConcurrentModificationException => () }
         }
@@ -1558,7 +1528,7 @@ final class Catalog(spark: SparkSession, warehouse: String,
         // incomplete snapshot (a crash-interrupted fold whose base never
         // retired — the live table still holds that data) is skipped.
         val snapMetas = meta.snaps.reverse.map(id =>
-          id -> parseMeta(readString(snapMetaPath(name, id))))
+          id -> TableMeta.decodeMeta(readString(snapMetaPath(name, id))))
         snapMetas.collectFirst { case (id, sm)
             if isDir(snapDataDir(name, id, "base")) && resolve(sm).isDefined =>
           loadSnapshot(name, id, sm).asOfVersion(resolve(sm).get)
@@ -1903,7 +1873,7 @@ final class Catalog(spark: SparkSession, warehouse: String,
       fs.mkdirs(snapRoot(name))
       // manifest BEFORE any data move: an unreferenced manifest is
       // harmless; a moved base without its manifest would be unreadable
-      writeString(snapMetaPath(name, snapId), metaJson(meta))
+      writeString(snapMetaPath(name, snapId), TableMeta.encode(meta))
       // the tail is COPIED (it is ≤ compactRatio of the base by the
       // trigger, so the copy is bounded); the base — the big half — is
       // retired by RENAME in swapBaseIntoSnap below, never copied
@@ -2783,7 +2753,7 @@ final class Catalog(spark: SparkSession, warehouse: String,
     // retained snapshots' logs first (oldest snapshot first), then the
     // live log — together: every timestamp asOfTimestamp can resolve
     val snapEntries = meta.snaps.flatMap { id =>
-      val sm = parseMeta(readString(snapMetaPath(name, id)))
+      val sm = TableMeta.decodeMeta(readString(snapMetaPath(name, id)))
       sm.commitVers.zip(sm.commitTs)
     }
     val rows = (snapEntries ++ meta.commitVers.zip(meta.commitTs)).map {
@@ -2811,12 +2781,14 @@ final class Catalog(spark: SparkSession, warehouse: String,
    * assembled frame — declared, not inferred per stream start, and exact
    * under schema evolution. The tail dir is created if absent so a feed
    * can be attached before the first post-base commit (it streams zero
-   * batches until one lands).
+   * batches until one lands). The table resolves first: after a fold,
+   * resolving ([[healLeftoverTail]]) deletes an empty tail directory.
    */
   def changeFeedInfo(name: String): (String, org.apache.spark.sql.types.StructType) = {
+    val schema = getTable(name).lineage.schema
     val tail = new Path(dir(name), "tail")
     fs.mkdirs(tail)
-    (fs.makeQualified(tail).toString, getTable(name).lineage.schema)
+    (fs.makeQualified(tail).toString, schema)
   }
 
   // ------------------------------------------------- materialized views
@@ -3408,8 +3380,8 @@ final class Catalog(spark: SparkSession, warehouse: String,
    * compaction/vacuum bake it into the base as they rewrite). At 100 TB
    * this is the only viable evolve: rewriting files to add a column is a
    * full-warehouse write. `tpe` is a Spark SQL type name restricted to
-   * identifier characters (bigint/int/double/string/boolean/...), which
-   * the flat metadata encoding round-trips safely.
+   * identifier characters (bigint/int/double/string/boolean/...), like
+   * every other string the metadata carries.
    */
   def addColumn(name: String, column: String, tpe: String): LineageTable =
     lock(name).synchronized { withCommitMarker(name) {
@@ -3657,9 +3629,8 @@ final class Catalog(spark: SparkSession, warehouse: String,
    * The expression is validated (parse + resolve against the live
    * schema) BEFORE the meta write: a persisted unresolvable expression
    * would otherwise fail every later commit. Stored hex-encoded in the
-   * flat metadata (arbitrary expression text through the identifier-
-   * restricted JSON). The reference's integrity model is the implicit
-   * key-column contract (lstore/query.py:61 `key = columns[0]`); CHECK
+   * metadata ([[Catalog.hex]]). The reference's integrity model is the
+   * implicit key-column contract (lstore/query.py:61 `key = columns[0]`); CHECK
    * generalizes it — note the lineage invariant "≤ 1 live row per key"
    * needs no constraint at all, it holds by snapshot construction.
    */
@@ -3764,223 +3735,10 @@ final class Catalog(spark: SparkSession, warehouse: String,
 
   // ------------------------------------------------------------- metadata
 
-  private case class Meta(key: String, columns: Seq[String],
-                          index: Option[String], opSeq: Long,
-                          /** True when the base itself holds multi-version
-                            * history (a keep>1 vacuum) — the empty-tail
-                            * fast path and footer inventory must not fire. */
-                          multiVer: Boolean = false,
-                          /** op_seq of the last completed re-stamp swap:
-                            * every legitimate tail row stamps ABOVE this,
-                            * so a tail file wholly at-or-below it is a
-                            * crash leftover ([[healLeftoverTail]]). */
-                          tailFloor: Long = 0,
-                          /** Columns added by [[addColumn]] after creation,
-                            * with their declared types (parallel seqs,
-                            * PHYSICAL names): files written before the add
-                            * lack the column and read back as null
-                            * ([[getTable]] fill). */
-                          addedCols: Seq[String] = Nil,
-                          addedTypes: Seq[String] = Nil,
-                          /** COLUMN MAPPING ([[renameColumn]], the Delta
-                            * column-mapping shape): logical name →
-                            * physical file-column name, parallel seqs;
-                            * only renamed columns appear. Writes map
-                            * logical→physical ([[lineageWriter]]), reads
-                            * map back ([[assembleTable]]) — no data file
-                            * is ever rewritten for a rename. */
-                          renLogical: Seq[String] = Nil,
-                          renPhysical: Seq[String] = Nil,
-                          /** Physical columns retired by [[dropColumn]]:
-                            * old files still carry them (metadata-only
-                            * drop); a later re-ADD of the same logical
-                            * name maps to a FRESH physical name so the
-                            * dropped column's values can never
-                            * resurrect. */
-                          droppedPhys: Seq[String] = Nil,
-                          /** Columns with a maintained (column, key)
-                            * projection side table ([[createProjection]]):
-                            * commit appends deltas, compaction rebuilds. */
-                          projCols: Seq[String] = Nil,
-                          /** Commit log for timestamp time travel
-                            * ([[commitAt]]/[[asOfTimestamp]]): parallel
-                            * seqs of (resulting op_seq, caller timestamp),
-                            * append-only and time-ordered; cleared by any
-                            * physical re-stamp. */
-                          commitVers: Seq[Long] = Nil,
-                          commitTs: Seq[Long] = Nil,
-                          /** Last applied streaming batch PER WRITER
-                            * (parallel seqs: writer id → last batch id),
-                            * recorded atomically with the commit's meta
-                            * write — the Delta txn-appId/version
-                            * idempotence pattern ([[tryCommit]] skips a
-                            * replayed batch). A MAP, not a single slot:
-                            * with two interleaved writers on one table a
-                            * single slot lets writer B's commit overwrite
-                            * A's record, so A's retry of an already-
-                            * applied batch would double-apply. Bounded at
-                            * [[Catalog.maxStreamWriters]] entries (oldest
-                            * dropped — a dropped writer's replay window
-                            * has long since closed). */
-                          streamApps: Seq[String] = Nil,
-                          streamBatches: Seq[Long] = Nil,
-                          /** Retained pre-rewrite snapshot ids, oldest
-                            * first (id = the pre-rewrite op_seq; data
-                            * under `_snap/<id>/`, the pre-rewrite meta —
-                            * whose commit log still addresses the old
-                            * stamps — under `_snap/<id>.json`). */
-                          /** ANALYZE results ([[analyzeTable]]): per-
-                            * column NDV estimates (parallel seqs) + live
-                            * row count, the statistics [[graft.plans
-                            * .NdvBroadcastRule]] plans joins from. */
-                          statsCols: Seq[String] = Nil,
-                          statsNdv: Seq[Long] = Nil,
-                          statsRows: Long = -1L,
-                          snaps: Seq[Long] = Nil,
-                          /** True once ANY snapshot has been dropped
-                            * (retention expiry, vacuum/purge/merge):
-                            * a timestamp older than every retained log
-                            * then ERRORS instead of clamping — the state
-                            * it names may have lived in a dropped
-                            * snapshot, and a silent clamp would serve
-                            * the wrong data as if it were right. */
-                          snapsDropped: Boolean = false,
-                          /** CHECK constraints ([[addConstraint]]):
-                            * names (checked identifiers) parallel to
-                            * their SQL expressions, hex-encoded so
-                            * arbitrary expression text round-trips
-                            * through the identifier-restricted flat
-                            * JSON. Enforced at O(delta) per commit
-                            * ([[tryCommit]]/[[commitMulti]]); the full-
-                            * table scan happens ONCE, at add time. */
-                          conNames: Seq[String] = Nil,
-                          conExprs: Seq[String] = Nil,
-                          /** Materialized-view definition
-                            * ([[createMaterializedView]]): the source
-                            * table + summed columns + group columns
-                            * (a single-column group IS this table's key;
-                            * composite groups key on the synthesized
-                            * `_gkey`), and the source op_seq this view is
-                            * current AT — advanced atomically with each
-                            * refresh commit (same meta write), so a
-                            * crashed refresh can never double-apply its
-                            * adjustments. */
-                          mvSrc: Option[String] = None,
-                          mvSums: Seq[String] = Nil,
-                          mvGroups: Seq[String] = Nil,
-                          /** min/max-maintained measure columns (r10):
-                            * maintained incrementally while the removed
-                            * side's extremum is not the group's; a
-                            * deletion OF the extremum re-scans that
-                            * group only ([[refreshMaterializedView]]). */
-                          mvMins: Seq[String] = Nil,
-                          mvMaxs: Seq[String] = Nil,
-                          /** Multi-column Z-order layout (r10,
-                            * [[zorderTable]]): when ≥2 columns, the
-                            * physical order of every base rewrite is the
-                            * morton code over these columns instead of
-                            * the single index/key sort — one layout
-                            * serving range probes on all of them.
-                            * Mutually exclusive with `index`. */
-                          zorderCols: Seq[String] = Nil,
-                          mvSeq: Long = -1L,
-                          /** The view op_seq whose adjustment rows the
-                            * LAST refresh appended (−1 before any
-                            * refresh): meta-before-rows means a crash
-                            * inside a refresh can advance `mv_seq` with
-                            * the rows absent — the next refresh probes
-                            * for rows at this stamp and falls back to a
-                            * full recompute when they never landed,
-                            * instead of silently serving a diverged
-                            * view forever (ADVICE r8). */
-                          mvLastVer: Long = -1L,
-                          /** Incremented by EVERY physical re-stamp
-                            * (fold/vacuum/purge/saveCompacted). op_seq
-                            * alone cannot reveal a rewrite — saveCompacted
-                            * resets the clock to 0, so a later commit can
-                            * land on a previously-seen op_seq with
-                            * entirely different history behind it. An
-                            * incremental reader ([[refreshMaterializedView]])
-                            * compares the epoch it recorded and falls back
-                            * to a full recompute on mismatch. */
-                          epoch: Long = 0L,
-                          /** Source epoch the view's `mv_seq` belongs to. */
-                          mvEpoch: Long = -1L,
-                          /** Columns whose data files carry PARQUET BLOOM
-                            * FILTERS ([[createBloomFilter]]): every
-                            * lineage write (tail append, compaction,
-                            * re-stamp) emits them, so point probes
-                            * row-group-skip on a column whose sort order
-                            * is spent elsewhere. */
-                          bloomCols: Seq[String] = Nil,
-                          /** JOIN materialized view
-                            * ([[createJoinMaterializedView]]): the dim
-                            * table inner-joined to the source on
-                            * src.`mvFk` = dim.key before grouping. The
-                            * dim's (op_seq, epoch) at the view's last
-                            * (re)build: the incremental path requires the
-                            * dim UNCHANGED since (star-schema IVM — fact
-                            * deltas maintain, dim changes force a full
-                            * recompute, the classical self-maintainability
-                            * boundary). */
-                          mvDim: Option[String] = None,
-                          mvFk: Option[String] = None,
-                          mvDimSeq: Long = -1L,
-                          mvDimEpoch: Long = -1L,
-                          /** PARTITION COLUMNS (r11; multi-column
-                            * r12 — the lakehouse PARTITIONED BY): the
-                            * base lays out as `base/_pd=p<value>/`
-                            * directories (nested `_pd0=/_pd1=/...` for
-                            * multi-column) (the `p`
-                            * prefix forces string partition-value
-                            * inference, so types and leading zeros
-                            * survive the round-trip; the real column
-                            * stays IN the files with its exact type) and
-                            * a partition-scoped read prunes whole
-                            * directories below the snapshot window
-                            * ([[partitionSnapshot]]). The TAIL stays
-                            * flat — the column is a pushed data filter
-                            * there — so crash-heal and footer machinery
-                            * are untouched and the pruning win lands
-                            * where the bytes are (the compacted base).
-                            * Sound because a key's partition value is
-                            * IMMUTABLE ([[LineageTable]] write guards). */
-                          partCols: Seq[String] = Nil,
-                          partTypes: Seq[String] = Nil,
-                          /** Partition TRANSFORM per column (r12):
-                            * "id" = identity (the directory value is the
-                            * column's string form), "days" = epoch-day
-                            * bucket of a nanos-since-epoch BIGINT column
-                            * (the Iceberg days(ts) shape — one directory
-                            * per day). Empty = all identity (pre-r12
-                            * metadata). */
-                          partFuncs: Seq[String] = Nil,
-                          /** TYPE WIDENING ([[widenColumn]], the Delta
-                            * type-widening shape, r11): PHYSICAL column
-                            * name → widened type, parallel seqs.
-                            * Metadata-only — old files keep their narrow
-                            * physical type and the reader upcasts
-                            * (explicit-schema parquet reads promote
-                            * int32→bigint / float→double per file);
-                            * writes use the widened type from the first
-                            * post-widen op on. */
-                          widenCols: Seq[String] = Nil,
-                          widenTypes: Seq[String] = Nil) {
-    /** First partition column — the single-column convenience the r11
-      * surface exposed; multi-column callers read [[partCols]]. */
-    def partCol: Option[String] = partCols.headOption
-    def partType: String = partTypes.headOption.getOrElse("")
-    /** Transform per partition column, defaulted to identity for
-      * metadata written before r12 carried part_funcs. */
-    def funcs: Seq[String] =
-      if (partFuncs.size == partCols.size) partFuncs
-      else partCols.map(_ => "id")
-  }
-
-  // Metadata names are restricted to identifier characters at write time,
-  // so the flat JSON below round-trips through the regex reader with no
-  // escaping ambiguity (a quote/backslash/']' in a name would otherwise
-  // silently corrupt it).
+  // Names are restricted to identifier characters because they become
+  // path components (table, projection and staging directories): a '/'
+  // or '..' in one could escape the warehouse root. Checked on every
+  // path-forming route, and at [[writeMeta]] for every metadata string.
   private val ident = "^[A-Za-z0-9_]+$".r
 
   private def checked(s: String): String = {
@@ -3998,6 +3756,13 @@ final class Catalog(spark: SparkSession, warehouse: String,
    * the complete stage. Every state is readable.
    */
   private def writeMeta(name: String, m: Meta): Unit = {
+    // every string the metadata carries, names and types alike
+    m.productIterator.foreach {
+      case s: String => checked(s)
+      case xs: IterableOnce[_] =>
+        xs.iterator.foreach { case s: String => checked(s); case _ => () }
+      case _ => ()
+    }
     // Adopt a crash-orphaned stage BEFORE overwriting it: while the main
     // file is absent, readers serve directly off the stage ([[readMeta]]
     // never renames — promotion on the read path could steal the rename
@@ -4007,77 +3772,9 @@ final class Catalog(spark: SparkSession, warehouse: String,
     // races only with readers — who read main first and fall back.
     if (!pathExists(metaPath(name)) && pathExists(metaTmpPath(name)))
       move(metaTmpPath(name), metaPath(name))
-    writeString(metaTmpPath(name), metaJson(m))
+    writeString(metaTmpPath(name), TableMeta.encode(m))
     fs.delete(metaPath(name), false)
     move(metaTmpPath(name), metaPath(name))
-  }
-
-  /** The flat metadata JSON — shared by [[writeMeta]] and the retained-
-    * snapshot manifests ([[restampSwap]] writes the PRE-rewrite meta to
-    * `_snap/<id>.json` verbatim, so a snapshot's commit log keeps
-    * addressing its own stamps). */
-  private def metaJson(m: Meta): String = {
-    val cols = m.columns.map(c => "\"" + checked(c) + "\"").mkString(", ")
-    val idx = m.index.map(i => "\"" + checked(i) + "\"").getOrElse("null")
-    val ac = m.addedCols.map(c => "\"" + checked(c) + "\"").mkString(", ")
-    val at = m.addedTypes.map(t => "\"" + checked(t) + "\"").mkString(", ")
-    val pc = m.projCols.map(c => "\"" + checked(c) + "\"").mkString(", ")
-    val cv = m.commitVers.mkString(", ")
-    val ct = m.commitTs.mkString(", ")
-    // stream ids originate from UUID/checkpoint names — same identifier
-    // restriction as column names keeps the flat JSON unambiguous
-    val sa = m.streamApps.map(a => "\"" + checked(a) + "\"").mkString(", ")
-    val sb = m.streamBatches.mkString(", ")
-    s"""{"key": "${checked(m.key)}", "columns": [$cols], """ +
-      s""""index": $idx, "op_seq": ${m.opSeq}, "multi_ver": ${m.multiVer}, """ +
-      s""""tail_floor": ${m.tailFloor}, """ +
-      s""""added_cols": [$ac], "added_types": [$at], "proj_cols": [$pc], """ +
-      s""""ren_logical": [${m.renLogical.map(c => "\"" + checked(c) + "\"")
-        .mkString(", ")}], """ +
-      s""""ren_physical": [${m.renPhysical.map(c => "\"" + checked(c) + "\"")
-        .mkString(", ")}], """ +
-      s""""dropped_phys": [${m.droppedPhys.map(c => "\"" + checked(c) + "\"")
-        .mkString(", ")}], """ +
-      s""""commit_vers": [$cv], "commit_ts": [$ct], """ +
-      s""""stream_apps": [$sa], "stream_batches": [$sb], """ +
-      s""""stats_cols": [${m.statsCols.map(c => "\"" + checked(c) + "\"")
-        .mkString(", ")}], """ +
-      s""""stats_ndv": [${m.statsNdv.mkString(", ")}], """ +
-      s""""stats_rows": ${m.statsRows}, """ +
-      s""""snaps": [${m.snaps.mkString(", ")}], """ +
-      s""""snaps_dropped": ${m.snapsDropped}, """ +
-      s""""con_names": [${m.conNames.map(c => "\"" + checked(c) + "\"")
-        .mkString(", ")}], """ +
-      s""""con_exprs": [${m.conExprs.map(e => "\"" + checked(e) + "\"")
-        .mkString(", ")}], """ +
-      s""""mv_src": ${m.mvSrc.map(v => "\"" + checked(v) + "\"").getOrElse("null")}, """ +
-      s""""mv_sums": [${m.mvSums.map(v => "\"" + checked(v) + "\"")
-        .mkString(", ")}], """ +
-      s""""mv_mins": [${m.mvMins.map(v => "\"" + checked(v) + "\"")
-        .mkString(", ")}], """ +
-      s""""mv_maxs": [${m.mvMaxs.map(v => "\"" + checked(v) + "\"")
-        .mkString(", ")}], """ +
-      s""""zorder_cols": [${m.zorderCols.map(v => "\"" + checked(v) + "\"")
-        .mkString(", ")}], """ +
-      s""""mv_groups": [${m.mvGroups.map(v => "\"" + checked(v) + "\"")
-        .mkString(", ")}], """ +
-      s""""mv_seq": ${m.mvSeq}, "mv_last_ver": ${m.mvLastVer}, """ +
-      s""""epoch": ${m.epoch}, "mv_epoch": ${m.mvEpoch}, """ +
-      s""""bloom_cols": [${m.bloomCols.map(c => "\"" + checked(c) + "\"")
-        .mkString(", ")}], """ +
-      s""""mv_dim": ${m.mvDim.map(v => "\"" + checked(v) + "\"").getOrElse("null")}, """ +
-      s""""mv_fk": ${m.mvFk.map(v => "\"" + checked(v) + "\"").getOrElse("null")}, """ +
-      s""""mv_dim_seq": ${m.mvDimSeq}, "mv_dim_epoch": ${m.mvDimEpoch}, """ +
-      s""""part_cols": [${m.partCols.map(v => "\"" + checked(v) + "\"")
-        .mkString(", ")}], """ +
-      s""""part_types": [${m.partTypes.map(v => "\"" + checked(v) + "\"")
-        .mkString(", ")}], """ +
-      s""""part_funcs": [${m.partFuncs.map(v => "\"" + checked(v) + "\"")
-        .mkString(", ")}], """ +
-      s""""widen_cols": [${m.widenCols.map(c => "\"" + checked(c) + "\"")
-        .mkString(", ")}], """ +
-      s""""widen_types": [${m.widenTypes.map(t => "\"" + checked(t) + "\"")
-        .mkString(", ")}]}"""
   }
 
   private def readMeta(name: String): Meta = {
@@ -4099,103 +3796,7 @@ final class Catalog(spark: SparkSession, warehouse: String,
       .orElse(tryRead(metaPath(name)))
       .getOrElse(throw new IllegalArgumentException(
         s"requirement failed: no such table: $name"))
-    parseMeta(json)
-  }
-
-  /** Parse the flat metadata JSON ([[metaJson]]'s inverse) — shared by
-    * [[readMeta]] and the retained-snapshot manifest reader. */
-  private def parseMeta(json: String): Meta = {
-    // metadata is written by writeMeta above — a flat object of checked
-    // identifiers and an int; regexes are unambiguous here.
-    val key = "\"key\"\\s*:\\s*\"([^\"]+)\"".r
-      .findFirstMatchIn(json).get.group(1)
-    val cols = "\"columns\"\\s*:\\s*\\[([^\\]]*)\\]".r
-      .findFirstMatchIn(json).get.group(1)
-      .split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).toSeq
-    val idx = "\"index\"\\s*:\\s*\"([^\"]+)\"".r
-      .findFirstMatchIn(json).map(_.group(1))
-    val seq = "\"op_seq\"\\s*:\\s*(\\d+)".r
-      .findFirstMatchIn(json).map(_.group(1).toLong).getOrElse(0L)
-    // absent in metas written before the field existed → false / 0
-    val mv = "\"multi_ver\"\\s*:\\s*(true|false)".r
-      .findFirstMatchIn(json).exists(_.group(1) == "true")
-    val floor = "\"tail_floor\"\\s*:\\s*(\\d+)".r
-      .findFirstMatchIn(json).map(_.group(1).toLong).getOrElse(0L)
-    def strList(field: String): Seq[String] =
-      (s""""$field"\\s*:\\s*\\[([^\\]]*)\\]""").r
-        .findFirstMatchIn(json).map(_.group(1)).filter(_.trim.nonEmpty)
-        .map(_.split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).toSeq)
-        .getOrElse(Nil)
-    def numList(field: String): Seq[Long] =
-      (s""""$field"\\s*:\\s*\\[([^\\]]*)\\]""").r
-        .findFirstMatchIn(json).map(_.group(1)).filter(_.trim.nonEmpty)
-        .map(_.split(",").map(_.trim.toLong).toSeq)
-        .getOrElse(Nil)
-    val dropped = "\"snaps_dropped\"\\s*:\\s*(true|false)".r
-      .findFirstMatchIn(json).exists(_.group(1) == "true")
-    val sRows = "\"stats_rows\"\\s*:\\s*(-?\\d+)".r
-      .findFirstMatchIn(json).map(_.group(1).toLong).getOrElse(-1L)
-    val mvSrc = "\"mv_src\"\\s*:\\s*\"([^\"]+)\"".r
-      .findFirstMatchIn(json).map(_.group(1))
-    val mvSeq = "\"mv_seq\"\\s*:\\s*(-?\\d+)".r
-      .findFirstMatchIn(json).map(_.group(1).toLong).getOrElse(-1L)
-    val mvLastVer = "\"mv_last_ver\"\\s*:\\s*(-?\\d+)".r
-      .findFirstMatchIn(json).map(_.group(1).toLong).getOrElse(-1L)
-    val epoch = "\"epoch\"\\s*:\\s*(-?\\d+)".r
-      .findFirstMatchIn(json).map(_.group(1).toLong).getOrElse(0L)
-    val mvEpoch = "\"mv_epoch\"\\s*:\\s*(-?\\d+)".r
-      .findFirstMatchIn(json).map(_.group(1).toLong).getOrElse(-1L)
-    Meta(key, cols, idx, seq, mv, floor,
-      strList("added_cols"), strList("added_types"),
-      strList("ren_logical"), strList("ren_physical"),
-      strList("dropped_phys"),
-      strList("proj_cols"),
-      numList("commit_vers"), numList("commit_ts"),
-      strList("stream_apps"), numList("stream_batches"),
-      strList("stats_cols"), numList("stats_ndv"), sRows,
-      numList("snaps"), dropped,
-      strList("con_names"), strList("con_exprs"),
-      // legacy fallback: metas persisted before the multi-measure format
-      // carried a scalar "mv_sum" — without this, an old view reads back
-      // with mvSums=Nil and its next refresh silently rewrites the view
-      // WITHOUT its measure column (ADVICE r9)
-      mvSrc,
-      {
-        val sums = strList("mv_sums")
-        if (sums.nonEmpty) sums
-        else "\"mv_sum\"\\s*:\\s*\"([^\"]+)\"".r
-          .findFirstMatchIn(json).map(_.group(1)).toSeq
-      },
-      strList("mv_groups"),
-      strList("mv_mins"), strList("mv_maxs"),
-      strList("zorder_cols"),
-      mvSeq, mvLastVer,
-      epoch, mvEpoch,
-      strList("bloom_cols"),
-      "\"mv_dim\"\\s*:\\s*\"([^\"]+)\"".r
-        .findFirstMatchIn(json).map(_.group(1)),
-      "\"mv_fk\"\\s*:\\s*\"([^\"]+)\"".r
-        .findFirstMatchIn(json).map(_.group(1)),
-      "\"mv_dim_seq\"\\s*:\\s*(-?\\d+)".r
-        .findFirstMatchIn(json).map(_.group(1).toLong).getOrElse(-1L),
-      "\"mv_dim_epoch\"\\s*:\\s*(-?\\d+)".r
-        .findFirstMatchIn(json).map(_.group(1).toLong).getOrElse(-1L),
-      {
-        // r12 writes part_cols/part_types arrays; a pre-r12 table's meta
-        // carries the singular part_col/part_type — honor both
-        val pcs = strList("part_cols")
-        if (pcs.nonEmpty) pcs
-        else "\"part_col\"\\s*:\\s*\"([^\"]+)\"".r
-          .findFirstMatchIn(json).map(_.group(1)).toSeq
-      },
-      {
-        val pts = strList("part_types")
-        if (pts.nonEmpty) pts
-        else "\"part_type\"\\s*:\\s*\"([^\"]+)\"".r
-          .findFirstMatchIn(json).map(_.group(1)).toSeq
-      },
-      strList("part_funcs"),
-      strList("widen_cols"), strList("widen_types"))
+    TableMeta.decodeMeta(json)
   }
 
   // Crash recovery on open — the reference's Database.open contract. At
@@ -4290,28 +3891,22 @@ object Catalog {
             .parquet(new Path(new Path(c.txnRoot, gid), n).toString))
           after.opSeq
         }
-        (c, names, expected, next)
+        (c, TxnRecord(Some(coord.rootUri), names, expected, next))
       }
       coord.crashPoint("across-staged")
       // durable intentions: each participant records its share + the
       // coordinator pointer its recovery will consult
-      staged.foreach { case (c, names, expected, next) =>
-        c.writeString(c.txnPartPath(gid),
-          s"""{"coordinator": "${coord.rootUri}", """ +
-            s""""tables": [${names.map(n => "\"" + n + "\"")
-              .mkString(", ")}], """ +
-            s""""expected": [${expected.mkString(", ")}], """ +
-            s""""next": [${next.mkString(", ")}]}""")
+      staged.foreach { case (c, rec) =>
+        c.writeString(c.txnPartPath(gid), TableMeta.encode(rec))
       }
       coord.crashPoint("across-intent")
       // THE cross-catalog commit point: one atomic file create
-      coord.writeString(coord.txnRecordPath(gid),
-        s"""{"participants": [${sorted.map(p =>
-          "\"" + p._1.rootUri + "\"").mkString(", ")}]}""")
+      coord.writeString(coord.txnRecordPath(gid), TableMeta.encode(
+        TxnRecord(participants = sorted.map(_._1.rootUri))))
       coord.crashPoint("across-committed")
       // fan-out roll-forward; decision retires after the last part
-      staged.foreach { case (c, names, expected, next) =>
-        c.applyTxnPart(gid, names, expected, next)
+      staged.foreach { case (c, rec) =>
+        c.applyTxn(gid, rec, c.txnPartPath(gid))
         c.crashPoint("across-rolled")
       }
       coord.fs.delete(coord.txnRecordPath(gid), false)
@@ -4328,9 +3923,9 @@ object Catalog {
     * concern and solves it with age-based expiry). */
   val maxStreamWriters = 64
 
-  /** Hex round-trip for CHECK-constraint expressions: arbitrary SQL text
-    * stored through the identifier-restricted flat metadata JSON
-    * ([0-9a-f] passes the `checked` regex; no escaping ambiguity). */
+  /** Hex round-trip for CHECK-constraint expressions: `con_exprs` has
+    * always been stored hex-encoded, and stays so for on-disk
+    * compatibility ([0-9a-f] also passes the metadata identifier check). */
   private[core] def hex(s: String): String =
     s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
       .map("%02x".format(_)).mkString

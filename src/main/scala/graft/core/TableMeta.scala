@@ -1,0 +1,290 @@
+package graft.core
+
+import com.fasterxml.jackson.annotation.JsonInclude
+import com.fasterxml.jackson.core.JsonGenerator
+import com.fasterxml.jackson.core.util.MinimalPrettyPrinter
+import com.fasterxml.jackson.databind.{DeserializationFeature, PropertyNamingStrategies}
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+
+/**
+ * Table metadata: the content of `<table>/_graft.json` and of each
+ * retained snapshot manifest `_snap/<id>.json`. On disk it is one flat
+ * JSON object of the fields below, in this order, under their snake_case
+ * names ([[TableMeta]]); a field missing from the file takes its default.
+ */
+private[core] case class Meta(
+    key: String,
+    columns: Seq[String],
+    index: Option[String],
+    opSeq: Long,
+    /** True when the base itself holds multi-version
+      * history (a keep>1 vacuum) — the empty-tail
+      * fast path and footer inventory must not fire. */
+    multiVer: Boolean = false,
+    /** op_seq of the last completed re-stamp swap:
+      * every legitimate tail row stamps ABOVE this,
+      * so a tail file wholly at-or-below it is a
+      * crash leftover ([[healLeftoverTail]]). */
+    tailFloor: Long = 0,
+    /** Columns added by [[addColumn]] after creation,
+      * with their declared types (parallel seqs,
+      * PHYSICAL names): files written before the add
+      * lack the column and read back as null
+      * ([[getTable]] fill). */
+    addedCols: Seq[String] = Nil,
+    addedTypes: Seq[String] = Nil,
+    /** Columns with a maintained (column, key)
+      * projection side table ([[createProjection]]):
+      * commit appends deltas, compaction rebuilds. */
+    projCols: Seq[String] = Nil,
+    /** COLUMN MAPPING ([[renameColumn]], the Delta
+      * column-mapping shape): logical name →
+      * physical file-column name, parallel seqs;
+      * only renamed columns appear. Writes map
+      * logical→physical ([[lineageWriter]]), reads
+      * map back ([[assembleTable]]) — no data file
+      * is ever rewritten for a rename. */
+    renLogical: Seq[String] = Nil,
+    renPhysical: Seq[String] = Nil,
+    /** Physical columns retired by [[dropColumn]]:
+      * old files still carry them (metadata-only
+      * drop); a later re-ADD of the same logical
+      * name maps to a FRESH physical name so the
+      * dropped column's values can never
+      * resurrect. */
+    droppedPhys: Seq[String] = Nil,
+    /** Commit log for timestamp time travel
+      * ([[commitAt]]/[[asOfTimestamp]]): parallel
+      * seqs of (resulting op_seq, caller timestamp),
+      * append-only and time-ordered; cleared by any
+      * physical re-stamp. */
+    commitVers: Seq[Long] = Nil,
+    commitTs: Seq[Long] = Nil,
+    /** Last applied streaming batch PER WRITER
+      * (parallel seqs: writer id → last batch id),
+      * recorded atomically with the commit's meta
+      * write — the Delta txn-appId/version
+      * idempotence pattern ([[tryCommit]] skips a
+      * replayed batch). A MAP, not a single slot:
+      * with two interleaved writers on one table a
+      * single slot lets writer B's commit overwrite
+      * A's record, so A's retry of an already-
+      * applied batch would double-apply. Bounded at
+      * [[Catalog.maxStreamWriters]] entries (oldest
+      * dropped — a dropped writer's replay window
+      * has long since closed). */
+    streamApps: Seq[String] = Nil,
+    streamBatches: Seq[Long] = Nil,
+    /** ANALYZE results ([[analyzeTable]]): per-
+      * column NDV estimates (parallel seqs) + live
+      * row count, the statistics [[graft.plans
+      * .NdvBroadcastRule]] plans joins from. */
+    statsCols: Seq[String] = Nil,
+    statsNdv: Seq[Long] = Nil,
+    statsRows: Long = -1L,
+    /** Retained pre-rewrite snapshot ids, oldest
+      * first (id = the pre-rewrite op_seq; data
+      * under `_snap/<id>/`, the pre-rewrite meta —
+      * whose commit log still addresses the old
+      * stamps — under `_snap/<id>.json`). */
+    snaps: Seq[Long] = Nil,
+    /** True once ANY snapshot has been dropped
+      * (retention expiry, vacuum/purge/merge):
+      * a timestamp older than every retained log
+      * then ERRORS instead of clamping — the state
+      * it names may have lived in a dropped
+      * snapshot, and a silent clamp would serve
+      * the wrong data as if it were right. */
+    snapsDropped: Boolean = false,
+    /** CHECK constraints ([[addConstraint]]):
+      * names (checked identifiers) parallel to
+      * their SQL expressions, hex-encoded
+      * ([[Catalog.hex]] — the form existing
+      * metadata files hold). Enforced at O(delta) per commit
+      * ([[tryCommit]]/[[commitMulti]]); the full-
+      * table scan happens ONCE, at add time. */
+    conNames: Seq[String] = Nil,
+    conExprs: Seq[String] = Nil,
+    /** Materialized-view definition
+      * ([[createMaterializedView]]): the source
+      * table + summed columns + group columns
+      * (a single-column group IS this table's key;
+      * composite groups key on the synthesized
+      * `_gkey`), and the source op_seq this view is
+      * current AT — advanced atomically with each
+      * refresh commit (same meta write), so a
+      * crashed refresh can never double-apply its
+      * adjustments. */
+    mvSrc: Option[String] = None,
+    mvSums: Seq[String] = Nil,
+    /** min/max-maintained measure columns (r10):
+      * maintained incrementally while the removed
+      * side's extremum is not the group's; a
+      * deletion OF the extremum re-scans that
+      * group only ([[refreshMaterializedView]]). */
+    mvMins: Seq[String] = Nil,
+    mvMaxs: Seq[String] = Nil,
+    /** Multi-column Z-order layout (r10,
+      * [[zorderTable]]): when ≥2 columns, the
+      * physical order of every base rewrite is the
+      * morton code over these columns instead of
+      * the single index/key sort — one layout
+      * serving range probes on all of them.
+      * Mutually exclusive with `index`. */
+    zorderCols: Seq[String] = Nil,
+    /** The view's group columns (see [[mvSrc]]). */
+    mvGroups: Seq[String] = Nil,
+    mvSeq: Long = -1L,
+    /** The view op_seq whose adjustment rows the
+      * LAST refresh appended (−1 before any
+      * refresh): meta-before-rows means a crash
+      * inside a refresh can advance `mv_seq` with
+      * the rows absent — the next refresh probes
+      * for rows at this stamp and falls back to a
+      * full recompute when they never landed,
+      * instead of silently serving a diverged
+      * view forever (ADVICE r8). */
+    mvLastVer: Long = -1L,
+    /** Incremented by EVERY physical re-stamp
+      * (fold/vacuum/purge/saveCompacted). op_seq
+      * alone cannot reveal a rewrite — saveCompacted
+      * resets the clock to 0, so a later commit can
+      * land on a previously-seen op_seq with
+      * entirely different history behind it. An
+      * incremental reader ([[refreshMaterializedView]])
+      * compares the epoch it recorded and falls back
+      * to a full recompute on mismatch. */
+    epoch: Long = 0L,
+    /** Source epoch the view's `mv_seq` belongs to. */
+    mvEpoch: Long = -1L,
+    /** Columns whose data files carry PARQUET BLOOM
+      * FILTERS ([[createBloomFilter]]): every
+      * lineage write (tail append, compaction,
+      * re-stamp) emits them, so point probes
+      * row-group-skip on a column whose sort order
+      * is spent elsewhere. */
+    bloomCols: Seq[String] = Nil,
+    /** JOIN materialized view
+      * ([[createJoinMaterializedView]]): the dim
+      * table inner-joined to the source on
+      * src.`mvFk` = dim.key before grouping. The
+      * dim's (op_seq, epoch) at the view's last
+      * (re)build: the incremental path requires the
+      * dim UNCHANGED since (star-schema IVM — fact
+      * deltas maintain, dim changes force a full
+      * recompute, the classical self-maintainability
+      * boundary). */
+    mvDim: Option[String] = None,
+    mvFk: Option[String] = None,
+    mvDimSeq: Long = -1L,
+    mvDimEpoch: Long = -1L,
+    /** PARTITION COLUMNS (r11; multi-column
+      * r12 — the lakehouse PARTITIONED BY): the
+      * base lays out as `base/_pd=p<value>/`
+      * directories (nested `_pd0=/_pd1=/...` for
+      * multi-column) (the `p`
+      * prefix forces string partition-value
+      * inference, so types and leading zeros
+      * survive the round-trip; the real column
+      * stays IN the files with its exact type) and
+      * a partition-scoped read prunes whole
+      * directories below the snapshot window
+      * ([[partitionSnapshot]]). The TAIL stays
+      * flat — the column is a pushed data filter
+      * there — so crash-heal and footer machinery
+      * are untouched and the pruning win lands
+      * where the bytes are (the compacted base).
+      * Sound because a key's partition value is
+      * IMMUTABLE ([[LineageTable]] write guards). */
+    partCols: Seq[String] = Nil,
+    partTypes: Seq[String] = Nil,
+    /** Partition TRANSFORM per column (r12):
+      * "id" = identity (the directory value is the
+      * column's string form), "days" = epoch-day
+      * bucket of a nanos-since-epoch BIGINT column
+      * (the Iceberg days(ts) shape — one directory
+      * per day). Empty = all identity (pre-r12
+      * metadata). */
+    partFuncs: Seq[String] = Nil,
+    /** TYPE WIDENING ([[widenColumn]], the Delta
+      * type-widening shape, r11): PHYSICAL column
+      * name → widened type, parallel seqs.
+      * Metadata-only — old files keep their narrow
+      * physical type and the reader upcasts
+      * (explicit-schema parquet reads promote
+      * int32→bigint / float→double per file);
+      * writes use the widened type from the first
+      * post-widen op on. */
+    widenCols: Seq[String] = Nil,
+    widenTypes: Seq[String] = Nil) {
+  /** First partition column — the single-column convenience the r11
+    * surface exposed; multi-column callers read [[partCols]]. */
+  def partCol: Option[String] = partCols.headOption
+  def partType: String = partTypes.headOption.getOrElse("")
+  /** Transform per partition column, defaulted to identity for
+    * metadata written before r12 carried part_funcs. */
+  def funcs: Seq[String] =
+    if (partFuncs.size == partCols.size) partFuncs
+    else partCols.map(_ => "id")
+}
+
+/**
+ * A cross-table transaction record under `<warehouse>/_txn/`. Empty
+ * fields are not written, which leaves three shapes: `<id>.json` from
+ * [[Catalog.commitMulti]] (tables with their `expected` → `next` op_seq,
+ * the commit point); `<gid>.part.json` from [[Catalog.commitAcross]] (one
+ * participant's share plus the `coordinator`'s root URI); and the
+ * coordinator's `<gid>.json` decision naming every participant's root.
+ */
+@JsonInclude(JsonInclude.Include.NON_EMPTY)
+private[core] case class TxnRecord(coordinator: Option[String] = None,
+                                   tables: Seq[String] = Nil,
+                                   expected: Seq[Long] = Nil,
+                                   next: Seq[Long] = Nil,
+                                   participants: Seq[String] = Nil)
+
+/** The one JSON codec for [[Meta]] and [[TxnRecord]]. It writes one line
+  * in the `{"field": value, "list": [a, b]}` spacing earlier releases
+  * wrote, and reads every earlier release's files through one path. */
+private[core] object TableMeta {
+  private val mapper = JsonMapper.builder().addModule(DefaultScalaModule)
+    .propertyNamingStrategy(PropertyNamingStrategies.SNAKE_CASE)
+    // Seq[Long] elements erase to Object: bind JSON integers as Long
+    .enable(DeserializationFeature.USE_LONG_FOR_INTS)
+    .disable(DeserializationFeature.FAIL_ON_UNKNOWN_PROPERTIES)
+    .build()
+  private val writer = mapper.writer(new MinimalPrettyPrinter {
+    override def writeObjectFieldValueSeparator(g: JsonGenerator): Unit =
+      g.writeRaw(": ")
+    override def writeObjectEntrySeparator(g: JsonGenerator): Unit =
+      g.writeRaw(", ")
+    override def writeArrayValueSeparator(g: JsonGenerator): Unit =
+      g.writeRaw(", ")
+  })
+
+  def encode(m: Meta): String = writer.writeValueAsString(m)
+  def encode(r: TxnRecord): String = writer.writeValueAsString(r)
+
+  def decodeMeta(json: String): Meta = {
+    val o = mapper.readTree(json) match {
+      case o: ObjectNode => o
+      case _ => throw new IllegalArgumentException(s"not table metadata: $json")
+    }
+    // legacy scalars, read as one-element lists: "mv_sum" from before
+    // multi-measure views (ADVICE r9: dropping it would make the next
+    // refresh rewrite the view WITHOUT its measure), and a pre-r12
+    // partitioned table's "part_col"/"part_type"
+    for ((list, scalar) <- Seq("mv_sums" -> "mv_sum",
+        "part_cols" -> "part_col", "part_types" -> "part_type"))
+      if (o.path(list).isEmpty && o.path(scalar).isTextual)
+        o.putArray(list).add(o.get(scalar))
+    val m = mapper.treeToValue(o, classOf[Meta])
+    require(m.key != null, s"table metadata lacks a key: $json")
+    m
+  }
+
+  def decodeTxn(json: String): TxnRecord =
+    mapper.readValue(json, classOf[TxnRecord])
+}

@@ -1561,10 +1561,9 @@ object PipelineQueries {
       // aggregate, on ≤ D(D+1)/2 rows instead of per product: pos(i,j)
       // = i·D − i(i−1)/2 + (j−i), exact integer arithmetic, joined from
       // a broadcast |pairs|-row mapping built off the slim dim table.
-      // Same sums, same groups, same output rows. Assumes a uniform
-      // embedding width (position → (i,j) is per-corpus): the dims
-      // table this derives D from would itself be ill-defined for a
-      // ragged corpus — a covariance matrix needs one D.
+      // Same sums, same groups, same output rows. Requires one embedding
+      // width (position → (i,j) is per-corpus): the per-dim pass carries
+      // each vector's width, and `dd` raises on a ragged corpus.
       val prods = e.select(posexplode(expr(
           "flatten(transform(qv, (x, i) -> " +
             "transform(slice(qv, i + 1, size(qv) - i), (y, k) -> x * y)))"))
@@ -1572,11 +1571,17 @@ object PipelineQueries {
         .select(col("pos").cast("long").as("pos"), col("p"))
       val byPos = prods.groupBy(col("pos"))
         .agg(sum(col("p").cast("decimal(38,0)")).as("spq"))
-      val sums = e.select(posexplode(col("qv")).as(Seq("pos", "q")))
-        .select(col("pos").cast("long").as("dim"), col("q"))
+      val sums = e.select(posexplode(col("qv")).as(Seq("pos", "q")),
+          size(col("qv")).as("w"))
+        .select(col("pos").cast("long").as("dim"), col("q"), col("w"))
         .groupBy(col("dim"))
-        .agg(sum(col("q")).as("sq"), count(lit(1)).as("n"))
-      val dcount = sums.agg(count(lit(1)).as("dd"))
+        .agg(sum(col("q")).as("sq"), count(lit(1)).as("n"),
+          min(col("w")).as("wmin"), max(col("w")).as("wmax"))
+      val dcount = sums.agg(count(lit(1)).as("dd"),
+          min(col("wmin")).as("wmin"), max(col("wmax")).as("wmax"))
+        .select(when(col("wmin") <=> col("wmax"), col("dd")).otherwise(
+          raise_error(format_string("emb_cov: ragged embeddings " +
+            "(widths %d to %d)", col("wmin"), col("wmax")))).as("dd"))
       val mapping = sums.select(col("dim").as("i"))
         .crossJoin(sums.select(col("dim").as("j")))
         .where(col("j") >= col("i"))

@@ -279,6 +279,27 @@ class MultiTxnSpec extends SparkSpec {
     }
   }
 
+  test("crash AFTER the decision with commas in both warehouse paths: both roll forward") {
+    // a decision record's participant URIs are JSON strings: a comma
+    // inside one must not split it into bogus participants (the
+    // coordinator would then see nothing pending, retire the decision,
+    // and leave the other catalog to presume abort)
+    val whA = Files.createTempDirectory("graft_gx_a,1_").toString
+    val whB = Files.createTempDirectory("graft_gx_b,1_").toString
+    val ca = new Catalog(spark, whA)
+    val cb = new Catalog(spark, whB)
+    ca.createTable("ta", "k", Seq((1L, 10L), (2L, 20L)).toDF("k", "v"))
+    cb.createTable("tb", "k", Seq((1L, "x"), (2L, "y")).toDF("k", "s"))
+    val coord = Seq(ca, cb).minBy(_.rootUri)
+    coord.crashPoints = Set("across-committed")
+    intercept[IllegalStateException] {
+      Catalog.commitAcross(acrossParts(ca, cb))
+    }
+    coord.crashPoints = Set.empty
+    assert(stateA(new Catalog(spark, whA)) === afterA)
+    assert(stateB(new Catalog(spark, whB)) === afterB)
+  }
+
   test("the coordinator's recovery alone completes every participant") {
     val (ca, cb, whA, whB) = freshPair()
     val sorted = Seq(ca, cb).sortBy(_.rootUri)

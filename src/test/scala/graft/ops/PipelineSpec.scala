@@ -194,4 +194,22 @@ class PipelineSpec extends SparkSpec {
       .as[(Long, String, Long, Double)].collect().toSet
     assert(streamed == batch)
   }
+
+  test("emb_cov rejects a ragged corpus instead of mis-pairing positions") {
+    import spark.implicits._
+    def corpus(vecs: Seq[Seq[Float]]): String = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_embcov_").toString
+      vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+        .toDF("vec_id", "embedding").write.parquet(s"$dir/embeddings.parquet")
+      dir
+    }
+    val uniform = corpus(Seq(Seq(1f, 2f), Seq(2f, 1f), Seq(3f, 5f)))
+    assert(PipelineQueries.queries("emb_cov")(spark, uniform).count() === 3L)
+    val ragged = corpus(Seq(Seq(1f, 2f, 3f), Seq(2f, 1f), Seq(3f, 5f, 4f)))
+    val e = intercept[Exception](
+      PipelineQueries.queries("emb_cov")(spark, ragged).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(String.valueOf(_))
+    assert(msgs.exists(_.contains("ragged embeddings (widths 2 to 3)")), e)
+  }
 }

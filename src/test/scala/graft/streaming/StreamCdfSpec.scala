@@ -97,4 +97,17 @@ class StreamCdfSpec extends SparkSpec {
     val after = StreamOps.drainAppend(spark, StreamOps.changeFeed(spark, cat, t))
     assert(after.select("k").as[Long].collect().toSeq === Seq(7L))
   }
+
+  test("feed attached right after a fold streams zero rows, then the next commit") {
+    val (cat, t) = freshTable()
+    cat.commit(t, Txn.empty.update(col("k") === 1L, Map("s" -> col("s"))))
+    // the fold empties the tail and raises tail_floor above 0
+    cat.foldTail(t)
+    val empty = StreamOps.drainAppend(spark, StreamOps.changeFeed(spark, cat, t))
+    assert(empty.count() === 0L)
+    cat.commit(t, Txn.empty.insert(Seq((8L, 80L, "M")).toDF("k", "v", "s")))
+    val after = StreamOps.drainAppend(spark, StreamOps.changeFeed(spark, cat, t))
+    assert(after.select("k", "op").as[(Long, String)].collect().toSeq ===
+      Seq((8L, "upsert")))
+  }
 }
