@@ -6,9 +6,11 @@ import java.util.ConcurrentModificationException
 import scala.util.Try
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.ops.{KnnGraph, Similarity}
 
 /**
  * Persistent warehouse of [[LineageTable]]s — the reference's Database
@@ -2186,197 +2188,273 @@ final class Catalog(spark: SparkSession, warehouse: String,
   /** Columns with a maintained projection (reference: per-column Index). */
   def projectionsOf(name: String): Seq[String] = readMeta(name).projCols
 
-  // ------------------------------------------------------- vector index
+  // ------------------------------------------------ durable ANN sidecars
+  //
+  // Three durable ANN indexes live beside the table as self-describing
+  // parquet sidecars: the IVF vector index `_vecindex`, IVF-PQ
+  // `_ivfpq/{books,codes,cents}` and the kNN graph
+  // `_knn/{graph,adj,seeds,meta}`. They are not in table meta on purpose:
+  // a missing or deleted sidecar simply reads as "no index". One
+  // lifecycle serves all three.
+  //
+  // Provenance: each records its embedding column and the op_seq at build
+  // (and, where it can refresh, the epoch) in `_vecindex`, `_ivfpq/cents`
+  // or `_knn/meta`. That file is the index's commit point: a (re)build
+  // deletes it before its first write and writes it after its last, and
+  // drop deletes it first, so a crash reads as "no index" or as the
+  // complete new index, never as old provenance over half-rewritten parts.
+  //
+  // Staleness: the vector index's is ADVISORY. Centroids are a partition
+  // hint, never a correctness input, so probes against the live snapshot
+  // stay exact IVF results whatever the centroids are; a drifted table
+  // just buckets less evenly (compare `built_seq` to the live op_seq and
+  // rebuild when the drift warrants). IVF-PQ and the kNN graph have
+  // VINTAGE semantics, the real ANN-index contract: their entries are
+  // per-vector, so vectors deleted since the build can still be reached
+  // but DROP at the live-snapshot scoring join (they never surface, only
+  // waste candidate slots), and vectors added since the build are
+  // invisible until a refresh indexes them (`refreshSidecar`).
 
-  private def vecIndexDir(table: String) = new Path(dir(table), "_vecindex")
+  /** What an ANN sidecar's provenance records: the embedding column, the
+    * op_seq and epoch at build, and the stored degree `k`. Only the kNN
+    * graph stores a degree (0 elsewhere); the vector index never
+    * refreshes and records no epoch (-1). */
+  private case class Provenance(column: String, builtSeq: Long,
+                                builtEpoch: Long, k: Int)
+
+  private def sidecar(table: String, part: String) = new Path(dir(table), part)
+
+  /** The parquet parts of a sidecar dir, listed explicitly: the sidecar
+    * dirs are underscore-prefixed (so TABLE reads skip them as metadata),
+    * which also makes a bare directory read see "only hidden paths" on
+    * some listing paths. Empty when the dir is missing. */
+  private def sidecarParts(table: String, part: String): Seq[String] = {
+    val p = sidecar(table, part)
+    if (!pathExists(p)) Nil
+    else fs.listStatus(p).toSeq.map(_.getPath.toString)
+      .filter(_.endsWith(".parquet"))
+  }
+
+  /** A sidecar part as a frame; None when it has no parquet part. */
+  private def readSidecar(table: String, part: String): Option[DataFrame] = {
+    val parts = sidecarParts(table, part)
+    if (parts.isEmpty) None else Some(spark.read.parquet(parts: _*))
+  }
+
+  /** The provenance file's rows and the provenance they carry, in one
+    * read; None ("no index") when the file is missing or empty. */
+  private def readProvenance(table: String,
+                             part: String): Option[(Provenance, Array[Row])] =
+    readSidecar(table, part).map(_.collect()).filter(_.nonEmpty).map { rows =>
+      val r = rows.head
+      def opt[A](field: String, absent: A): A =
+        if (r.schema.fieldNames.contains(field)) r.getAs[A](field) else absent
+      (Provenance(r.getAs[String]("emb_col"), r.getAs[Long]("built_seq"),
+        opt("built_epoch", -1L), opt("k", 0)), rows)
+    }
+
+  /** cid-ascending `(cid, vector)` pairs: centroids (`ce`) or one PQ
+    * codebook's codewords (`cw`). */
+  private def centroidsOf(rows: Array[Row],
+                          field: String = "ce"): Seq[(Long, Array[Float])] =
+    rows.map(r => (r.getAs[Long]("cid"), r.getSeq[Float](r.fieldIndex(field))
+      .toArray)).sortBy(_._1).toSeq
+
+  /** Write one sidecar part, then pass the crash point `wrote <part>`. */
+  private def writeSidecar(table: String, part: String, df: DataFrame,
+                           mode: SaveMode = SaveMode.Overwrite): Unit = {
+    df.write.mode(mode).parquet(sidecar(table, part).toString)
+    crashPoint(s"wrote $part")
+  }
+
+  /** Delete a sidecar's provenance ahead of a (re)build's first write or
+    * a drop, then pass the crash point `unsealed <part>`. */
+  private def unsealSidecar(table: String, provenance: String): Unit = {
+    deleteRecursively(sidecar(table, provenance))
+    crashPoint(s"unsealed $provenance")
+  }
+
+  /** Forget an ANN index: its provenance first, then the rest of the
+    * sidecar. The table itself is untouched. */
+  private def dropSidecar(table: String, root: String,
+                          provenance: String): Unit =
+    lock(table).synchronized { withCommitMarker(table) {
+      unsealSidecar(table, provenance)
+      deleteRecursively(sidecar(table, root))
+    } }
+
+  /** The live `(vec_id, embedding)` corpus of an embedding column. */
+  private def vectors(table: String, column: String): DataFrame = {
+    val t = getTable(table)
+    require(t.dataCols.contains(column), s"no such column: $column")
+    t.snapshot.select(col(t.keyCol).as("vec_id"), col(column).as("embedding"))
+  }
+
+  /**
+   * What a refresh indexes, at DELTA cost rather than corpus cost: the
+   * rows committed since `builtSeq` come from the CHANGE FEED
+   * ([[changesBetween]], whose `_ver` range predicate pushes to footers —
+   * tail files wholly outside the range never open), the latest in-range
+   * upsert per key survives, and keys the index already holds drop by an
+   * anti join against its slim `indexedIds` projection (an 8-byte
+   * key-column exchange; embeddings never shuffle). This covers pure
+   * ADDITIONS: keys updated since the build keep their stale entry, and
+   * deletions stay lazily dropped at the live scoring join.
+   */
+  private def additionsSince(table: String, meta: Meta, column: String,
+                             builtSeq: Long,
+                             indexedIds: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("vec_id")).orderBy(col("commit_ver").desc)
+    changesBetween(table, builtSeq, meta.opSeq)
+      .select(col(meta.key).as("vec_id"), col(column).as("embedding"),
+              col("commit_ver"), col("op"))
+      .withColumn("_rn", row_number().over(w))
+      .where(col("_rn") === 1 && col("op") === "upsert")
+      .select(col("vec_id"), col("embedding"))
+      .join(indexedIds, Seq("vec_id"), "left_anti")
+  }
+
+  /** The refresh skeleton shared by IVF-PQ and the kNN graph: under the
+    * table lock, refuse when there is no index or when its epoch is
+    * stale, do nothing at head, else run `append` (which indexes
+    * [[additionsSince]] and rewrites the provenance last). `built_seq`
+    * only means anything on the op_seq clock that stamped it: a physical
+    * rewrite (compact/vacuum/purge) since the build re-stamps history and
+    * RESETS op_seq, bumping the meta epoch, so the delta is unrecoverable
+    * — refuse LOUD, the rebuild-the-index signal, never a silent no-op
+    * against the reset clock. */
+  private def refreshSidecar(table: String, op: String, what: String,
+                             provenance: String, rebuild: String)(
+      append: (Meta, Provenance, Array[Row]) => Unit): Unit =
+    lock(table).synchronized { withCommitMarker(table) {
+      val idx = readProvenance(table, provenance)
+      require(idx.isDefined, s"$op($table): no $what index")
+      val (built, rows) = idx.get
+      val meta = readMeta(table)
+      require(built.builtEpoch == meta.epoch,
+        s"$op($table): history since the build was re-stamped by a " +
+          s"physical rewrite (epoch ${built.builtEpoch} -> ${meta.epoch}) " +
+          s"— $rebuild")
+      if (meta.opSeq != built.builtSeq) append(meta, built, rows)
+    } }
+
+  // ------------------------------------------------------- vector index
 
   /**
    * Durable IVF VECTOR INDEX on an embedding column — train once, probe
    * forever: [[graft.ops.Similarity.trainedCentroids]] runs Lloyd over
    * the CURRENT snapshot (each pass one map-only native-argmax
    * assignment + a C×D stats aggregate — the corpus never shuffles),
-   * and the resulting centroid set persists as a self-describing
-   * sidecar parquet under `_vecindex/` (cid, ce, emb_col, built_seq).
-   * A later session — or another process — loads C×D floats
-   * (metadata-scale, one tiny parquet read) and pays only
+   * and the resulting centroid set persists under `_vecindex/` (cid, ce,
+   * emb_col, built_seq). A later session — or another process — loads
+   * C×D floats (metadata-scale, one tiny parquet read) and pays only
    * [[graft.ops.Similarity.ivfProbePrebuilt]]'s probe cost: at 100 TB
    * the difference between ~1/C of one corpus scan per query batch and
-   * re-training over the corpus every session.
-   *
-   * Staleness is ADVISORY, the real-world vector-index contract:
-   * centroids are a partition hint, never a correctness input — probes
-   * against the live snapshot stay exact IVF results whatever the
-   * centroids are; a heavily-drifted table just buckets less evenly
-   * (compare `built_seq` to the live op_seq and rebuild when the drift
-   * warrants). Not in table meta deliberately: the sidecar carries its
-   * own schema + provenance, and a missing/deleted `_vecindex` dir
-   * simply reads as "no index".
+   * re-training over the corpus every session. Its staleness is advisory
+   * (see "durable ANN sidecars" above).
    */
   def createVectorIndex(name: String, column: String,
                         nCentroids: Int = 16, iters: Int = 1): Unit =
     lock(name).synchronized { withCommitMarker(name) {
       val meta = readMeta(name)
-      val t = getTable(name)
-      require(t.dataCols.contains(column), s"no such column: $column")
-      val corpus = t.snapshot
-        .select(col(meta.key).as("vec_id"), col(column).as("embedding"))
-      val cs = graft.ops.Similarity.collectCentroids(
-        graft.ops.Similarity.trainedCentroids(corpus, nCentroids, iters))
+      val cs = Similarity.collectCentroids(Similarity
+        .trainedCentroids(vectors(name, column), nCentroids, iters))
       require(cs.nonEmpty, s"createVectorIndex($name.$column): empty " +
         s"centroid seed set — seeding takes rows with ${meta.key} < " +
         s"$nCentroids (none found)")
       import spark.implicits._
-      cs.map { case (cid, v) => (cid, v.toSeq, column, meta.opSeq) }
-        .toDF("cid", "ce", "emb_col", "built_seq")
-        .coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(vecIndexDir(name).toString)
+      unsealSidecar(name, "_vecindex")
+      writeSidecar(name, "_vecindex",
+        cs.map { case (cid, v) => (cid, v.toSeq, column, meta.opSeq) }
+          .toDF("cid", "ce", "emb_col", "built_seq").coalesce(1))
     } }
 
   /** The stored vector index, if one exists: (embedding column, op_seq
     * at build, cid-ascending centroids). One tiny parquet read — C×D
     * floats, metadata-scale at any table size. */
-  def vectorIndex(name: String): Option[(String, Long, Seq[(Long, Array[Float])])] = {
-    val p = vecIndexDir(name)
-    if (!pathExists(p)) None
-    else {
-      // read the part files explicitly: the sidecar dir itself is
-      // underscore-prefixed (so TABLE reads skip it as metadata), which
-      // also makes a bare directory read see "only hidden paths" on
-      // some listing paths — enumerate the parquet parts instead
-      val parts = fs.listStatus(p).map(_.getPath)
-        .filter(_.getName.endsWith(".parquet")).map(_.toString)
-      if (parts.isEmpty) None
-      else {
-        val rows = spark.read.parquet(parts.toSeq: _*).collect()
-        if (rows.isEmpty) None
-        else {
-          val cs = rows.map(r => (r.getLong(r.fieldIndex("cid")),
-            r.getSeq[Float](r.fieldIndex("ce")).toArray)).sortBy(_._1).toSeq
-          Some((rows.head.getString(rows.head.fieldIndex("emb_col")),
-            rows.head.getLong(rows.head.fieldIndex("built_seq")), cs))
-        }
-      }
-    }
-  }
+  def vectorIndex(name: String): Option[(String, Long, Seq[(Long, Array[Float])])] =
+    readProvenance(name, "_vecindex").map { case (built, rows) =>
+      (built.column, built.builtSeq, centroidsOf(rows)) }
 
-  /** Forget the vector index: delete the sidecar (reads fall back to
-    * "no index"; the table itself is untouched). */
+  /** Forget the vector index ([[dropSidecar]]). */
   def dropVectorIndex(name: String): Unit =
-    lock(name).synchronized { withCommitMarker(name) {
-      deleteRecursively(vecIndexDir(name))
-    } }
+    dropSidecar(name, "_vecindex", "_vecindex")
 
   // ----------------------------------------------------- IVF-PQ index
-
-  private def ivfPqDir(table: String) = new Path(dir(table), "_ivfpq")
 
   /**
    * Durable IVF-PQ index — the FULL production ANN build persisted
    * ([[graft.ops.Similarity.ivfPqRerank]]'s encode side, run once):
-   * seed/trained IVF centroids, per-subspace PQ codebooks, and the
-   * per-vector CODE TABLE (bucket id + m one-byte codes) written in ONE
-   * map-only corpus pass to `_ivfpq/{cents,books,codes}`. A later
-   * session loads the driver-small model (C×D + m·K·(D/m) floats),
-   * reads the code table for scoring — m bytes per vector, never the
-   * embedding column — and touches the live table only to exact-re-rank
-   * the Q×kCand shortlist ([[graft.ops.Similarity.ivfPqProbePrebuilt]]).
-   * At 100 TB this is the difference between re-encoding the corpus per
-   * session and a code-table scan ~(4·D/m)× smaller than the data.
-   *
-   * Index VINTAGE semantics (the real ANN-index contract, stronger
-   * staleness than the advisory [[createVectorIndex]]): codes are
-   * per-vector, so vectors deleted since the build can shortlist from
-   * stale codes but DROP at the re-rank's live join (never surface,
-   * only waste shortlist slots); vectors added since the build are
-   * invisible until rebuild. Compare `built_seq` to the live op_seq.
+   * seed IVF centroids, per-subspace PQ codebooks, and the per-vector
+   * CODE TABLE (bucket id + m one-byte codes) written in ONE map-only
+   * corpus pass to `_ivfpq/{books,codes}`, then the centroids with the
+   * provenance to `_ivfpq/cents`. A later session loads the driver-small
+   * model (C×D + m·K·(D/m) floats), reads the code table for scoring —
+   * m bytes per vector, never the embedding column — and touches the
+   * live table only to exact-re-rank the Q×kCand shortlist
+   * ([[graft.ops.Similarity.ivfPqProbePrebuilt]]). At 100 TB this is the
+   * difference between re-encoding the corpus per session and a
+   * code-table scan ~(4·D/m)× smaller than the data. Vintage staleness
+   * (see "durable ANN sidecars" above).
    */
   def createIvfPqIndex(name: String, column: String,
                        nCentroids: Int = 16, m: Int = 4,
                        codebookSize: Int = 8): Unit =
     lock(name).synchronized { withCommitMarker(name) {
-      import graft.ops.Similarity
       val meta = readMeta(name)
-      val t = getTable(name)
-      require(t.dataCols.contains(column), s"no such column: $column")
-      val corpus = t.snapshot
-        .select(col(meta.key).as("vec_id"), col(column).as("embedding"))
-      val cs = Similarity.collectCentroids(
-        Similarity.seedCentroids(corpus, nCentroids))
+      val corpus = vectors(name, column)
+      val cs = Similarity.collectCentroids(Similarity.seedCentroids(corpus, nCentroids))
       require(cs.nonEmpty, s"createIvfPqIndex($name.$column): empty " +
         s"centroid seed set — seeding takes rows with ${meta.key} < " +
         s"$nCentroids (none found)")
       val pm = Similarity.pqTrain(corpus, m, codebookSize)
-      val base = ivfPqDir(name)
       import spark.implicits._
-      // built_epoch pins WHICH op_seq clock built_seq belongs to: a
-      // physical rewrite (compact/vacuum/purge) resets op_seq and bumps
-      // the epoch, so a seq comparison across epochs is meaningless —
-      // refreshIvfPqIndex refuses loud on mismatch instead of
-      // misreading the reset clock as "nothing changed"
-      cs.map { case (cid, v) => (cid, v.toSeq, column, meta.opSeq, meta.epoch) }
-        .toDF("cid", "ce", "emb_col", "built_seq", "built_epoch")
-        .coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(new Path(base, "cents").toString)
-      pm.books.zipWithIndex.flatMap { case (book, i) =>
-        book.map { case (cid, cw) => (i, cid, cw.toSeq) } }
-        .toDF("sub_i", "cid", "cw")
-        .coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(new Path(base, "books").toString)
+      unsealSidecar(name, "_ivfpq/cents")
+      writeSidecar(name, "_ivfpq/books",
+        pm.books.zipWithIndex.flatMap { case (book, i) =>
+          book.map { case (cid, cw) => (i, cid, cw.toSeq) } }
+          .toDF("sub_i", "cid", "cw").coalesce(1))
       // bucket id + m codes in ONE map-only projection over the corpus
-      Similarity.pqEncode(Similarity.assignWith(corpus, cs), pm,
-          Seq(col("vec_id"), col("cid")))
-        .write.mode(SaveMode.Overwrite)
-        .parquet(new Path(base, "codes").toString)
+      writeSidecar(name, "_ivfpq/codes", Similarity.pqEncode(
+        Similarity.assignWith(corpus, cs), pm, Seq(col("vec_id"), col("cid"))))
+      writeSidecar(name, "_ivfpq/cents", ivfPqCents(cs, column, meta))
     } }
+
+  /** `_ivfpq/cents`: the centroids, each row carrying the provenance. */
+  private def ivfPqCents(cs: Seq[(Long, Array[Float])], column: String,
+                         meta: Meta): DataFrame = {
+    import spark.implicits._
+    cs.map { case (cid, v) => (cid, v.toSeq, column, meta.opSeq, meta.epoch) }
+      .toDF("cid", "ce", "emb_col", "built_seq", "built_epoch").coalesce(1)
+  }
+
+  /** The stored PQ codebooks (`_ivfpq/books`, one per subspace). */
+  private def pqModel(name: String): Similarity.PqModel = {
+    val books = readSidecar(name, "_ivfpq/books").get.collect()
+      .groupBy(_.getAs[Int]("sub_i")).toSeq.sortBy(_._1)
+      .map { case (_, rows) => centroidsOf(rows, "cw") }
+    val sub = books.head.head._2.length
+    Similarity.PqModel(books, sub, books.size, sub * books.size)
+  }
 
   /** The stored IVF-PQ index, if one exists: (embedding column, op_seq
     * at build, centroids, PQ model, code-table frame). The model parts
     * are metadata-scale reads; the codes frame is lazy — it only scans
     * when a probe runs. */
   def ivfPqIndex(name: String): Option[(String, Long,
-      Seq[(Long, Array[Float])], graft.ops.Similarity.PqModel, DataFrame)] = {
-    val base = ivfPqDir(name)
-    if (!pathExists(new Path(base, "cents"))) None
-    else {
-      val centRows = spark.read.parquet(new Path(base, "cents").toString).collect()
-      if (centRows.isEmpty) None
-      else {
-        val cs = centRows.map(r => (r.getLong(r.fieldIndex("cid")),
-          r.getSeq[Float](r.fieldIndex("ce")).toArray)).sortBy(_._1).toSeq
-        val bookRows = spark.read.parquet(new Path(base, "books").toString)
-          .collect()
-          .map(r => (r.getInt(r.fieldIndex("sub_i")),
-            r.getLong(r.fieldIndex("cid")),
-            r.getSeq[Float](r.fieldIndex("cw")).toArray))
-        val mCount = bookRows.map(_._1).max + 1
-        val books = (0 until mCount).map(i =>
-          bookRows.filter(_._1 == i).sortBy(_._2)
-            .map { case (_, cid, cw) => (cid, cw) }.toSeq)
-        val sub = books.head.head._2.length
-        val pm = graft.ops.Similarity.PqModel(books, sub, mCount, sub * mCount)
-        Some((centRows.head.getString(centRows.head.fieldIndex("emb_col")),
-          centRows.head.getLong(centRows.head.fieldIndex("built_seq")), cs,
-          pm, spark.read.parquet(new Path(base, "codes").toString)))
-      }
-    }
-  }
+      Seq[(Long, Array[Float])], Similarity.PqModel, DataFrame)] =
+    readProvenance(name, "_ivfpq/cents").map { case (built, rows) =>
+      (built.column, built.builtSeq, centroidsOf(rows), pqModel(name),
+        readSidecar(name, "_ivfpq/codes").get) }
 
-  /** Forget the IVF-PQ index: delete the sidecar. */
+  /** Forget the IVF-PQ index ([[dropSidecar]]). */
   def dropIvfPqIndex(name: String): Unit =
-    lock(name).synchronized { withCommitMarker(name) {
-      deleteRecursively(ivfPqDir(name))
-    } }
+    dropSidecar(name, "_ivfpq", "_ivfpq/cents")
 
   /**
    * INCREMENTAL IVF-PQ refresh — close the "additions invisible until
-   * rebuild" gap at DELTA cost, not corpus cost: the rows committed
-   * since `built_seq` come from the CHANGE FEED ([[changesBetween]],
-   * whose `_ver` range predicate pushes to footers — tail files wholly
-   * outside the range never open), the latest in-range upsert per key
-   * survives, keys already coded drop via an anti join against the
-   * slim vec_id projection of the code table (an 8-byte key-column
-   * exchange — embeddings never shuffle), and ONLY the genuinely-new
-   * vectors pay the map-only assign+encode pass before APPENDING to
+   * rebuild" gap at delta cost ([[additionsSince]]): ONLY the genuinely
+   * new vectors pay the map-only assign+encode pass before APPENDING to
    * the code table. At 100 TB: a billion-row day lands on a
    * trillion-row index for the cost of encoding a billion rows.
    *
@@ -2384,81 +2462,42 @@ final class Catalog(spark: SparkSession, warehouse: String,
    * that is what makes the refreshed index bit-identical to a full
    * rebuild over the grown corpus (the seeds live below every
    * realistic key range, so rebuild would find the same model), and
-   * what a production IVF-PQ does between periodic re-trains. Refresh
-   * covers pure ADDITIONS: keys updated since the build keep their
-   * stale code (exact re-rank still scores them full-precision if they
-   * surface); deletions stay lazily dropped at the re-rank's live
-   * join. A physical rewrite (compact/vacuum/purge) since the build
-   * re-stamps history and RESETS the op_seq clock (bumping the meta
-   * epoch), so the delta is unrecoverable — refresh compares the
-   * stored `built_epoch` and refuses LOUD, the rebuild-the-index
-   * signal, never a silent no-op against the reset clock.
+   * what a production IVF-PQ does between periodic re-trains. Updated
+   * keys keep their stale code (exact re-rank still scores them
+   * full-precision if they surface).
    */
   def refreshIvfPqIndex(name: String): Unit =
-    lock(name).synchronized { withCommitMarker(name) {
-      import graft.ops.Similarity
-      val idx = ivfPqIndex(name)
-      require(idx.isDefined, s"refreshIvfPqIndex($name): no IVF-PQ index")
-      val (column, builtSeq, cs, pm, codes) = idx.get
-      val meta = readMeta(name)
-      // built_seq only means anything on the op_seq clock that stamped
-      // it: a physical rewrite since the build re-stamped history and
-      // bumped the epoch — the delta is unrecoverable, rebuild instead
-      val builtEpoch = spark.read
-        .parquet(new Path(ivfPqDir(name), "cents").toString)
-        .select(col("built_epoch")).head().getLong(0)
-      require(builtEpoch == meta.epoch,
-        s"refreshIvfPqIndex($name): history since the build was " +
-          s"re-stamped by a physical rewrite (epoch $builtEpoch -> " +
-          s"${meta.epoch}) — the delta is not addressable as change " +
-          "events; rebuild with createIvfPqIndex")
-      if (meta.opSeq != builtSeq) {
-        val w = Window.partitionBy(col("vec_id"))
-          .orderBy(col("commit_ver").desc)
-        val fresh = changesBetween(name, builtSeq, meta.opSeq)
-          .select(col(meta.key).as("vec_id"), col(column).as("embedding"),
-                  col("commit_ver"), col("op"))
-          .withColumn("_rn", row_number().over(w))
-          .where(col("_rn") === 1 && col("op") === "upsert")
-          .select(col("vec_id"), col("embedding"))
-          .join(codes.select(col("vec_id")), Seq("vec_id"), "left_anti")
-        Similarity.pqEncode(Similarity.assignWith(fresh, cs), pm,
-            Seq(col("vec_id"), col("cid")))
-          .write.mode(SaveMode.Append)
-          .parquet(new Path(ivfPqDir(name), "codes").toString)
-        import spark.implicits._
-        cs.map { case (cid, v) =>
-            (cid, v.toSeq, column, meta.opSeq, meta.epoch) }
-          .toDF("cid", "ce", "emb_col", "built_seq", "built_epoch")
-          .coalesce(1).write.mode(SaveMode.Overwrite)
-          .parquet(new Path(ivfPqDir(name), "cents").toString)
-      }
-    } }
+    refreshSidecar(name, "refreshIvfPqIndex", "IVF-PQ", "_ivfpq/cents",
+        "the delta is not addressable as change events; rebuild with " +
+          "createIvfPqIndex") { (meta, built, rows) =>
+      val cs = centroidsOf(rows)
+      val fresh = additionsSince(name, meta, built.column, built.builtSeq,
+        readSidecar(name, "_ivfpq/codes").get.select(col("vec_id")))
+      writeSidecar(name, "_ivfpq/codes", Similarity.pqEncode(
+        Similarity.assignWith(fresh, cs), pqModel(name),
+        Seq(col("vec_id"), col("cid"))), SaveMode.Append)
+      writeSidecar(name, "_ivfpq/cents", ivfPqCents(cs, built.column, meta))
+    }
 
   // ----------------------------------------------------- kNN-graph index
-
-  private def knnDir(table: String) = new Path(dir(table), "_knn")
 
   /**
    * Durable kNN-GRAPH index (r12) — persist [[graft.ops.KnnGraph
    * .nnDescent]]'s all-points neighbor lists as a sidecar under
    * `_knn/graph` (vec_id, nbr_id, dot, rnk) with provenance in
-   * `_knn/meta` (emb_col, k, built_seq, built_epoch — the IVF-PQ
-   * vintage pattern, Catalog `_ivfpq`), so the expensive build runs
-   * ONCE and every later session serves reads by graph traversal
-   * ([[knnSearch]]) — the HNSW-class read path. At 100 TB the graph is
-   * k·N edge rows (16-byte keys + a double), ~1000× smaller than the
-   * embeddings it indexes; a search batch touches O(Q·beam·k·hops)
-   * rows of it, never a corpus scan.
+   * `_knn/meta` (emb_col, k, built_seq, built_epoch), so the expensive
+   * build runs ONCE and every later session serves reads by graph
+   * traversal ([[knnSearch]]) — the HNSW-class read path. At 100 TB the
+   * graph is k·N edge rows (16-byte keys + a double), ~1000× smaller
+   * than the embeddings it indexes; a search batch touches
+   * O(Q·beam·k·hops) rows of it, never a corpus scan. Vintage staleness
+   * (see "durable ANN sidecars" above).
    */
   def createKnnIndex(name: String, column: String, k: Int = 5,
                      rounds: Int = 3, descentK: Int = 0): Unit =
     lock(name).synchronized { withCommitMarker(name) {
       val meta = readMeta(name)
-      val t = getTable(name)
-      require(t.dataCols.contains(column), s"no such column: $column")
-      val corpus = t.snapshot
-        .select(col(meta.key).as("vec_id"), col(column).as("embedding"))
+      val corpus = vectors(name, column)
       // store the FULL descent lists (r14): the descent already paid
       // for descentK edges per node; trimming to k before persisting
       // threw away the graph density that serving recall rides on
@@ -2469,17 +2508,14 @@ final class Catalog(spark: SparkSession, warehouse: String,
       // meta's k records the STORED degree — refresh appends new nodes
       // at the same degree.
       val deg = math.max(k, if (descentK <= 0) k else descentK)
-      val g = graft.ops.KnnGraph.nnDescent(corpus, deg, rounds, descentK)
-      g.write.mode(SaveMode.Overwrite)
-        .parquet(new Path(knnDir(name), "graph").toString)
+      unsealSidecar(name, "_knn/meta")
+      writeSidecar(name, "_knn/graph", KnnGraph.nnDescent(corpus, deg, rounds, descentK))
       // symmetrize ONCE at build (from the just-written files, not the
       // nnDescent plan — recomputing the descent here would double the
       // build) and persist: the serving path reads `_knn/adj` directly
       // instead of paying an O(|E|) union+distinct per query batch
-      graft.ops.KnnGraph.symmetrize(
-          spark.read.parquet(new Path(knnDir(name), "graph").toString))
-        .write.mode(SaveMode.Overwrite)
-        .parquet(new Path(knnDir(name), "adj").toString)
+      writeSidecar(name, "_knn/adj",
+        KnnGraph.symmetrize(readSidecar(name, "_knn/graph").get))
       // `_knn/seeds` (r14): per-QUERY beam entry points. One Lloyd
       // round of 16 centroids (quantized-exact, deterministic — the
       // ann_ivf_trained recipe) and, per centroid, the 16 lowest-id
@@ -2490,55 +2526,44 @@ final class Catalog(spark: SparkSession, warehouse: String,
       // waste the beam budget on corpus regions far from the query).
       // Skipped when the deterministic seed rule (vec_id < 16) finds no
       // rows (sparse/offset key spaces) — serving then falls back to
-      // the legacy lowest-id entry points. Refresh keeps seeds as
-      // built: new nodes are reachable THROUGH the appended adj edges,
-      // entry points only steer.
-      val cents = graft.ops.Similarity.trainedCentroids(corpus, 16, iters = 1)
-      val cs = graft.ops.Similarity.collectCentroids(cents)
-      if (cs.nonEmpty) {
+      // the legacy lowest-id entry points, so a rebuild deletes the
+      // previous build's seeds rather than steer by them. Refresh keeps
+      // seeds as built: new nodes are reachable THROUGH the appended adj
+      // edges, entry points only steer.
+      val cents = Similarity.trainedCentroids(corpus, 16, iters = 1)
+      val cs = Similarity.collectCentroids(cents)
+      if (cs.isEmpty) deleteRecursively(sidecar(name, "_knn/seeds"))
+      else {
         val wm = Window.partitionBy(col("cid")).orderBy(col("vec_id").asc)
-        graft.ops.Similarity.assignWith(corpus, cs)
+        writeSidecar(name, "_knn/seeds", Similarity.assignWith(corpus, cs)
           .withColumn("rnk", row_number().over(wm).cast("bigint"))
           .where(col("rnk") <= 16)
           .select(col("cid"), col("vec_id"), col("rnk"))
-          .join(cents.select(col("cid"), col("ce")), Seq("cid"))
-          .write.mode(SaveMode.Overwrite)
-          .parquet(new Path(knnDir(name), "seeds").toString)
+          .join(cents.select(col("cid"), col("ce")), Seq("cid")))
       }
-      import spark.implicits._
-      Seq((column, deg, meta.opSeq, meta.epoch))
-        .toDF("emb_col", "k", "built_seq", "built_epoch")
-        .coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(new Path(knnDir(name), "meta").toString)
+      writeSidecar(name, "_knn/meta", knnMeta(column, deg, meta))
     } }
+
+  /** `_knn/meta`: the provenance row. */
+  private def knnMeta(column: String, k: Int, meta: Meta): DataFrame = {
+    import spark.implicits._
+    Seq((column, k, meta.opSeq, meta.epoch))
+      .toDF("emb_col", "k", "built_seq", "built_epoch").coalesce(1)
+  }
 
   /** The stored kNN graph, if one exists: (embedding column, k, op_seq
     * at build, lazy graph frame). */
-  def knnIndex(name: String): Option[(String, Int, Long, DataFrame)] = {
-    val base = knnDir(name)
-    if (!pathExists(new Path(base, "meta"))) None
-    else {
-      val m = spark.read.parquet(new Path(base, "meta").toString).collect()
-      if (m.isEmpty) None
-      else Some((m.head.getString(m.head.fieldIndex("emb_col")),
-        m.head.getInt(m.head.fieldIndex("k")),
-        m.head.getLong(m.head.fieldIndex("built_seq")),
-        spark.read.parquet(new Path(base, "graph").toString)))
-    }
-  }
+  def knnIndex(name: String): Option[(String, Int, Long, DataFrame)] =
+    readProvenance(name, "_knn/meta").map { case (built, _) =>
+      (built.column, built.k, built.builtSeq,
+        readSidecar(name, "_knn/graph").get) }
 
-  /** Forget the kNN graph: delete the sidecar. */
-  def dropKnnIndex(name: String): Unit =
-    lock(name).synchronized { withCommitMarker(name) {
-      deleteRecursively(knnDir(name))
-    } }
+  /** Forget the kNN graph ([[dropSidecar]]). */
+  def dropKnnIndex(name: String): Unit = dropSidecar(name, "_knn", "_knn/meta")
 
   /**
-   * Incremental kNN-graph refresh — ADDITIONS attach at delta cost: the
-   * keys committed since `built_seq` come from the change feed (the
-   * [[refreshIvfPqIndex]] recipe: latest in-range upsert per key, keys
-   * already in the graph dropped by an anti join against the slim
-   * vec_id projection), each genuinely-new vector finds its exact
+   * Incremental kNN-graph refresh — ADDITIONS attach at delta cost
+   * ([[additionsSince]]): each genuinely-new vector finds its exact
    * top-k against the live snapshot (one broadcast-delta pass over the
    * corpus — |delta|·N dots, map-only, the corpus never shuffles), and
    * the resulting `new → old` edges APPEND to the graph. Old nodes'
@@ -2546,84 +2571,53 @@ final class Catalog(spark: SparkSession, warehouse: String,
    * .beamSearch]] traverses the SYMMETRIZED adjacency, so the appended
    * forward edges already make new nodes reachable from old ones — the
    * same append-only trick HNSW uses while deferring degree pruning.
-   * Deletions stay lazily dropped at the search's live-corpus scoring
-   * join. A physical rewrite since the build bumps the epoch — refuse
-   * loud, rebuild (the IVF-PQ contract).
    */
   def refreshKnnIndex(name: String): Unit =
-    lock(name).synchronized { withCommitMarker(name) {
-      val idx = knnIndex(name)
-      require(idx.isDefined, s"refreshKnnIndex($name): no kNN index")
-      val (column, k, builtSeq, graph) = idx.get
-      val meta = readMeta(name)
-      val builtEpoch = spark.read
-        .parquet(new Path(knnDir(name), "meta").toString)
-        .select(col("built_epoch")).head().getLong(0)
-      require(builtEpoch == meta.epoch,
-        s"refreshKnnIndex($name): history since the build was re-stamped " +
-          s"by a physical rewrite (epoch $builtEpoch -> ${meta.epoch}) — " +
-          "rebuild with createKnnIndex")
-      if (meta.opSeq != builtSeq) {
-        val w = Window.partitionBy(col("vec_id"))
-          .orderBy(col("commit_ver").desc)
-        val fresh = changesBetween(name, builtSeq, meta.opSeq)
-          .select(col(meta.key).as("vec_id"), col(column).as("embedding"),
-                  col("commit_ver"), col("op"))
-          .withColumn("_rn", row_number().over(w))
-          .where(col("_rn") === 1 && col("op") === "upsert")
-          .select(col("vec_id"), col("embedding"))
-          .join(graph.select(col("vec_id")).distinct(),
-            Seq("vec_id"), "left_anti")
-        val live = getTable(name).snapshot
-          .select(col(meta.key).as("vec_id"), col(column).as("embedding"))
-        // k+1 then drop the self-match (a committed vector is its own
-        // nearest neighbor in the live snapshot) and re-rank to k
-        val wq = Window.partitionBy(col("qid"))
-          .orderBy(col("dot").desc, col("vec_id").asc)
-        // localCheckpoint: the brute-force executes ONCE and the adj
-        // and graph appends below see the SAME materialized edges
-        val newEdges = graft.ops.Similarity.bruteTopK(live,
-            fresh.select(col("vec_id").as("qid"), col("embedding").as("qe")),
-            k + 1)
-          .where(col("qid") =!= col("vec_id"))
-          .withColumn("rnk", row_number().over(wq).cast("bigint"))
-          .where(col("rnk") <= k)
-          .select(col("qid").as("vec_id"), col("vec_id").as("nbr_id"),
-            col("dot"), col("rnk"))
-          .localCheckpoint()
-        // keep the durable adjacency symmetrized: append BOTH directions
-        // of the new edges. No cross-batch dedupe needed — every fresh
-        // vec_id is anti-joined against the stored graph above, so
-        // neither direction of a (new, old) or (new, new) pair can
-        // already exist; within-batch mirror collisions (new1↔new2 each
-        // finding the other) dedupe here.
-        // ORDER MATTERS for crash consistency: adj commits BEFORE the
-        // graph. knnSearch serves exclusively from adj while refresh
-        // derives freshness from the graph — writing the graph first
-        // left a crash window where edges existed in the graph (so the
-        // next refresh skipped those ids) but never reached adj,
-        // making the vectors permanently unreachable. With adj first, a
-        // crash between the writes re-runs the refresh from the same
-        // builtSeq and merely re-appends duplicate adj rows, which
-        // beamSearch's per-frontier dedupe tolerates.
-        val adjPath = new Path(knnDir(name), "adj")
-        val deltaAdj = graft.ops.KnnGraph.symmetrize(newEdges)
-        if (pathExists(adjPath))
-          deltaAdj.write.mode(SaveMode.Append).parquet(adjPath.toString)
-        else // legacy sidecar built before `_knn/adj`: materialize full
-          graft.ops.KnnGraph.symmetrize(spark.read
-              .parquet(new Path(knnDir(name), "graph").toString))
-            .unionByName(deltaAdj)
-            .write.mode(SaveMode.Overwrite).parquet(adjPath.toString)
-        newEdges.write.mode(SaveMode.Append)
-          .parquet(new Path(knnDir(name), "graph").toString)
-        import spark.implicits._
-        Seq((column, k, meta.opSeq, meta.epoch))
-          .toDF("emb_col", "k", "built_seq", "built_epoch")
-          .coalesce(1).write.mode(SaveMode.Overwrite)
-          .parquet(new Path(knnDir(name), "meta").toString)
-      }
-    } }
+    refreshSidecar(name, "refreshKnnIndex", "kNN", "_knn/meta",
+        "rebuild with createKnnIndex") { (meta, built, _) =>
+      val graph = readSidecar(name, "_knn/graph").get
+      val fresh = additionsSince(name, meta, built.column, built.builtSeq,
+        graph.select(col("vec_id")).distinct())
+      // k+1 then drop the self-match (a committed vector is its own
+      // nearest neighbor in the live snapshot) and re-rank to k
+      val wq = Window.partitionBy(col("qid"))
+        .orderBy(col("dot").desc, col("vec_id").asc)
+      // localCheckpoint: the brute-force executes ONCE and the adj
+      // and graph appends below see the SAME materialized edges
+      val newEdges = Similarity.bruteTopK(
+          vectors(name, built.column),
+          fresh.select(col("vec_id").as("qid"), col("embedding").as("qe")),
+          built.k + 1)
+        .where(col("qid") =!= col("vec_id"))
+        .withColumn("rnk", row_number().over(wq).cast("bigint"))
+        .where(col("rnk") <= built.k)
+        .select(col("qid").as("vec_id"), col("vec_id").as("nbr_id"),
+          col("dot"), col("rnk"))
+        .localCheckpoint()
+      // keep the durable adjacency symmetrized: append BOTH directions
+      // of the new edges. No cross-batch dedupe needed — every fresh
+      // vec_id is anti-joined against the stored graph above, so
+      // neither direction of a (new, old) or (new, new) pair can
+      // already exist; within-batch mirror collisions (new1↔new2 each
+      // finding the other) dedupe here.
+      // ORDER MATTERS for crash consistency: adj commits BEFORE the
+      // graph. knnSearch serves exclusively from adj while refresh
+      // derives freshness from the graph — writing the graph first
+      // left a crash window where edges existed in the graph (so the
+      // next refresh skipped those ids) but never reached adj,
+      // making the vectors permanently unreachable. With adj first, a
+      // crash between the writes re-runs the refresh from the same
+      // builtSeq and merely re-appends duplicate adj rows, which
+      // beamSearch's per-frontier dedupe tolerates.
+      val deltaAdj = KnnGraph.symmetrize(newEdges)
+      if (sidecarParts(name, "_knn/adj").nonEmpty)
+        writeSidecar(name, "_knn/adj", deltaAdj, SaveMode.Append)
+      else // legacy sidecar built before `_knn/adj`: materialize full
+        writeSidecar(name, "_knn/adj",
+          KnnGraph.symmetrize(graph).unionByName(deltaAdj))
+      writeSidecar(name, "_knn/graph", newEdges, SaveMode.Append)
+      writeSidecar(name, "_knn/meta", knnMeta(built.column, built.k, meta))
+    }
 
   /** Serve an ANN batch from the stored kNN graph ([[createKnnIndex]])
     * by greedy beam search — scoring joins the LIVE snapshot, so
@@ -2657,40 +2651,30 @@ final class Catalog(spark: SparkSession, warehouse: String,
       "createKnnIndex first")
     val (column, _, _, graph) = idx.get
     val meta = readMeta(name)
-    val live = getTable(name).snapshot
-      .select(col(meta.key).as("vec_id"), col(column).as("embedding"))
+    val live = vectors(name, column)
     // serve from the adjacency symmetrized ONCE at build — O(|E|)
     // union+distinct per query batch was the 1000× serving bottleneck
     // (legacy sidecars without `_knn/adj` symmetrize at read)
-    val adjPath = new Path(knnDir(name), "adj")
-    val adj =
-      if (pathExists(adjPath)) spark.read.parquet(adjPath.toString)
-      else graft.ops.KnnGraph.symmetrize(graph)
+    val adj = readSidecar(name, "_knn/adj").getOrElse(KnnGraph.symmetrize(graph))
     // per-query entry points from the `_knn/seeds` sidecar (r14): route
     // each query to its nearest trained centroid (driver-small C×D
     // collect + the codegen'd NearestCentroids argmax — map-only over
     // the query batch) and start the beam at that centroid's `entries`
     // lowest-id members. Legacy sidecars without seeds keep the global
     // lowest-id entry points.
-    val seedsPath = new Path(knnDir(name), "seeds")
-    val perQuerySeeds =
-      if (!pathExists(seedsPath)) None
-      else {
-        val sd = spark.read.parquet(seedsPath.toString)
-        val cs = graft.ops.Similarity.collectCentroids(
-          sd.select(col("cid"), col("ce")).distinct())
-        val routed = graft.ops.Similarity.probeWith(
-            queries.select(col("qid"), col("qe").as("embedding")), cs,
-            probes)
-          .select(col("qid"), col("cid"))
-        Some(routed.join(
-            broadcast(sd.where(col("rnk") <= entries)
-              .select(col("cid"), col("vec_id"))), Seq("cid"))
-          .select(col("qid"), col("vec_id")))
-      }
+    val perQuerySeeds = readSidecar(name, "_knn/seeds").map { sd =>
+      val cs = Similarity.collectCentroids(sd.select(col("cid"), col("ce")).distinct())
+      val routed = Similarity.probeWith(
+          queries.select(col("qid"), col("qe").as("embedding")), cs, probes)
+        .select(col("qid"), col("cid"))
+      routed.join(
+          broadcast(sd.where(col("rnk") <= entries)
+            .select(col("cid"), col("vec_id"))), Seq("cid"))
+        .select(col("qid"), col("vec_id"))
+    }
     val admit = filter.map(f => getTable(name).snapshot.where(f)
       .select(col(meta.key).as("vec_id")))
-    graft.ops.KnnGraph.beamSearch(live, adj, queries, k, beam, hops,
+    KnnGraph.beamSearch(live, adj, queries, k, beam, hops,
       entries, perQuerySeeds = perQuerySeeds, admit = admit,
       minDot = minDot)
   }

@@ -60,6 +60,19 @@ object PipelineQueries {
       .select((col("vec_id") + 100000L).as("vec_id"), col("embedding"), col("label")))
   }
 
+  /** The read path the three durable IVF-PQ rows share: open the
+    * warehouse with a FRESH catalog handle, load the stored model, score
+    * from the stored codes and exact-re-rank against the live table. */
+  private def probeIvfPq(warehouse: (SparkSession, String) => String,
+                         table: String)(s: SparkSession, d: String): DataFrame = {
+    val cat = new graft.core.Catalog(s, warehouse(s, d))
+    val Some((embCol, _, cs, pm, codes)) = cat.ivfPqIndex(table)
+    Similarity.ivfPqProbePrebuilt(
+      cat.getTable(table).snapshot
+        .select(col("vec_id"), col(embCol).as("embedding")),
+      codes, annQueries(s, d).drop("qlabel"), 5, 25, cs, pm, nProbe = 2)
+  }
+
   private def annQueries(s: SparkSession, d: String): DataFrame =
     Tables(s, d, "embeddings").where(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"),
@@ -119,7 +132,12 @@ object PipelineQueries {
 
   /** The NN-Descent build replay (ann_knn_graph's CTE chain, ending at
     * `k3` — the converged top-15 lists): shared verbatim by the build
-    * oracle and the search oracle so both address the SAME graph. */
+    * oracle and the search oracle so both address the SAME graph. Every
+    * round's `k$r` is MATERIALIZED: a round reads its predecessor three
+    * times and DuckDB inlines an unmaterialized CTE at each reference, so
+    * `k0` was replayed 27 times and ran out of memory on a 15 GB host.
+    * Each `k$r` is a deterministic top-15 per `p` under the total order
+    * (dot DESC, q ASC), so materializing changes no row. */
   private lazy val knnGraphCtes: String = {
     def round(prev: String, r: Int): String =
       s"""u$r AS (SELECT p, q FROM $prev UNION SELECT q, p FROM $prev),
@@ -133,7 +151,7 @@ object PipelineQueries {
          |          UNION ALL SELECT p, q, dot FROM t$r
          |          UNION ALL SELECT q AS p, p AS q, dot FROM t$r)
          |        GROUP BY p, q),
-         |k$r AS (SELECT p, q, dot FROM (
+         |k$r AS MATERIALIZED (SELECT p, q, dot FROM (
          |          SELECT p, q, dot, row_number() OVER (
          |            PARTITION BY p ORDER BY dot DESC, q ASC) AS r
          |          FROM a$r) WHERE r <= 15)""".stripMargin
@@ -157,7 +175,7 @@ object PipelineQueries {
        |s0 AS (SELECT i0.p, i0.q,
        |    ${knnDotSql("ep.v", "eq.v")} AS dot
        |  FROM i0 JOIN e ep ON ep.id = i0.p JOIN e eq ON eq.id = i0.q),
-       |k0 AS (SELECT p, q, dot FROM (
+       |k0 AS MATERIALIZED (SELECT p, q, dot FROM (
        |         SELECT p, q, dot, row_number() OVER (
        |           PARTITION BY p ORDER BY dot DESC, q ASC) AS r
        |         FROM s0) WHERE r <= 15),
@@ -612,15 +630,7 @@ object PipelineQueries {
     // vector — neither re-trains, re-assigns, nor re-encodes, and the
     // embedding column is read only to exact-re-rank the Q×kCand
     // shortlist). Same deterministic build as ann_ivfpq → same oracle.
-    "ann_ivfpq_durable" -> { (s, d) =>
-      val wh = vecIdxWarehouse(s, d)
-      val cat = new graft.core.Catalog(s, wh)
-      val Some((embCol, _, cs, pm, codes)) = cat.ivfPqIndex("emb_vi")
-      Similarity.ivfPqProbePrebuilt(
-        cat.getTable("emb_vi").snapshot
-          .select(col("vec_id"), col(embCol).as("embedding")),
-        codes, annQueries(s, d).drop("qlabel"), 5, 25, cs, pm, nProbe = 2)
-    },
+    "ann_ivfpq_durable" -> probeIvfPq(vecIdxWarehouse, "emb_vi"),
 
     // INCREMENTAL index refresh (r9, Catalog.refreshIvfPqIndex + CALL
     // graft.refresh_ivfpq_index): the index was built over a PARTIAL
@@ -630,15 +640,7 @@ object PipelineQueries {
     // visible at delta cost, never a corpus re-encode. The probe here
     // is byte-identical to ann_ivfpq_durable's read path; matching the
     // full-rebuild oracle IS the refresh≡rebuild correctness claim.
-    "ann_ivfpq_refresh" -> { (s, d) =>
-      val wh = vecRefreshWarehouse(s, d)
-      val cat = new graft.core.Catalog(s, wh)
-      val Some((embCol, _, cs, pm, codes)) = cat.ivfPqIndex("emb_rf")
-      Similarity.ivfPqProbePrebuilt(
-        cat.getTable("emb_rf").snapshot
-          .select(col("vec_id"), col(embCol).as("embedding")),
-        codes, annQueries(s, d).drop("qlabel"), 5, 25, cs, pm, nProbe = 2)
-    },
+    "ann_ivfpq_refresh" -> probeIvfPq(vecRefreshWarehouse, "emb_rf"),
 
     // CONTINUOUS indexing (r9, StreamOps.mergeStream refreshIndex=true):
     // three micro-batches of new vectors each land as one durable merge
@@ -647,15 +649,7 @@ object PipelineQueries {
     // batch's additions (change-feed delta encode + append). The probe
     // reads the streamed-and-refreshed index; matching the full-rebuild
     // oracle proves ingest-then-index converges exactly.
-    "stream_index" -> { (s, d) =>
-      val wh = vecStreamWarehouse(s, d)
-      val cat = new graft.core.Catalog(s, wh)
-      val Some((embCol, _, cs, pm, codes)) = cat.ivfPqIndex("emb_si")
-      Similarity.ivfPqProbePrebuilt(
-        cat.getTable("emb_si").snapshot
-          .select(col("vec_id"), col(embCol).as("embedding")),
-        codes, annQueries(s, d).drop("qlabel"), 5, 25, cs, pm, nProbe = 2)
-    },
+    "stream_index" -> probeIvfPq(vecStreamWarehouse, "emb_si"),
 
     // MATRYOSHKA retrieval (r9, Similarity.matryoshkaTopK — Kusupati et
     // al.'s MRL deployment recipe): shortlist on the FIRST 16 of 64

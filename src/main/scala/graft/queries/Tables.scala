@@ -10,25 +10,31 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Session-level INFERRED-schema cache per fixture path: every fixture
+  /** Per-session INFERRED-schema cache per fixture path: every fixture
     * read previously ran parquet schema inference — a 1-task Spark job
     * (~25ms + driver gap) repeated by all 277 bench queries, cold and
-    * steady. The first read per path still infers (so nanos-vs-micros
-    * `ts` handling is exactly what inference decides under the session's
-    * `nanosAsLong` conf); later reads supply that schema and launch no
-    * job. The fixture files are immutable for the life of a run — this
-    * caches METADATA only, never data or results. */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+    * steady. The first read per path in a session still infers (so
+    * nanos-vs-micros `ts` handling is exactly what inference decides
+    * under THAT session's `nanosAsLong` conf — a second session with
+    * other settings infers its own schema); later reads supply that
+    * schema and launch no job. Sessions are weak keys, so a finished
+    * session's entries go with it. The fixture files are immutable for
+    * the life of a run — this caches METADATA only, never data or
+    * results. */
+  private val schemaCache = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession,
+      java.util.concurrent.ConcurrentHashMap[String, StructType]]())
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    val cached = schemaCache.get(path)
+    val schemas = schemaCache.computeIfAbsent(spark,
+      _ => new java.util.concurrent.ConcurrentHashMap[String, StructType]())
+    val cached = schemas.get(path)
     val raw =
       if (cached != null) spark.read.schema(cached).parquet(path)
       else {
         val df = spark.read.parquet(path)
-        schemaCache.putIfAbsent(path, df.schema)
+        schemas.putIfAbsent(path, df.schema)
         df
       }
     normalizeEventTime(raw)

@@ -230,4 +230,39 @@ class KnnIndexSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](cat.refreshKnnIndex("e"))
     assert(e.getMessage.contains("rebuild"))
   }
+
+  test("a sidecar without `_knn/adj` (pre-r14) or `_knn/seeds` (sparse " +
+      "keys) serves from symmetrize(graph) and refreshes a full adj") {
+    val wh = Files.createTempDirectory("graft_knnlegacy_").toString
+    val cat = new Catalog(spark, wh, autoCompact = false)
+    val n = embeddings.count()
+    cat.createTable("e", "vec_id", embeddings)
+    cat.createKnnIndex("e", "embedding", k = 5, rounds = 2, descentK = 10)
+    for (part <- Seq("adj", "seeds"))
+      org.apache.commons.io.FileUtils.deleteDirectory(
+        new java.io.File(s"$wh/e/_knn/$part"))
+
+    // serving: the adjacency is symmetrized at read and the beam starts
+    // at the global lowest-id entry points
+    val graph = cat.knnIndex("e").get._4
+    val before = graph.collect().map(_.toSeq).toSet
+    val served = cat.knnSearch("e", queries, k = 5, beam = 5, hops = 3)
+    val inline = KnnGraph.beamSearch(embeddings, KnnGraph.symmetrize(graph),
+      queries, k = 5, beam = 5, hops = 3, entries = 4)
+    assert(served.orderBy("qid", "rnk").collect().map(_.toSeq).toSeq ===
+      inline.orderBy("qid", "rnk").collect().map(_.toSeq).toSeq)
+
+    // refresh: with no adj to append to, it writes the whole
+    // symmetrized adjacency of the old graph plus the new edges
+    val fresh = embeddings.where(col("vec_id") < 3)
+      .select((col("vec_id") + lit(n + 1000)).as("vec_id"), col("embedding"))
+    cat.commit("e", Txn.empty.insert(fresh))
+    cat.refreshKnnIndex("e")
+    val grown = cat.knnIndex("e").get._4
+    val added = grown.collect().map(_.toSeq).toSet -- before
+    assert(added.size === 3 * 10 && added.forall(_.head.asInstanceOf[Long] > n))
+    assert(spark.read.parquet(s"$wh/e/_knn/adj")
+      .collect().map(_.toSeq).toSet ===
+      KnnGraph.symmetrize(grown).collect().map(_.toSeq).toSet)
+  }
 }

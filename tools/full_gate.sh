@@ -17,7 +17,11 @@ OUT="${TMPDIR:-/tmp}/graft_full_gate_$(date +%s)"
 cd "$(dirname "$0")/.."
 sbt -batch compile >/dev/null
 rm -rf "$OUT"
+# Heap: min(16g, MemTotal - 6 GB). Large hosts keep 16g; a smaller one
+# leaves room for the OS and for the DuckDB compare that follows.
+HEAP_MB="$(awk '/^MemTotal:/ {m = int($2 / 1024) - 6144
+  print (m > 16384 ? 16384 : m)}' /proc/meminfo 2>/dev/null || echo 16384)"
 SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" \
-  java -cp "target/scala-2.13/classes:/opt/spark/jars/*" -Xmx16g \
+  java -cp "target/scala-2.13/classes:/opt/spark/jars/*" "-Xmx${HEAP_MB}m" \
   graft.Verify "$SF_DIR" "$OUT"
 python3 tools/check.py "$SF_DIR" "$OUT"
