@@ -1257,24 +1257,8 @@ final class Catalog(spark: SparkSession, warehouse: String,
     recoverTxns()
     withLocks(names) { withMarkers(names) {
       val id = "tx_" + java.util.UUID.randomUUID().toString.replace("-", "_")
-      val expected = names.map(n => readMeta(n).opSeq)
-      // build + stage every table's delta BEFORE anything is visible;
-      // a failing op aborts here with nothing written anywhere
-      val next = names.map { n =>
-        val after = txns(n).commit(getTable(n))
-        // CHECK gate at stage time — any table's violation aborts the
-        // whole multi-table transaction with nothing visible anywhere
-        validateConstraints(n, readMeta(n), after.delta)
-        // through lineageWriter: the staged files RENAME into the tail at
-        // roll-forward, so layout options (bloom filters) must be baked
-        // in at the stage write — the rename can't add them later
-        after.delta.foreach(d => lineageWriter(d, readMeta(n))
-          .mode(SaveMode.Append)
-          .parquet(new Path(new Path(txnRoot, id), n).toString))
-        after.opSeq
-      }
+      val rec = stage(id, txns)
       crashPoint("multi-staged")
-      val rec = TxnRecord(tables = names, expected = expected, next = next)
       writeString(txnRecordPath(id), TableMeta.encode(rec))
       crashPoint("multi-committed")
       applyTxn(id, rec, txnRecordPath(id))
@@ -1284,6 +1268,28 @@ final class Catalog(spark: SparkSession, warehouse: String,
     if (autoCompact)
       names.foreach(n => maybeCompact(n, compactRatio, preserveHistory = true))
     names.map(n => n -> getTable(n)).toMap
+  }
+
+  /** Build every table's delta and stage it under `_txn/<id>/<table>/`
+    * — invisible to every reader — then return the record of each
+    * table's op_seq transition. The caller holds every table's lock and
+    * marker, so one meta read per table serves the whole step. A failing
+    * op or CHECK violation aborts here with nothing visible anywhere. */
+  private[core] def stage(id: String, txns: Map[String, Txn]): TxnRecord = {
+    val names = txns.keys.toList.sorted
+    val (expected, next) = names.map { n =>
+      val meta = readMeta(n)
+      val after = txns(n).commit(getTable(n))
+      validateConstraints(n, meta, after.delta)
+      // through lineageWriter: the staged files RENAME into the tail at
+      // roll-forward, so layout options (bloom filters) must be baked
+      // in at the stage write — the rename can't add them later
+      after.delta.foreach(d => lineageWriter(d, meta)
+        .mode(SaveMode.Append)
+        .parquet(new Path(new Path(txnRoot, id), n).toString))
+      (meta.opSeq, after.opSeq)
+    }.unzip
+    TxnRecord(tables = names, expected = expected, next = next)
   }
 
   /**
@@ -3865,17 +3871,7 @@ object Catalog {
       // stage EVERY catalog's deltas before anything is visible; a
       // failing op or CHECK violation aborts here with nothing written
       val staged = sorted.map { case (c, m) =>
-        val names = m.keys.toList.sorted
-        val expected = names.map(n => c.readMeta(n).opSeq)
-        val next = names.map { n =>
-          val after = m(n).commit(c.getTable(n))
-          c.validateConstraints(n, c.readMeta(n), after.delta)
-          after.delta.foreach(d => c.lineageWriter(d, c.readMeta(n))
-            .mode(SaveMode.Append)
-            .parquet(new Path(new Path(c.txnRoot, gid), n).toString))
-          after.opSeq
-        }
-        (c, TxnRecord(Some(coord.rootUri), names, expected, next))
+        (c, c.stage(gid, m).copy(coordinator = Some(coord.rootUri)))
       }
       coord.crashPoint("across-staged")
       // durable intentions: each participant records its share + the

@@ -2331,10 +2331,10 @@ object CoreQueries {
 
     // ASOF JOIN (r14, GraftSql.runAsofJoin — the DuckDB/kdb syntax in
     // the front door): each event joined to the SAME USER's latest
-    // strictly-earlier event. The desugar rewrites to a correlated
-    // LATERAL ORDER BY..LIMIT 1, which Catalyst decorrelates to the
-    // join + WindowGroupLimit plan (the q_lateral shape) — one shuffle,
-    // never a per-row loop. INNER semantics: a user's first event has
+    // strictly-earlier event. The desugar rewrites to an equi-joined
+    // domain with a row_number() = 1 pick per key (PlanAuditSpec pins
+    // hash/sort-merge joins + WindowGroupLimit) — never a per-row loop
+    // or a nested-loop join. INNER semantics: a user's first event has
     // no prior and drops, exactly DuckDB's default. The oracle is the
     // SAME statement — DuckDB speaks ASOF JOIN natively. (ts stays out
     // of the projection: the engine reads it as canonical nanos, the

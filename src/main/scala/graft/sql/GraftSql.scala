@@ -5,11 +5,13 @@ import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedNamespace, UnresolvedRelation, UnresolvedStar, UnresolvedTableOrView}
 import org.apache.spark.sql.catalyst.expressions.{CheckConstraint, EqualNullSafe, EqualTo, Expression, SubqueryExpression}
+import org.apache.spark.sql.catalyst.parser.SqlBaseLexer
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.graft.Bridge
 
 import graft.core.{Catalog, LineageTable, Txn}
+import graft.sql.GraftSql.Lexed
 
 /**
  * SQL DML front door: `INSERT` / `UPDATE` / `DELETE` / `MERGE INTO` as
@@ -33,7 +35,11 @@ import graft.core.{Catalog, LineageTable, Txn}
  * function the session knows. Condition/assignment expressions are
  * re-based onto the engine's DataFrames by stripping their dangling
  * alias qualifiers — the engine evaluates them against the same columns
- * the SQL names.
+ * the SQL names. The four forms Spark's grammar lacks (UPDATE … FROM,
+ * DELETE … USING, QUALIFY, ASOF JOIN) and BEGIN/COMMIT/ROLLBACK are
+ * read from the token stream of Spark's own `SqlBaseLexer`, lexed once
+ * per statement ([[GraftSql.Lexed]]) — no second lexer, no regex over
+ * statement text.
  *
  * Scale: the translation is pure plan surgery on the driver; every
  * statement executes as the SAME distributed op the Column API builds
@@ -101,17 +107,16 @@ class GraftSql(val spark: SparkSession) {
   /** `BEGIN` / `COMMIT` / `ROLLBACK` recognized as bare control
     * statements. Spark's grammar has no session-transaction statements
     * (its BEGIN opens a SQL-scripting compound block), so these three
-    * keywords are matched directly — the one bounded departure from the
-    * no-second-grammar rule, three tokens deep. */
-  private def txnControl(statement: String): Option[String] = {
-    val s = statement.trim.stripSuffix(";").trim.toUpperCase
-    s match {
+    * keywords are matched on the statement's tokens — the one bounded
+    * departure from the no-second-grammar rule, two tokens deep. */
+  private def txnControl(lx: Lexed): Option[String] =
+    if (lx.size > 2) None
+    else lx.toks.map(_.text.toUpperCase).mkString(" ") match {
       case "BEGIN" | "BEGIN TRANSACTION" | "START TRANSACTION" => Some("BEGIN")
       case "COMMIT" => Some("COMMIT")
       case "ROLLBACK" | "ABORT" => Some("ROLLBACK")
       case _ => None
     }
-  }
 
   /**
    * SQL multi-statement transactions: `BEGIN; <DML>...; COMMIT` maps the
@@ -238,32 +243,29 @@ class GraftSql(val spark: SparkSession) {
     * kept registered, so SELECTs over registered tables just work).
     * Inside BEGIN..COMMIT, DML accumulates instead (see
     * [[runTxnControl]]). */
-  def sql(statement: String): DataFrame = txnControl(statement) match {
-    case Some(op) => runTxnControl(op)
-    case None => sqlParsed(statement)
+  def sql(statement: String): DataFrame = {
+    val lx = new Lexed(statement)
+    txnControl(lx) match {
+      case Some(op) => runTxnControl(op)
+      case None => sqlParsed(statement, lx)
+    }
   }
 
-  private def sqlParsed(statement: String): DataFrame = {
+  private def sqlParsed(statement: String, lx: Lexed): DataFrame = {
     // QUALIFY is not in Spark's grammar either — and its failure mode is
     // worse than a ParseException (the keyword can parse as a table
     // alias and fail later with a misleading error), so the desugar is
-    // probed FIRST on a cheap top-level keyword scan
-    runQualify(statement) match {
-      case Some(df) => return df
-      case None => ()
-    }
-    runAsofJoin(statement) match {
-      case Some(df) => return df
-      case None => ()
-    }
+    // probed FIRST; so is ASOF JOIN, which parses with ASOF as an alias
+    val desugared = runQualify(lx).orElse(runAsofJoin(lx))
+    if (desugared.isDefined) return desugared.get
     // UPDATE ... FROM is not in Spark's grammar: when the parser rejects
     // an UPDATE statement, try the join-update desugar before giving up
     val plan =
       try Bridge.parsePlan(spark, statement)
       catch {
         case e: org.apache.spark.sql.catalyst.parser.ParseException =>
-          return runUpdateFrom(statement)
-            .orElse(runDeleteUsing(statement)).getOrElse(throw e)
+          return runUpdateFrom(lx)
+            .orElse(runDeleteUsing(lx)).getOrElse(throw e)
       }
     sqlPlanned(statement, plan)
   }
@@ -273,10 +275,10 @@ class GraftSql(val spark: SparkSession) {
    * the Postgres/T-SQL join-update, desugared onto the engine merge
    * (the first DML shape a Delta user types that MERGE-only front doors
    * reject). Spark's grammar has no FROM clause on UPDATE, so the front
-   * door rewrites the TEXT into one source SELECT — every target column,
-   * with the SET expressions substituted — inner-joined to the source on
-   * the WHERE condition, and feeds it to the same [[Txn.mergeInto]] the
-   * MERGE path uses:
+   * door rewrites the statement's tokens into one source SELECT — every
+   * target column, with the SET expressions substituted — inner-joined
+   * to the source on the WHERE condition, and feeds it to the same
+   * [[Txn.mergeInto]] the MERGE path uses:
    *   - only matched target rows appear in the merge source (inner
    *     join against the snapshot view), so nothing inserts and
    *     unmatched target rows are untouched — UPDATE semantics exactly;
@@ -291,67 +293,57 @@ class GraftSql(val spark: SparkSession) {
    * merge, one `_ver` stamp, and inside BEGIN..COMMIT it stashes like
    * every other DML.
    */
-  private def runUpdateFrom(statement: String): Option[DataFrame] = {
-    // head regex pins target + optional alias; FROM and WHERE are then
-    // located at TOP LEVEL (a subquery source carries its own FROM/WHERE
-    // inside parentheses — a flat regex would split there)
-    val head = """(?is)^\s*UPDATE\s+(\w+)(?:\s+AS\s+(\w+)|\s+(?!SET\b)(\w+))?\s+SET\s""".r
-    head.findFirstMatchIn(statement) match {
-      case Some(m) if isRegistered(m.group(1)) =>
-        val tName = m.group(1)
-        val rest = statement.substring(m.end).stripSuffix(";")
-        val iFrom = topLevelKeyword(rest, "FROM")
-        if (iFrom < 0) return None
-        val afterFrom = rest.substring(iFrom + 4)
-        val iWhere = topLevelKeyword(afterFrom, "WHERE")
-        if (iWhere < 0) return None
-        val sets = rest.substring(0, iFrom)
-        val fromText = afterFrom.substring(0, iWhere)
-        val cond = afterFrom.substring(iWhere + 5)
-        val t = table(tName)
-        val tAlias = Option(m.group(2)).orElse(Option(m.group(3)))
-          .getOrElse(tName)
-        // split the SET list on TOP-LEVEL commas (commas inside
-        // parentheses or string literals belong to the expressions)
-        val assigns = splitTopLevel(sets, ',').map { s0 =>
-          val s = s0.trim
-          val i = topLevelIndexOf(s, '=')
-          require(i > 0, s"graft SQL UPDATE FROM: malformed assignment '$s'")
-          val tgt = s.substring(0, i).trim.split("\\.").last
-            .stripPrefix("`").stripSuffix("`")
-          require(t.dataCols.contains(tgt) && tgt != t.keyCol,
-            s"graft SQL UPDATE FROM: SET target must be a non-key data " +
-              s"column of '$tName', got '$tgt'")
-          tgt -> s.substring(i + 1).trim
-        }
-        require(assigns.map(_._1).distinct.size == assigns.size,
-          "graft SQL UPDATE FROM: a column is SET twice")
-        // one source row per matched target row: every data column, SET
-        // expressions substituted in place (both sides in scope)
-        val selects = t.dataCols.map { c =>
-          assigns.find(_._1 == c)
-            .map { case (_, e) => s"($e) AS `$c`" }
-            .getOrElse(s"`$tAlias`.`$c` AS `$c`")
-        }
-        val src = spark.sql(s"SELECT ${selects.mkString(", ")} " +
-          s"FROM `$tName` AS `$tAlias` JOIN $fromText ON ($cond)")
-        // Delta cardinality rule, checked EAGERLY: a session table's
-        // merge is lazy (nothing executes until the next snapshot
-        // read), so relying on the engine's distributed raise_error
-        // alone would defer the rejection to an arbitrary later read —
-        // and leave the table poisoned. One |source|-priced count here
-        // keeps the statement all-or-nothing; the engine's own guard
-        // still rides the merge for the durable path.
-        val dup = src.groupBy(col(t.keyCol)).count()
-          .where(col("count") > 1).limit(1).collect()
-        if (dup.nonEmpty) throw new IllegalArgumentException(
-          s"graft SQL UPDATE FROM: target row with key " +
-            s"'${dup.head.get(0)}' matched more than one source row — " +
-            "aggregate or deduplicate the FROM source so each target " +
-            "row matches at most once (the Delta cardinality rule)")
-        Some(apply(tName, Txn.empty.mergeInto(src, assigns.map(_._1))))
-      case _ => None
+  private def runUpdateFrom(lx: Lexed): Option[DataFrame] = for {
+    // target + optional alias, then FROM and WHERE at depth 0 (a
+    // subquery source carries its own FROM/WHERE inside parentheses)
+    (tName, alias, iSet) <-
+      if (lx.is(0, "UPDATE")) lx.named(1, "SET") else None
+    if isRegistered(tName)
+    iFrom <- lx.find(iSet)(lx.is(_, "FROM"))
+    iWhere <- lx.find(iFrom + 1)(lx.is(_, "WHERE"))
+  } yield {
+    val t = table(tName)
+    val tAlias = alias.getOrElse(tName)
+    // split the SET list on depth-0 commas (commas inside parentheses
+    // or string literals belong to the expressions)
+    val assigns = lx.split(iSet, iFrom)(lx.kind(_) == SqlBaseLexer.COMMA)
+      .map { case (a, b) =>
+        val eq = lx.find(a, b)(lx.kind(_) == SqlBaseLexer.EQ).getOrElse(a)
+        require(eq > a,
+          s"graft SQL UPDATE FROM: malformed assignment '${lx.slice(a, b)}'")
+        val c = lx.toks(eq - 1).name
+        require(t.dataCols.contains(c) && c != t.keyCol,
+          s"graft SQL UPDATE FROM: SET target must be a non-key data " +
+            s"column of '$tName', got '$c'")
+        c -> lx.slice(eq + 1, b)
+      }
+    require(assigns.map(_._1).distinct.size == assigns.size,
+      "graft SQL UPDATE FROM: a column is SET twice")
+    // one source row per matched target row: every data column, SET
+    // expressions substituted in place (both sides in scope)
+    val selects = t.dataCols.map { c =>
+      assigns.find(_._1 == c)
+        .map { case (_, e) => s"($e) AS `$c`" }
+        .getOrElse(s"`$tAlias`.`$c` AS `$c`")
     }
+    val src = spark.sql(s"SELECT ${selects.mkString(", ")} " +
+      s"FROM `$tName` AS `$tAlias` JOIN ${lx.slice(iFrom + 1, iWhere)} " +
+      s"ON (${lx.slice(iWhere + 1, lx.size)})")
+    // Delta cardinality rule, checked EAGERLY: a session table's
+    // merge is lazy (nothing executes until the next snapshot
+    // read), so relying on the engine's distributed raise_error
+    // alone would defer the rejection to an arbitrary later read —
+    // and leave the table poisoned. One |source|-priced count here
+    // keeps the statement all-or-nothing; the engine's own guard
+    // still rides the merge for the durable path.
+    val dup = src.groupBy(col(t.keyCol)).count()
+      .where(col("count") > 1).limit(1).collect()
+    if (dup.nonEmpty) throw new IllegalArgumentException(
+      s"graft SQL UPDATE FROM: target row with key " +
+        s"'${dup.head.get(0)}' matched more than one source row — " +
+        "aggregate or deduplicate the FROM source so each target " +
+        "row matches at most once (the Delta cardinality rule)")
+    apply(tName, Txn.empty.mergeInto(src, assigns.map(_._1)))
   }
 
   /**
@@ -364,36 +356,31 @@ class GraftSql(val spark: SparkSession) {
    * statement, one `_ver` tombstone stamp, |matched|-priced; unmatched
    * target rows never appear in the source, nothing inserts.
    */
-  private def runDeleteUsing(statement: String): Option[DataFrame] = {
-    val head = """(?is)^\s*DELETE\s+FROM\s+(\w+)(?:\s+AS\s+(\w+)|\s+(?!USING\b)(\w+))?\s+USING\s""".r
-    head.findFirstMatchIn(statement) match {
-      case Some(m) if isRegistered(m.group(1)) =>
-        val tName = m.group(1)
-        val rest = statement.substring(m.end).stripSuffix(";")
-        val iWhere = topLevelKeyword(rest, "WHERE")
-        if (iWhere < 0) return None
-        val fromText = rest.substring(0, iWhere)
-        val cond = rest.substring(iWhere + 5)
-        val t = table(tName)
-        val tAlias = Option(m.group(2)).orElse(Option(m.group(3)))
-          .getOrElse(tName)
-        val selects = t.dataCols
-          .map(c => s"`$tAlias`.`$c` AS `$c`").mkString(", ")
-        val src = spark.sql(s"SELECT DISTINCT $selects " +
-          s"FROM `$tName` AS `$tAlias` JOIN $fromText ON ($cond)")
-        Some(apply(tName, Txn.empty.mergeInto(src,
-          t.dataCols.filterNot(_ == t.keyCol),
-          deleteWhen = Some(lit(true)))))
-      case _ => None
-    }
+  private def runDeleteUsing(lx: Lexed): Option[DataFrame] = for {
+    (tName, alias, iUsing) <-
+      if (lx.is(0, "DELETE") && lx.is(1, "FROM")) lx.named(2, "USING")
+      else None
+    if isRegistered(tName)
+    iWhere <- lx.find(iUsing)(lx.is(_, "WHERE"))
+  } yield {
+    val t = table(tName)
+    val tAlias = alias.getOrElse(tName)
+    val selects = t.dataCols
+      .map(c => s"`$tAlias`.`$c` AS `$c`").mkString(", ")
+    val src = spark.sql(s"SELECT DISTINCT $selects " +
+      s"FROM `$tName` AS `$tAlias` JOIN ${lx.slice(iUsing, iWhere)} " +
+      s"ON (${lx.slice(iWhere + 1, lx.size)})")
+    apply(tName, Txn.empty.mergeInto(src,
+      t.dataCols.filterNot(_ == t.keyCol),
+      deleteWhen = Some(lit(true))))
   }
 
   /**
    * `SELECT ... QUALIFY <pred> [ORDER BY ...] [LIMIT ...]` — the
    * window-filter clause (DuckDB/Snowflake/BigQuery/Teradata), absent
-   * from Spark's grammar. Desugared in TEXT onto plain Spark SQL with
-   * the clause's exact evaluation order (after windows and HAVING,
-   * before ORDER BY/LIMIT):
+   * from Spark's grammar. Desugared over the statement's tokens onto
+   * one plain Spark SQL statement with the clause's exact evaluation
+   * order (after windows and HAVING, before ORDER BY/LIMIT):
    *   - the predicate becomes one extra projected boolean column of the
    *     statement-without-QUALIFY (windows in the predicate evaluate in
    *     the same Window operator as the select list's own — Catalyst
@@ -402,75 +389,56 @@ class GraftSql(val spark: SparkSession) {
    *   - select-list aliases referenced by the predicate are substituted
    *     by their definitions (Spark's lateral column alias resolution
    *     refuses window expressions, so `QUALIFY rn <= 3` cannot lean on
-   *     it);
-   *   - the outer query filters on the flag and carries the trailing
-   *     ORDER BY/LIMIT.
-   * All clause locations are TOP-LEVEL scans ([[topLevelKeyword]]) — a
-   * subquery's own QUALIFY/ORDER/FROM inside parentheses never splits
-   * the outer statement. SELECT DISTINCT rejects loud: the flag column
-   * would change the distinct key set, and the clause's semantics over
-   * DISTINCT differ across dialects — not worth a silent guess.
+   *     it); only bare identifier tokens are aliases, never a string
+   *     literal or a qualified `x.rn`;
+   *   - that query becomes a derived table; the outer query filters on
+   *     the flag and carries the trailing ORDER BY/LIMIT, and a leading
+   *     WITH clause stays in front of it. No view is registered.
+   * Every clause location is a depth-0 token — a subquery's own
+   * QUALIFY/ORDER/FROM inside parentheses never splits the outer
+   * statement, and neither does a keyword inside a literal or comment.
+   * SELECT DISTINCT rejects loud: the flag column would change the
+   * distinct key set, and the clause's semantics over DISTINCT differ
+   * across dialects — not worth a silent guess.
    */
-  private def runQualify(statement: String): Option[DataFrame] = {
-    val s0 = statement.stripSuffix(";")
-    if (!"""(?is)^\s*(SELECT|WITH)\b""".r.pattern.matcher(s0).find())
-      return None
-    val iQ = topLevelKeyword(s0, "QUALIFY")
-    if (iQ < 0) return None
-    val head = s0.substring(0, iQ)
-    val tail = s0.substring(iQ + "QUALIFY".length)
-    val cut = Seq(topLevelKeyword(tail, "ORDER"),
-        topLevelKeyword(tail, "LIMIT"))
-      .filter(_ >= 0).minOption.getOrElse(tail.length)
-    val pred0 = tail.substring(0, cut).trim
-    require(pred0.nonEmpty, "graft SQL QUALIFY: empty predicate")
-    val suffix = tail.substring(cut)
-    // the outermost select list spans the top-level SELECT keyword to
-    // the top-level FROM (CTE bodies and subqueries are parenthesized)
-    val iSel = topLevelKeyword(head, "SELECT")
-    require(iSel >= 0, "graft SQL QUALIFY: no top-level SELECT")
-    val selEnd = iSel + "SELECT".length
-    require(!"""(?is)^\s*DISTINCT\b""".r.pattern.matcher(
-        head.substring(selEnd)).find(),
-      "graft SQL QUALIFY: QUALIFY with SELECT DISTINCT is not supported " +
-        "— filter in an outer query instead")
-    val iFrom = topLevelKeyword(head.substring(selEnd), "FROM")
-    require(iFrom >= 0, "graft SQL QUALIFY: no top-level FROM")
-    val selectList = head.substring(selEnd, selEnd + iFrom)
-    // alias → definition, for substitution in the predicate; only the
-    // explicit `expr AS alias` form defines one (a trailing `AS x`
-    // inside parentheses — CAST(y AS INT) — fails the word-only match)
-    val aliasRe = """(?is)^(.*\S)\s+AS\s+`?(\w+)`?\s*$""".r
-    val aliases: Map[String, String] = splitTopLevel(selectList, ',')
-      .flatMap { item =>
-        aliasRe.findFirstMatchIn(item.trim)
-          .map(m => m.group(2).toLowerCase -> m.group(1).trim)
-      }.toMap
-    val pred =
-      if (aliases.isEmpty) pred0
-      else {
-        val pat = ("(?i)\\b(" + aliases.keys
-          .map(java.util.regex.Pattern.quote).mkString("|") + ")\\b").r
-        pat.replaceAllIn(pred0, m =>
-          java.util.regex.Matcher.quoteReplacement(
-            aliases.get(m.group(1).toLowerCase)
-              .map(d => s"($d)").getOrElse(m.group(1))))
+  private def runQualify(lx: Lexed): Option[DataFrame] =
+    lx.find(0)(lx.is(_, "QUALIFY")).filter(_ => lx.isQuery).map { iQ =>
+      val cut = lx.find(iQ + 1)(i => lx.is(i, "ORDER") || lx.is(i, "LIMIT"))
+        .getOrElse(lx.size)
+      require(cut > iQ + 1, "graft SQL QUALIFY: empty predicate")
+      // the outermost select list spans the depth-0 SELECT to the
+      // depth-0 FROM (CTE bodies and subqueries are parenthesized)
+      val iSel = lx.find(0, iQ)(lx.is(_, "SELECT")).getOrElse(-1)
+      require(iSel >= 0, "graft SQL QUALIFY: no top-level SELECT")
+      require(!lx.is(iSel + 1, "DISTINCT"),
+        "graft SQL QUALIFY: QUALIFY with SELECT DISTINCT is not supported " +
+          "— filter in an outer query instead")
+      val iFrom = lx.find(iSel + 1, iQ)(lx.is(_, "FROM")).getOrElse(-1)
+      require(iFrom >= 0, "graft SQL QUALIFY: no top-level FROM")
+      // alias → definition; only the explicit `expr AS alias` form
+      // defines one (CAST(y AS INT)'s AS sits inside parentheses)
+      val aliases = lx.split(iSel + 1, iFrom)(lx.kind(_) == SqlBaseLexer.COMMA)
+        .collect { case (a, b) if b - a > 2 && lx.is(b - 2, "AS") &&
+            lx.ident(b - 1) =>
+          lx.toks(b - 1).name.toLowerCase -> lx.slice(a, b - 2)
+        }.toMap
+      val pred = lx.rewrite(iQ + 1, cut) { i =>
+        if (!lx.ident(i) || lx.qualified(i)) None
+        else aliases.get(lx.toks(i).name.toLowerCase).map(d => (s"($d)", 1))
       }
-    val inner = head.substring(0, selEnd + iFrom) +
-      s", ($pred) AS __qualify " + head.substring(selEnd + iFrom)
-    spark.sql(inner).createOrReplaceTempView("__graft_qualify_src")
-    Some(spark
-      .sql(s"SELECT * FROM __graft_qualify_src WHERE __qualify $suffix")
-      .drop("__qualify"))
-  }
+      val inner = s"${lx.slice(iSel, iFrom)}, ($pred) AS __qualify " +
+        lx.slice(iFrom, iQ)
+      spark.sql(s"${lx.slice(0, iSel)} SELECT * FROM ($inner) " +
+        s"WHERE __qualify ${lx.slice(cut, lx.size)}").drop("__qualify")
+    }
 
   /**
    * `FROM a ASOF JOIN b ON a.k = b.k AND a.ts > b.ts` — the
    * DuckDB/kdb as-of join in the front door (Spark's grammar has no
-   * ASOF). Desugared onto a correlated LATERAL `ORDER BY .. LIMIT 1`
-   * subquery — Catalyst DECORRELATES that to the join + per-key rank
-   * plan (the q_lateral shape), so the executed plan is one shuffle
-   * join + WindowGroupLimit, never a per-row loop. Semantics matched
+   * ASOF). Desugared onto an equi-joined domain with a per-key
+   * `row_number() = 1` pick (the shape is explained in the body), so the
+   * executed plan is shuffle joins + WindowGroupLimit, never a per-row
+   * loop or a nested-loop join. Semantics matched
    * to DuckDB's default: INNER (a left row with no match drops), the
    * picked row is the extreme of the b-side inequality expression —
    * latest-at-or-before for a backward join (`a.ts >= b.ts`), earliest
@@ -481,161 +449,87 @@ class GraftSql(val spark: SparkSession) {
    * b-side expression are unspecified in DuckDB too — fixtures must be
    * tie-free.
    */
-  private def runAsofJoin(statement: String): Option[DataFrame] = {
-    val s0 = statement.stripSuffix(";")
-    if (!"""(?is)^\s*(SELECT|WITH)\b""".r.pattern.matcher(s0).find())
-      return None
-    // probe for the two-word ASOF JOIN sequence, not the bare word —
-    // `'v0' AS asof` is a legal column alias (the r14 full sweep caught
-    // exactly that collision in sql_asof's time-travel statement)
-    var iA = topLevelKeyword(s0, "ASOF")
-    var isJoin = false
-    while (iA >= 0 && !isJoin) {
-      if ("""(?is)^\s+JOIN\b""".r.pattern
-          .matcher(s0.substring(iA + "ASOF".length)).find()) isJoin = true
-      else {
-        val nxt = topLevelKeyword(s0.substring(iA + "ASOF".length), "ASOF")
-        iA = if (nxt < 0) -1 else iA + "ASOF".length + nxt
+  private def runAsofJoin(lx: Lexed): Option[DataFrame] =
+    // the two-word ASOF JOIN sequence, not the bare word — `'v0' AS
+    // asof` is a legal column alias (the r14 full sweep caught exactly
+    // that collision in sql_asof's time-travel statement)
+    lx.find(0)(i => lx.is(i, "ASOF") && lx.is(i + 1, "JOIN"))
+      .filter(_ => lx.isQuery).map { iA =>
+      // FROM <t1> [AS] <a1> ASOF JOIN <t2> [AS] <a2> ON
+      val left = Seq(iA - 4, iA - 3).filter(lx.is(_, "FROM")).flatMap { f =>
+        lx.named(f + 1, "ASOF").collect {
+          case (t, Some(a), next) if next == iA + 1 => (f, t, a) }
+      }.headOption
+      val right = lx.named(iA + 2, "ON").collect {
+        case (t, Some(a), next) => (t, a, next) }
+      val ((iFrom, t1, a1), (t2, a2, iOn)) = left.zip(right).getOrElse(
+        throw new IllegalArgumentException("graft SQL ASOF JOIN: supported " +
+          "form is FROM <table> <alias> ASOF JOIN <table> <alias> ON " +
+          "<equalities AND one inequality>"))
+      val onEnd = lx.find(iOn)(i => Seq("WHERE", "GROUP", "HAVING", "ORDER",
+          "LIMIT", "QUALIFY", "UNION").exists(lx.is(i, _)))
+        .getOrElse(lx.size)
+      val (ge, le) = (Seq(SqlBaseLexer.GT, SqlBaseLexer.GTE),
+        Seq(SqlBaseLexer.LT, SqlBaseLexer.LTE))
+      val ineqs = lx.split(iOn, onEnd)(lx.is(_, "AND")).flatMap { case (a, b) =>
+        lx.find(a, b)(i => (ge ++ le).contains(lx.kind(i))).map(op => (a, op, b))
       }
-    }
-    if (!isJoin) return None
-    val head = """(?is)\bFROM\s+(\w+)\s+(?:AS\s+)?(\w+)\s+ASOF\s+JOIN\s+(\w+)\s+(?:AS\s+)?(\w+)\s+ON\s""".r
-    val m = head.findFirstMatchIn(s0).getOrElse(
-      throw new IllegalArgumentException("graft SQL ASOF JOIN: supported " +
-        "form is FROM <table> <alias> ASOF JOIN <table> <alias> ON " +
-        "<equalities AND one inequality>"))
-    val (t2, a2) = (m.group(3), m.group(4))
-    val rest = s0.substring(m.end)
-    val onEnd = Seq("WHERE", "GROUP", "HAVING", "ORDER", "LIMIT",
-        "QUALIFY", "UNION")
-      .map(k => topLevelKeyword(rest, k)).filter(_ >= 0)
-      .minOption.getOrElse(rest.length)
-    val cond = rest.substring(0, onEnd).trim
-    val afterOn = rest.substring(onEnd)
-    def conjuncts(s: String): Seq[String] = {
-      val i = topLevelKeyword(s, "AND")
-      if (i < 0) Seq(s.trim)
-      else s.substring(0, i).trim +: conjuncts(s.substring(i + 3))
-    }
-    val cs = conjuncts(cond)
-    val ineqRe = """(?s)^(.*?)(>=|<=|>|<)(.*)$""".r
-    val (ineqs, _) = cs.partition(c => ineqRe.findFirstMatchIn(c).isDefined)
-    require(ineqs.size == 1, "graft SQL ASOF JOIN: the ON condition " +
-      s"needs exactly ONE inequality (got ${ineqs.size}) — equalities " +
-      "pick the key, the inequality picks the as-of direction")
-    val im = ineqRe.findFirstMatchIn(ineqs.head).get
-    val (lhs, op, rhs) = (im.group(1).trim, im.group(2), im.group(3).trim)
-    def bRef(s: String) =
-      s"""(?i)\\b${java.util.regex.Pattern.quote(a2)}\\.""".r
-        .findFirstIn(s).isDefined
-    val (bExpr, backward) =
-      if (bRef(rhs) && !bRef(lhs)) (rhs, op == ">" || op == ">=")
-      else if (bRef(lhs) && !bRef(rhs)) (lhs, op == "<" || op == "<=")
-      else throw new IllegalArgumentException("graft SQL ASOF JOIN: the " +
-        "inequality must compare a left-side expression to a " +
-        s"'$a2'-side expression")
-    val dir = if (backward) "DESC" else "ASC"
-    // Desugar to the engine's own asof shape (q_asof_join /
-    // OlapQueries.rankValue): a DISTINCT domain over the LEFT columns
-    // the ON references, EQUI-joined to the right side (the equalities
-    // become hash-join keys; the one inequality rides as the join
-    // filter), one row_number()=1 pick per domain tuple, then an equi
-    // JOIN-BACK to the left table. The r14.0 correlated-LATERAL
-    // spelling handed Catalyst's decorrelation only the INEQUALITY for
-    // its domain join — a BroadcastNestedLoopJoin of |distinct ts| ×
-    // |right| (~5·10⁹ rows at sf0.1, 28 GB of sort spill, unfinishable;
-    // plans/r14/sql_asof_join_before.txt) — while this spelling keeps
-    // every equality in an Exchange-keyed join, so the pair explosion
-    // is bounded per key group, the shape that scales. The pick rule
-    // (ORDER BY <right expr> DESC/ASC, first row) is unchanged.
-    val a1 = m.group(2)
-    // left columns the ON condition references, in first-use order
-    val leftRefRe = s"""(?i)\\b${java.util.regex.Pattern.quote(a1)}\\.(\\w+)""".r
-    val leftCols = leftRefRe.findAllMatchIn(cond).map(_.group(1))
-      .toSeq.distinct
-    require(leftCols.nonEmpty, "graft SQL ASOF JOIN: the ON condition " +
-      s"references no '$a1'-side columns")
-    val domCols = leftCols.zipWithIndex
-      .map { case (c, i) => s"`$a1`.`$c` AS __asof_k$i" }.mkString(", ")
-    // rewrite a.<col> -> __dl.__asof_k<i> inside the ON condition
-    val condDl = leftCols.zipWithIndex.foldLeft(cond) { case (s, (c, i)) =>
-      s.replaceAll(s"(?i)\\b${java.util.regex.Pattern.quote(a1)}\\.$c\\b",
-        s"__dl.__asof_k$i")
-    }
-    val joinBack = leftCols.zipWithIndex
-      .map { case (c, i) => s"`$a1`.`$c` = `$a2`.__asof_k$i" }
-      .mkString(" AND ")
-    val partBy = leftCols.indices.map(i => s"__dl.__asof_k$i").mkString(", ")
-    val rewritten = s0.substring(0, m.start) +
-      s"FROM `${m.group(1)}` `$a1` JOIN (" +
-      s"SELECT * FROM (" +
-      s"SELECT __dl.*, `$a2`.*, row_number() OVER (" +
-      s"PARTITION BY $partBy ORDER BY $bExpr $dir) AS __asof_rn " +
-      s"FROM (SELECT DISTINCT $domCols FROM `${m.group(1)}` `$a1`) __dl " +
-      s"JOIN `$t2` `$a2` ON $condDl" +
-      s") WHERE __asof_rn = 1" +
-      s") `$a2` ON $joinBack " + afterOn
-    Some(spark.sql(rewritten))
-  }
-
-  /** Split on a top-level separator: parenthesis depth 0, outside
-    * single-quoted strings and backtick identifiers. */
-  private def splitTopLevel(s: String, sep: Char): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var depth = 0; var inStr = false; var inTick = false; var start = 0
-    var i = 0
-    while (i < s.length) {
-      val ch = s.charAt(i)
-      if (inStr) { if (ch == '\'') inStr = false }
-      else if (inTick) { if (ch == '`') inTick = false }
-      else ch match {
-        case '\'' => inStr = true
-        case '`' => inTick = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case c if c == sep && depth == 0 =>
-          out += s.substring(start, i); start = i + 1
-        case _ => ()
+      require(ineqs.size == 1, "graft SQL ASOF JOIN: the ON condition " +
+        s"needs exactly ONE inequality (got ${ineqs.size}) — equalities " +
+        "pick the key, the inequality picks the as-of direction")
+      val (lo, op, hi) = ineqs.head
+      def bRef(from: Int, until: Int) = (from until until).exists(lx.ref(_, a2))
+      val (bExpr, backward) =
+        if (bRef(op + 1, hi) && !bRef(lo, op))
+          (lx.slice(op + 1, hi), ge.contains(lx.kind(op)))
+        else if (bRef(lo, op) && !bRef(op + 1, hi))
+          (lx.slice(lo, op), le.contains(lx.kind(op)))
+        else throw new IllegalArgumentException("graft SQL ASOF JOIN: the " +
+          "inequality must compare a left-side expression to a " +
+          s"'$a2'-side expression")
+      val dir = if (backward) "DESC" else "ASC"
+      // Desugar to the engine's own asof shape (q_asof_join /
+      // OlapQueries.rankValue): a DISTINCT domain over the LEFT columns
+      // the ON references, EQUI-joined to the right side (the equalities
+      // become hash-join keys; the one inequality rides as the join
+      // filter), one row_number()=1 pick per domain tuple, then an equi
+      // JOIN-BACK to the left table. The r14.0 correlated-LATERAL
+      // spelling handed Catalyst's decorrelation only the INEQUALITY for
+      // its domain join — a BroadcastNestedLoopJoin of |distinct ts| ×
+      // |right| (~5·10⁹ rows at sf0.1, 28 GB of sort spill, unfinishable;
+      // plans/r14/sql_asof_join_before.txt) — while this spelling keeps
+      // every equality in an Exchange-keyed join, so the pair explosion
+      // is bounded per key group, the shape that scales. The pick rule
+      // (ORDER BY <right expr> DESC/ASC, first row) is unchanged.
+      def leftRef(i: Int) = lx.ref(i, a1) && lx.ident(i + 2)
+      // left columns the ON condition references, in first-use order
+      val leftCols = (iOn until onEnd).filter(leftRef)
+        .map(i => lx.toks(i + 2).name).distinctBy(_.toLowerCase)
+      require(leftCols.nonEmpty, "graft SQL ASOF JOIN: the ON condition " +
+        s"references no '$a1'-side columns")
+      val slot = leftCols.map(_.toLowerCase).zipWithIndex.toMap
+      val domCols = leftCols.zipWithIndex
+        .map { case (c, i) => s"`$a1`.`$c` AS __asof_k$i" }
+        .mkString(", ")
+      // rewrite a.<col> -> __dl.__asof_k<i> inside the ON condition
+      val condDl = lx.rewrite(iOn, onEnd) { i =>
+        Option.when(leftRef(i))(
+          (s"__dl.__asof_k${slot(lx.toks(i + 2).name.toLowerCase)}", 3))
       }
-      i += 1
+      val joinBack = leftCols.zipWithIndex
+        .map { case (c, i) => s"`$a1`.`$c` = `$a2`.__asof_k$i" }
+        .mkString(" AND ")
+      val partBy = leftCols.indices.map(i => s"__dl.__asof_k$i").mkString(", ")
+      spark.sql(lx.slice(0, iFrom) +
+        s" FROM `$t1` `$a1` JOIN (" +
+        s"SELECT * FROM (" +
+        s"SELECT __dl.*, `$a2`.*, row_number() OVER (" +
+        s"PARTITION BY $partBy ORDER BY $bExpr $dir) AS __asof_rn " +
+        s"FROM (SELECT DISTINCT $domCols FROM `$t1` `$a1`) __dl " +
+        s"JOIN `$t2` `$a2` ON $condDl" +
+        s") WHERE __asof_rn = 1" +
+        s") `$a2` ON $joinBack " + lx.slice(onEnd, lx.size))
     }
-    out += s.substring(start)
-    out.result()
-  }
-
-  private def topLevelIndexOf(s: String, ch: Char): Int = {
-    val parts = splitTopLevel(s, ch)
-    if (parts.size < 2) -1 else parts.head.length
-  }
-
-  /** First index of a word-bounded keyword at parenthesis depth 0,
-    * outside string literals and backtick identifiers; -1 if absent. */
-  private def topLevelKeyword(s: String, kw: String): Int = {
-    var depth = 0; var inStr = false; var inTick = false
-    var i = 0
-    while (i < s.length) {
-      val ch = s.charAt(i)
-      if (inStr) { if (ch == '\'') inStr = false }
-      else if (inTick) { if (ch == '`') inTick = false }
-      else ch match {
-        case '\'' => inStr = true
-        case '`' => inTick = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ =>
-          // '_' is an identifier character: `graft_qualify_orders` or
-          // `order_items` must never read as the QUALIFY/ORDER keyword
-          def ident(c: Char) = Character.isLetterOrDigit(c) || c == '_'
-          if (depth == 0 && s.regionMatches(true, i, kw, 0, kw.length) &&
-              (i == 0 || !ident(s.charAt(i - 1))) &&
-              (i + kw.length >= s.length ||
-                !ident(s.charAt(i + kw.length))))
-            return i
-      }
-      i += 1
-    }
-    -1
-  }
 
   private def sqlPlanned(statement: String, plan: LogicalPlan): DataFrame = plan match {
     case m: MergeIntoTable if targetOf(m.targetTable).exists(isRegistered) =>
@@ -2528,4 +2422,115 @@ class GraftSql(val spark: SparkSession) {
 
   private def refreshView(name: String): Unit =
     table(name).snapshot.createOrReplaceTempView(name)
+}
+
+private object GraftSql {
+  import org.antlr.v4.runtime.{CharStreams, Token}
+  import org.antlr.v4.runtime.misc.Interval
+
+  /** One default-channel token: its text, its code-point span
+    * [start, stop] in the statement, and its parenthesis depth (a
+    * parenthesis itself sits at the depth outside it). */
+  final case class Tok(kind: Int, text: String, start: Int, stop: Int,
+                       depth: Int) {
+    private def backquoted = kind == SqlBaseLexer.BACKQUOTED_IDENTIFIER
+    /** A name: a backquoted identifier or a bare word. Keywords count —
+      * without Spark's package-private upper-casing stream most of them
+      * lex as IDENTIFIER anyway, so words are matched by text. */
+    def ident: Boolean = backquoted ||
+      (text.head.isLetter || text.head == '_') &&
+        text.forall(c => c.isLetterOrDigit || c == '_')
+    def name: String =
+      if (backquoted) text.substring(1, text.length - 1).replace("``", "`")
+      else text
+  }
+
+  /** A statement as Spark's own `SqlBaseLexer` splits it: the
+    * default-channel tokens, without a trailing `;`. Comments and
+    * whitespace sit on the hidden channel; every string literal (`'…'`,
+    * `"…"`, `'it\'s'`) and backquoted identifier is one token. The
+    * desugars locate clauses by token index and cut the original text
+    * between token offsets, so a keyword inside a literal or a comment
+    * never splits a statement. */
+  final class Lexed(statement: String) {
+    private val input = CharStreams.fromString(statement)
+
+    val toks: IndexedSeq[Tok] = {
+      val lexer = new SqlBaseLexer(input)
+      lexer.removeErrorListeners()
+      val out = IndexedSeq.newBuilder[Tok]
+      var depth = 0
+      var t = lexer.nextToken()
+      while (t.getType != Token.EOF) {
+        if (t.getChannel == Token.DEFAULT_CHANNEL) {
+          if (t.getType == SqlBaseLexer.RIGHT_PAREN) depth -= 1
+          out += Tok(t.getType, t.getText, t.getStartIndex, t.getStopIndex,
+            depth)
+          if (t.getType == SqlBaseLexer.LEFT_PAREN) depth += 1
+        }
+        t = lexer.nextToken()
+      }
+      val all = out.result()
+      if (all.lastOption.exists(_.kind == SqlBaseLexer.SEMICOLON)) all.init
+      else all
+    }
+
+    def size: Int = toks.size
+    def kind(i: Int): Int =
+      if (i >= 0 && i < size) toks(i).kind else Token.INVALID_TYPE
+    def is(i: Int, word: String): Boolean =
+      i >= 0 && i < size && toks(i).text.equalsIgnoreCase(word)
+    def ident(i: Int): Boolean = i >= 0 && i < size && toks(i).ident
+    def isQuery: Boolean = is(0, "SELECT") || is(0, "WITH")
+    /** Token i is part of a dotted name (`x.rn`, `rn.x`). */
+    def qualified(i: Int): Boolean =
+      kind(i - 1) == SqlBaseLexer.DOT || kind(i + 1) == SqlBaseLexer.DOT
+    /** Token i opens a reference through `alias` (`alias.col`). */
+    def ref(i: Int, alias: String): Boolean = ident(i) &&
+      toks(i).name.equalsIgnoreCase(alias) &&
+      kind(i + 1) == SqlBaseLexer.DOT && kind(i - 1) != SqlBaseLexer.DOT
+
+    /** First depth-0 token index in [from, until) satisfying `p`. */
+    def find(from: Int, until: Int = size)(p: Int => Boolean): Option[Int] =
+      (from until until).find(i => toks(i).depth == 0 && p(i))
+
+    /** [from, until) cut at every depth-0 token satisfying `p`, as
+      * half-open token ranges without the separators. */
+    def split(from: Int, until: Int)(p: Int => Boolean): Seq[(Int, Int)] = {
+      val cuts = (from until until).filter(i => toks(i).depth == 0 && p(i))
+      (from +: cuts.map(_ + 1)).zip(cuts :+ until)
+    }
+
+    /** `<name> [[AS] <alias>] <word>` from token i: the name, the alias
+      * when one is given, and the index after `word`. */
+    def named(i: Int, word: String): Option[(String, Option[String], Int)] =
+      if (!ident(i)) None
+      else if (is(i + 1, word)) Some((toks(i).name, None, i + 2))
+      else {
+        val a = if (is(i + 1, "AS")) i + 2 else i + 1
+        if (ident(a) && is(a + 1, word))
+          Some((toks(i).name, Some(toks(a).name), a + 2))
+        else None
+      }
+
+    /** The statement text of tokens [from, until), comments inside the
+      * range kept, the hidden text around it dropped (so a trailing
+      * `-- comment` never swallows what a desugar appends). `sub(i)`
+      * may replace the tokens from i on: (replacement, tokens used). */
+    def rewrite(from: Int, until: Int)(
+        sub: Int => Option[(String, Int)]): String = {
+      val out = new StringBuilder
+      var i = from
+      while (i < until) {
+        if (i > from) out ++= input.getText(
+          Interval.of(toks(i - 1).stop + 1, toks(i).start - 1))
+        val (text, used) = sub(i).getOrElse((toks(i).text, 1))
+        out ++= text
+        i += used
+      }
+      out.result()
+    }
+
+    def slice(from: Int, until: Int): String = rewrite(from, until)(_ => None)
+  }
 }

@@ -64,12 +64,7 @@ object StreamOps {
     * cluster this is the Databricks-default large-state configuration;
     * locally it trades per-batch commit overhead for an O(disk) ceiling. */
   private def rocksSession(spark: SparkSession): SparkSession =
-    // spark.graft.stream.stateStore=memory keeps an opted-in operator on
-    // the in-memory store — the A/B lever that separates RocksDB commit
-    // overhead from the operator's own state cost (r13 bisect)
-    if (spark.conf.get("spark.graft.stream.stateStore", "rocksdb") == "memory")
-      streamSession(spark)
-    else rocksSessions.computeIfAbsent(spark, s => {
+    rocksSessions.computeIfAbsent(spark, s => {
       val clone = streamSession(s).newSession()
       clone.conf.set("spark.sql.shuffle.partitions",
         streamSession(s).conf.get("spark.sql.shuffle.partitions"))
@@ -80,12 +75,9 @@ object StreamOps {
       // upload as the dominant per-commit cost (session window at sf10:
       // 29.8s rocksdb-snapshot vs 12.6s in-memory store; the operator's
       // own state-merge cost is the memory number)
-      // spark.graft.stream.rocksdb.changelog=false is the A/B lever that
-      // re-enables full-snapshot uploads (r14: the per-query evidence
-      // table lives in SURVEY §5 — keep the conf only where it wins)
       clone.conf.set(
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        spark.conf.get("spark.graft.stream.rocksdb.changelog", "true"))
+        "true")
       // row-count tracking costs a RocksDB get per put (it only feeds the
       // numTotalStateRows metric) — the documented large-state tuning
       clone.conf.set(

@@ -14,6 +14,8 @@
 set -euo pipefail
 SF_DIR="${1:-/root/testdata/sf0.01}"
 OUT="${TMPDIR:-/tmp}/graft_full_gate_$(date +%s)"
+# one parquet dir per query: never leave a whole sweep behind
+trap 'rm -rf "$OUT"' EXIT
 cd "$(dirname "$0")/.."
 sbt -batch compile >/dev/null
 rm -rf "$OUT"
