@@ -159,6 +159,14 @@ final class Catalog(spark: SparkSession, warehouse: String,
     * swap), so a healthy writer releases in seconds. */
   private val markerLeaseMs: Long = 15 * 60 * 1000
 
+  private def markerPath(name: String) = new Path(dir(name), "_commit.lock")
+
+  /** True while `name`'s marker exists and is younger than the lease. */
+  private def markerLive(name: String): Boolean =
+    try System.currentTimeMillis() -
+      fs.getFileStatus(markerPath(name)).getModificationTime <= markerLeaseMs
+    catch { case _: java.io.FileNotFoundException => false }
+
   /**
    * CROSS-PROCESS commit exclusion — the FS-level half of the
    * concurrency model (the JVM lock above linearizes threads; this
@@ -181,7 +189,7 @@ final class Catalog(spark: SparkSession, warehouse: String,
    */
   private def withCommitMarker[A](name: String)(body: => A): A = {
     if (markerHeld.get.contains(name)) return body
-    val marker = new Path(dir(name), "_commit.lock")
+    val marker = markerPath(name)
     def tryCreate(): Boolean =
       try {
         val pid = java.lang.management.ManagementFactory
@@ -205,13 +213,8 @@ final class Catalog(spark: SparkSession, warehouse: String,
           true
         }
       } catch { case _: java.io.IOException => false }
-    val acquired = tryCreate() || {
-      val stale =
-        try System.currentTimeMillis() -
-          fs.getFileStatus(marker).getModificationTime > markerLeaseMs
-        catch { case _: java.io.FileNotFoundException => true }
-      stale && { fs.delete(marker, false); tryCreate() }
-    }
+    val acquired = tryCreate() ||
+      (!markerLive(name) && { fs.delete(marker, false); tryCreate() })
     if (!acquired)
       throw new ConcurrentModificationException(
         s"$name: another process holds the commit marker")
@@ -968,12 +971,6 @@ final class Catalog(spark: SparkSession, warehouse: String,
       getTable(dst)
     }
 
-  /** The one writer every lineage data file goes through, carrying the
-    * table's physical-layout options: parquet bloom filters on the
-    * [[createBloomFilter]] columns (expected NDV from ANALYZE stats when
-    * present — an undersized bloom saturates and prunes nothing). The
-    * options are per-write, so tail appends, compactions and re-stamps
-    * all emit them and the layout survives every rewrite. */
   /** True when any schema evolution is in play (added, renamed or
     * dropped columns) — the flag that switches reads onto the
     * schema-merging, column-mapping path. */
@@ -989,6 +986,12 @@ final class Catalog(spark: SparkSession, warehouse: String,
       case _ => logical
     }
 
+  /** The one writer every lineage data file goes through, carrying the
+    * table's physical-layout options: parquet bloom filters on the
+    * [[createBloomFilter]] columns (expected NDV from ANALYZE stats when
+    * present — an undersized bloom saturates and prunes nothing). The
+    * options are per-write, so staged commits, compactions and re-stamps
+    * all emit them and the layout survives every rewrite. */
   private def lineageWriter(rows: org.apache.spark.sql.DataFrame,
                             meta: Meta): org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] = {
     // column mapping on the WRITE side: data files uniformly carry
@@ -1012,12 +1015,6 @@ final class Catalog(spark: SparkSession, warehouse: String,
     }
   }
 
-  /** Append new lineage rows to the table's tail (reference: tail-page
-    * append). Rows must carry the lineage schema (_ver/_del included). */
-  def appendTail(name: String, newRows: org.apache.spark.sql.DataFrame): Unit =
-    lineageWriter(newRows, readMeta(name)).mode(SaveMode.Append)
-      .parquet(new Path(dir(name), "tail").toString)
-
   /**
    * Apply a [[Txn]] to the stored table and make it durable, validating
    * the optimistic-concurrency guard (reference: lock-conflict abort,
@@ -1027,149 +1024,105 @@ final class Catalog(spark: SparkSession, warehouse: String,
    * was built against is stale and the commit aborts with Left — nothing
    * is written, the caller re-reads and retries. The rows the ops
    * appended — and ONLY those — are written to the tail. All-or-nothing:
-   * a failing op aborts before anything is written.
+   * a failing op aborts before anything is written, and the commit is
+   * [[commitMulti]]'s staged protocol for one table, so a crash at any
+   * point reopens to exactly the state before or after it.
    */
   def tryCommit(name: String, txn: Txn, expectedOpSeq: Long,
                 commitTs: Option[Long] = None,
                 streamBatch: Option[(String, Long)] = None): Either[Throwable, LineageTable] =
-    tryCommitMeta(name, txn, expectedOpSeq, commitTs, streamBatch, identity)
+    Try(commitOne(name, txn, Some(expectedOpSeq), commitTs, streamBatch)).toEither
 
-  /** [[tryCommit]] with a caller-supplied metadata tweak applied in the
-    * SAME atomic meta write as the commit — how a refresh records the
-    * source version it is current at ([[refreshMaterializedView]])
-    * without a second write a crash could separate from the commit. */
-  private def tryCommitMeta(name: String, txn: Txn, expectedOpSeq: Long,
-                commitTs: Option[Long],
-                streamBatch: Option[(String, Long)],
-                tweak: Meta => Meta): Either[Throwable, LineageTable] =
-    lock(name).synchronized {
-      Try { withCommitMarker(name) {
-        val meta = readMeta(name)
-        // Idempotent streaming apply (the Delta txn-appId/version
-        // pattern): a micro-batch records its (writer id, batch id) in
-        // the SAME meta write as its commit, so a foreachBatch RETRY of
-        // an already-applied batch (at-least-once delivery: a crash
-        // between the table commit and the checkpoint offset commit
-        // re-runs the batch) is detected here and skipped — without
-        // this, a re-applied delete-arm merge would resurrect its key
-        // through the not-matched insert arm.
-        val alreadyApplied = streamBatch.exists { case (app, bid) =>
-          meta.streamApps.zip(meta.streamBatches)
-            .exists { case (a, b) => a == app && b >= bid }
-        }
-        if (alreadyApplied) getTable(name)
-        else {
-          if (meta.opSeq != expectedOpSeq)
-            throw new ConcurrentModificationException(
-              s"$name: op_seq moved $expectedOpSeq -> ${meta.opSeq} " +
-                "since the transaction's base was loaded")
-          // the commit log must stay time-ordered or the asOfTimestamp
-          // lookup (last entry at-or-before ts) silently skips history —
-          // reject out-of-order stamps BEFORE anything is written
-          commitTs.foreach(ts => require(meta.commitTs.forall(_ <= ts),
-            s"$name: commit timestamp $ts precedes the log tail"))
-          val after = txn.commit(getTable(name))
-          // CHECK constraints gate the commit BEFORE anything is written
-          // — O(delta), one job (see validateConstraints)
-          validateConstraints(name, meta, after.delta)
-          // meta BEFORE rows: a crash between the two leaves op_seq advanced
-          // past the (absent) rows, so the next commit stamps a fresh _ver — a
-          // harmless gap. The reverse order would let a crash replay a _ver
-          // stamp onto different rows, making snapshot row_number ties
-          // nondeterministic forever. (The same crash leaves the commit-log
-          // entry addressing the absent rows: asOfTimestamp then reads the
-          // pre-crash state at that ts — consistent, just earlier. For a
-          // streaming batch the SAME crash window records the batch id with
-          // the absent rows — the retry is then skipped, losing that batch's
-          // changes but never corrupting: the documented trade matches the
-          // op_seq-gap rule, and the alternative order would double-apply.)
-          val logged = commitTs.fold(meta)(ts => meta.copy(
-            commitVers = meta.commitVers :+ after.opSeq,
-            commitTs = meta.commitTs :+ ts))
-          val stamped = streamBatch.fold(logged) { case (app, bid) =>
-            val i = logged.streamApps.indexOf(app)
-            val (apps, bids) =
-              if (i >= 0)
-                (logged.streamApps, logged.streamBatches.updated(i, bid))
-              else
-                ((logged.streamApps :+ app).takeRight(Catalog.maxStreamWriters),
-                 (logged.streamBatches :+ bid).takeRight(Catalog.maxStreamWriters))
+  /** [[tryCommit]], throwing on abort, whose CAS is optional — None
+    * commits against the state found under the lock — and whose `change`
+    * sets further meta fields, given the meta at the new op_seq: how a
+    * refresh records the source version it is current at
+    * ([[refreshMaterializedView]]). The record carries every such field,
+    * so a roll-forward writes what the live path writes. */
+  private def commitOne(name: String, txn: Txn, expectedOpSeq: Option[Long],
+                        commitTs: Option[Long] = None,
+                        streamBatch: Option[(String, Long)] = None,
+                        change: Meta => Meta = identity): LineageTable = {
+    // a pending record on this table lands first; recovery takes
+    // other tables' locks, so a caller already holding this table's
+    // (a view refresh) recovers before taking it
+    if (!Thread.holdsLock(lock(name))) recoverTxns()
+    lock(name).synchronized { withCommitMarker(name) {
+      val meta = readMeta(name)
+      // Idempotent streaming apply (the Delta txn-appId/version
+      // pattern): a micro-batch records its (writer id, batch id) in
+      // its commit's record, so a foreachBatch RETRY of an applied
+      // batch (at-least-once delivery: a crash between the table
+      // commit and the checkpoint offset commit re-runs the batch) is
+      // skipped here — without this, a re-applied delete-arm merge
+      // would resurrect its key through the not-matched insert arm.
+      val replayed = streamBatch.exists { case (app, bid) =>
+        meta.streamApps.zip(meta.streamBatches)
+          .exists { case (a, b) => a == app && b >= bid }
+      }
+      if (!replayed) {
+        expectedOpSeq.foreach(e => if (meta.opSeq != e)
+          throw new ConcurrentModificationException(
+            s"$name: op_seq moved $e -> ${meta.opSeq} " +
+              "since the transaction's base was loaded"))
+        // the commit log must stay time-ordered or the asOfTimestamp
+        // lookup (last entry at-or-before ts) silently skips history —
+        // reject out-of-order stamps BEFORE anything is written
+        commitTs.foreach(ts => require(meta.commitTs.forall(_ <= ts),
+          s"$name: commit timestamp $ts precedes the log tail"))
+        commitStaged(Map(name -> txn), m => change {
+          val logged = commitTs.fold(m)(ts => m.copy(
+            commitVers = m.commitVers :+ m.opSeq,
+            commitTs = m.commitTs :+ ts))
+          // the writer's entry moves last: the least recently
+          // committing writers drop past the cap
+          streamBatch.fold(logged) { case (app, bid) =>
+            val (apps, bids) = (logged.streamApps.zip(logged.streamBatches)
+              .filter(_._1 != app) :+ (app -> bid))
+              .takeRight(Catalog.maxStreamWriters).unzip
             logged.copy(streamApps = apps, streamBatches = bids)
           }
-          writeMeta(name, tweak(stamped.copy(opSeq = after.opSeq)))
-          // projection maintenance is O(delta): append only the delta's
-          // (column, key) pairs to each projection — BEFORE the tail lands,
-          // so a crash between the two leaves the projection a SUPERSET of
-          // the lineage (extra candidate keys are filtered by the probe's
-          // final predicate re-application; a missing key would lose rows)
-          after.delta.foreach { d =>
-            meta.projCols.foreach { c =>
-              d.select(col(c), col(meta.key))
-                .write.mode(SaveMode.Append).parquet(projDir(name, c).toString)
-            }
-          }
-          after.delta.foreach(appendTail(name, _))
-          // The reference's background-merge trigger, run inline on
-          // commit. On a LOGGED (commitAt) commit this is only safe when
-          // snapshot retention is on: with retention, foldTail moves the
-          // commit log into the snapshot manifest and asOfTimestamp keeps
-          // resolving across the rewrite; without it, foldTail CLEARS the
-          // log and an inline compaction here would erase the entry this
-          // very commit just wrote, silently degrading its asOfTimestamp
-          // to the post-rewrite base (ADVICE r7) — so retention-off
-          // logged tables compact only on their next unlogged commit or
-          // an explicit maybeCompact/foldTail call.
-          if (autoCompact && (commitTs.isEmpty || snapshotRetention > 0))
-            maybeCompact(name, compactRatio, preserveHistory = true)
-          getTable(name)
-        }
-      } }.toEither
-    }
+        })
+        // The reference's background-merge trigger, run inline on
+        // commit. On a LOGGED (commitAt) commit this is only safe when
+        // snapshot retention is on: with retention, foldTail moves the
+        // commit log into the snapshot manifest and asOfTimestamp keeps
+        // resolving across the rewrite; without it, foldTail CLEARS the
+        // log and an inline compaction here would erase the entry this
+        // very commit just wrote, silently degrading its asOfTimestamp
+        // to the post-rewrite base (ADVICE r7) — so retention-off
+        // logged tables compact only on their next unlogged commit or
+        // an explicit maybeCompact/foldTail call.
+        if (autoCompact && (commitTs.isEmpty || snapshotRetention > 0))
+          maybeCompact(name, compactRatio, preserveHistory = true)
+      }
+      getTable(name)
+    } }
+  }
 
-  /** [[tryCommit]] against the CURRENT stored state (base re-loaded under
-    * the table lock, so the guard can only trip against a cross-process
-    * writer). Throws on abort — the single-writer convenience API. */
-  def commit(name: String, txn: Txn): LineageTable =
-    lock(name).synchronized {
-      tryCommit(name, txn, readMeta(name).opSeq).fold(e => throw e, identity)
-    }
+  /** [[tryCommit]] against the CURRENT stored state (the transaction
+    * applies to whatever state the table lock finds, so only a
+    * cross-process writer can abort it). Throws on abort — the
+    * single-writer convenience API. */
+  def commit(name: String, txn: Txn): LineageTable = commitOne(name, txn, None)
 
   /** [[commit]] with a commit-log entry: the transaction's resulting
     * op_seq is recorded against `ts` (caller-supplied — a wall clock in
     * production, a logical clock in tests; must be ≥ the log tail), which
     * is what [[asOfTimestamp]] resolves time travel against. */
   def commitAt(name: String, txn: Txn, ts: Long): LineageTable =
-    lock(name).synchronized {
-      tryCommit(name, txn, readMeta(name).opSeq, Some(ts))
-        .fold(e => throw e, identity)
-    }
+    commitOne(name, txn, None, Some(ts))
 
   /** Idempotent [[commit]] for a streaming micro-batch: `(writerId,
-    * batchId)` is recorded atomically with the commit, and a replay of
-    * an at-or-before batch is a NO-OP — foreachBatch delivery is
-    * at-least-once, so without this a retried delete-arm merge would
-    * resurrect its key ([[graft.streaming.StreamOps.mergeStream]]).
-    *
-    * Durability window (the meta-before-rows rule, [[tryCommit]]): the
-    * batch id lands in the SAME meta write that advances op_seq, which
-    * precedes the tail append — a crash BETWEEN the two records the
-    * batch as applied while its rows are absent, so the replay is
-    * skipped and that one batch's changes are lost (at-most-once in
-    * that window, never corruption). The inverse order would instead
-    * DOUBLE-apply in its crash window — and a replayed delete-arm
-    * change re-applied against its now-dead key takes the not-matched
-    * insert arm and resurrects it, which is strictly worse than a lost
-    * batch. True exactly-once across that window needs the commit and
-    * the rows in one atomic unit — the multi-table staged-commit path
-    * ([[commitMulti]]) has that shape; the per-batch fast path
-    * documents the trade instead of paying a staged rename per batch. */
+    * batchId)` lands in the same commit record as the batch's rows, and a
+    * replay of an at-or-before batch is a NO-OP — foreachBatch delivery
+    * is at-least-once, so without this a retried delete-arm merge would
+    * resurrect its key ([[graft.streaming.StreamOps.mergeStream]]). A
+    * crash before the record leaves neither; after it, recovery lands
+    * both, so each batch applies exactly once. */
   def commitStreamBatch(name: String, txn: Txn,
                         writerId: String, batchId: Long): LineageTable =
-    lock(name).synchronized {
-      tryCommit(name, txn, readMeta(name).opSeq,
-        streamBatch = Some((writerId, batchId)))
-        .fold(e => throw e, identity)
-    }
+    commitOne(name, txn, None, streamBatch = Some((writerId, batchId)))
 
   // ------------------------------------------- cross-table transactions
 
@@ -1177,17 +1130,27 @@ final class Catalog(spark: SparkSession, warehouse: String,
   private def txnRecordPath(id: String) = new Path(txnRoot, id + ".json")
   private def txnPartPath(id: String) = new Path(txnRoot, id + ".part.json")
 
+  /** Write transaction `id`'s `record` whole: written inside its staging
+    * directory, then renamed into place, so recovery — which reads every
+    * listed record — never reads one half-written. */
+  private def writeRecord(id: String, record: Path, rec: TxnRecord): Unit = {
+    val tmp = new Path(new Path(txnRoot, id), record.getName)
+    writeString(tmp, TableMeta.encode(rec))
+    move(tmp, record)
+  }
+
   /** This warehouse's fully-qualified root URI — the identity a
     * cross-catalog transaction record names a participant by. */
   private[core] def rootUri: String = fs.makeQualified(root).toString
 
-  /** Post-commit maintenance trigger (instance-private conf access for
+  /** Post-commit maintenance trigger, each call under its own per-table
+    * lock and marker (instance-private conf access for
     * [[Catalog.commitAcross]], whose coordinator is the companion). */
   private[core] def postCommitMaintenance(names: Iterable[String]): Unit =
     if (autoCompact)
       names.foreach(n => maybeCompact(n, compactRatio, preserveHistory = true))
 
-  /** Test-only failpoints: a name in this set makes the next commitMulti
+  /** Test-only failpoints: a name in this set makes the next commit
     * throw AT that point, simulating a crash mid-protocol so specs can
     * drive the recovery path ([[recoverTxns]]) against every window. */
   private[core] var crashPoints: Set[String] = Set.empty
@@ -1225,15 +1188,13 @@ final class Catalog(spark: SparkSession, warehouse: String,
    *      before it exists, recovery rolls the staging back (nothing
    *      visible, "neither"); from the instant it exists, recovery
    *      rolls forward (everything applies, "both").
-   *   3. Roll forward per table: advance op_seq in the table meta
-   *      (meta-before-rows, the single-table rule), append projection
-   *      deltas, rename the staged files into the tail, drop the
-   *      staging. Every step is idempotent — a crash anywhere re-runs
-   *      under [[recoverTxns]] to the same end state.
+   *   3. Roll forward per table: advance op_seq in the table meta,
+   *      append projection deltas, rename the staged files into the
+   *      tail, drop the staging. Every step is idempotent — a crash
+   *      anywhere re-runs under [[recoverTxns]] to the same end state.
    *
-   * Unlike the single-table streaming fast path (whose meta-before-rows
-   * crash window can LOSE one batch — see [[commitStreamBatch]]), the
-   * staged rows here are durable before the commit point, so the
+   * Every commit, single-table ones included ([[tryCommit]]), takes this
+   * path. The staged rows are durable before the commit point, so the
    * roll-forward can never lose them: crash-atomicity is both-or-neither
    * AND complete. What this protocol does NOT claim is cross-table READ
    * atomicity for concurrent sessions: a reader overlapping the
@@ -1241,43 +1202,46 @@ final class Catalog(spark: SparkSession, warehouse: String,
    * table's snapshot stays individually consistent); the claim is
    * crash durability, as in the reference's per-transaction abort.
    *
-   * Scale: staging costs one extra RENAME per delta file versus
-   * [[tryCommit]] (the delta parquet is written once, staged, and
-   * renamed — never rewritten), so a multi-table commit pays the same
-   * distributed write as N single commits plus O(files) metadata ops.
+   * Scale: the delta parquet is written once, staged, and renamed —
+   * never rewritten — so a commit pays its distributed write plus
+   * O(files) metadata ops.
    */
   def commitMulti(txns: Map[String, Txn]): Map[String, LineageTable] = {
     require(txns.nonEmpty, "commitMulti: no tables")
     val names = txns.keys.toList.sorted
     names.foreach(checked)
     // complete any predecessor's pending recovery first (idempotent;
-    // cheap when _txn is absent). OUTSIDE our lock scope: recovery takes
-    // its own per-record locks in sorted order, and nesting those inside
-    // ours could interleave two lock orders.
+    // cheap when _txn holds no record). OUTSIDE our lock scope:
+    // recovery takes its own per-record locks in sorted order, and
+    // nesting those inside ours could interleave two lock orders.
     recoverTxns()
-    withLocks(names) { withMarkers(names) {
-      val id = "tx_" + java.util.UUID.randomUUID().toString.replace("-", "_")
-      val rec = stage(id, txns)
-      crashPoint("multi-staged")
-      writeString(txnRecordPath(id), TableMeta.encode(rec))
-      crashPoint("multi-committed")
-      applyTxn(id, rec, txnRecordPath(id))
-    } }
-    // post-commit maintenance, same trigger as tryCommit (each call
-    // takes its own per-table lock/marker)
-    if (autoCompact)
-      names.foreach(n => maybeCompact(n, compactRatio, preserveHistory = true))
+    withLocks(names) { withMarkers(names) { commitStaged(txns) } }
+    postCommitMaintenance(names)
     names.map(n => n -> getTable(n)).toMap
+  }
+
+  /** Stage `txns`, create their record — the commit point — and roll it
+    * forward. The caller holds every table's lock and marker. */
+  private def commitStaged(txns: Map[String, Txn],
+                           change: Meta => Meta = identity): Unit = {
+    val id = "tx_" + java.util.UUID.randomUUID().toString.replace("-", "_")
+    val rec = stage(id, txns, change)
+    crashPoint("multi-staged")
+    writeRecord(id, txnRecordPath(id), rec)
+    crashPoint("multi-committed")
+    applyTxn(id, rec, txnRecordPath(id))
   }
 
   /** Build every table's delta and stage it under `_txn/<id>/<table>/`
     * — invisible to every reader — then return the record of each
-    * table's op_seq transition. The caller holds every table's lock and
-    * marker, so one meta read per table serves the whole step. A failing
-    * op or CHECK violation aborts here with nothing visible anywhere. */
-  private[core] def stage(id: String, txns: Map[String, Txn]): TxnRecord = {
+    * table's op_seq transition, with the fields `change` sets in the meta
+    * at its new op_seq. The caller holds every table's lock and marker,
+    * so one meta read per table serves the whole step. A failing op or
+    * CHECK violation aborts here with nothing visible anywhere. */
+  private[core] def stage(id: String, txns: Map[String, Txn],
+                          change: Meta => Meta = identity): TxnRecord = {
     val names = txns.keys.toList.sorted
-    val (expected, next) = names.map { n =>
+    val (expected, next, patch) = names.map { n =>
       val meta = readMeta(n)
       val after = txns(n).commit(getTable(n))
       validateConstraints(n, meta, after.delta)
@@ -1287,9 +1251,11 @@ final class Catalog(spark: SparkSession, warehouse: String,
       after.delta.foreach(d => lineageWriter(d, meta)
         .mode(SaveMode.Append)
         .parquet(new Path(new Path(txnRoot, id), n).toString))
-      (meta.opSeq, after.opSeq)
-    }.unzip
-    TxnRecord(tables = names, expected = expected, next = next)
+      val at = meta.copy(opSeq = after.opSeq)
+      (meta.opSeq, after.opSeq, n -> TableMeta.diff(at, change(at)))
+    }.unzip3
+    TxnRecord(tables = names, expected = expected, next = next,
+      patch = patch.filterNot(_._2.isEmpty).toMap)
   }
 
   /**
@@ -1362,16 +1328,19 @@ final class Catalog(spark: SparkSession, warehouse: String,
   private def applyTxn(id: String, rec: TxnRecord, record: Path): Unit = {
     rec.tables.lazyZip(rec.expected).lazyZip(rec.next).foreach { (n, e, x) =>
       val meta = readMeta(n)
-      if (meta.opSeq == e) writeMeta(n, meta.copy(opSeq = x))
-      else require(meta.opSeq == x,
+      if (meta.opSeq == e) {
+        val at = meta.copy(opSeq = x)
+        writeMeta(n, rec.patch.get(n).fold(at)(TableMeta.patch(at, _)))
+      } else require(meta.opSeq == x,
         s"$n: op_seq ${meta.opSeq} matches neither the transaction's " +
           s"expected $e nor committed $x state — foreign writer interleaved")
       crashPoint(s"multi-meta-$n")
       val sdir = new Path(new Path(txnRoot, id), n)
       if (isDir(sdir) && hasParquet(sdir)) {
-        // projections BEFORE rows (superset rule, as in tryCommit); a
-        // recovery re-run may re-append pairs — extra candidates are
-        // filtered by the probe's final predicate re-application
+        // projections BEFORE rows, so a crash between the two leaves the
+        // projection a SUPERSET of the lineage; a recovery re-run may
+        // re-append pairs — extra candidates are filtered by the probe's
+        // final predicate re-application (a missing key would lose rows)
         val projCols = meta.projCols
         if (projCols.nonEmpty) {
           val delta = spark.read.parquet(sdir.toString)
@@ -1401,92 +1370,93 @@ final class Catalog(spark: SparkSession, warehouse: String,
    * the marker lease (a writer that died before its commit point) rolls
    * BACK by deletion — nothing of it ever became visible. Runs at
    * catalog construction (the reference's Database.open recovery) and
-   * before each [[commitMulti]]; safe to call any time.
+   * before each commit; safe to call any time.
    */
   def recoverTxns(): Unit = if (isDir(txnRoot)) {
     val entries = fs.listStatus(txnRoot).toSeq
     def ownerAliveFor(id: String): Boolean =
       try fs.listStatus(new Path(txnRoot, id)).exists(c => c.isDirectory &&
-        pathExists(new Path(dir(c.getPath.getName), "_commit.lock")))
+        pathExists(markerPath(c.getPath.getName)))
       catch { case _: java.io.FileNotFoundException => false }
+    // a listed record vanishes once its writer finishes
+    def read(p: Path): Option[TxnRecord] =
+      try Some(TableMeta.decodeTxn(readString(p)))
+      catch { case _: java.io.FileNotFoundException => None }
+    // A record's writer holds every table's marker from before the record
+    // exists until after it is gone, so a record still present once no
+    // live marker was seen has no writer left: roll it forward. A marker
+    // HELD means a live writer mid-roll-forward, this Catalog's own
+    // threads included — recovery is for the dead, and waiting on the
+    // writer's locks would serialize unrelated commits; the next pass
+    // completes the record if the writer died. Under the locks and
+    // markers the record is checked again: another recovery may have
+    // completed it, and the table may have moved on since.
+    def rollForward(id: String, rec: TxnRecord, record: Path): Unit = {
+      val names = rec.tables.toList.sorted
+      if (!names.exists(markerLive) && pathExists(record))
+        try withLocks(names) { withMarkers(names) {
+          if (pathExists(record)) applyTxn(id, rec, record)
+        } } catch { case _: ConcurrentModificationException => () }
+    }
     // 1. cross-catalog PART records first: this root staged its share of
     //    a transaction whose commit point lives at the COORDINATOR —
     //    decision present ⇒ roll MY tables forward; decision absent ⇒
     //    presumed abort, but only once the staging is past the lease
     //    with no live owner (the coordinator may be about to decide).
-    entries.filter(s => s.isFile && s.getPath.getName.endsWith(".part.json"))
-      .foreach { s =>
-        val id = s.getPath.getName.stripSuffix(".part.json")
-        val rec = TableMeta.decodeTxn(readString(s.getPath))
-        // None = coordinator unreachable (leave everything for a later
-        // pass); Some(true/false) = decision present/absent
-        val decided: Option[Boolean] = rec.coordinator.flatMap { c =>
-          try {
-            val decision = new Path(new Path(new Path(c), "_txn"),
-              id + ".json")
-            Some(decision.getFileSystem(hconf).exists(decision))
-          } catch { case _: java.io.IOException => None }
-        }
-        decided match {
-          case Some(true) =>
-            try withLocks(rec.tables.toList.sorted) {
-              withMarkers(rec.tables.toList.sorted) {
-                applyTxn(id, rec, txnPartPath(id))
-              }
-            } catch { case _: ConcurrentModificationException => () }
-          case Some(false) =>
-            val stale = System.currentTimeMillis() -
-              s.getModificationTime > markerLeaseMs
-            if (stale && !ownerAliveFor(id)) {
-              deleteRecursively(new Path(txnRoot, id))
-              fs.delete(s.getPath, false)
-            }
-          case None => ()
-        }
+    for (s <- entries if s.isFile && s.getPath.getName.endsWith(".part.json");
+         rec <- read(s.getPath)) {
+      val id = s.getPath.getName.stripSuffix(".part.json")
+      // None = coordinator unreachable (leave everything for a later
+      // pass); Some(true/false) = decision present/absent
+      val decided: Option[Boolean] = rec.coordinator.flatMap { c =>
+        try {
+          val decision = new Path(new Path(new Path(c), "_txn"),
+            id + ".json")
+          Some(decision.getFileSystem(hconf).exists(decision))
+        } catch { case _: java.io.IOException => None }
       }
+      decided match {
+        case Some(true) => rollForward(id, rec, txnPartPath(id))
+        case Some(false) =>
+          val stale = System.currentTimeMillis() -
+            s.getModificationTime > markerLeaseMs
+          if (stale && !ownerAliveFor(id)) {
+            deleteRecursively(new Path(txnRoot, id))
+            fs.delete(s.getPath, false)
+          }
+        case None => ()
+      }
+    }
     // 2. record files: single-catalog records roll forward as before; a
     //    cross-catalog DECISION record (this root coordinated) drives
     //    every named participant's recovery, then retires once all
     //    part records are gone — the decision must outlive the last
     //    participant's roll-forward or a crash mid-fan-out would make
     //    the survivors read "aborted".
-    entries.filter(s => s.isFile && s.getPath.getName.endsWith(".json") &&
-        !s.getPath.getName.endsWith(".part.json"))
-      .foreach { s =>
-        val id = s.getPath.getName.stripSuffix(".json")
-        val rec = TableMeta.decodeTxn(readString(s.getPath))
-        val participants = rec.participants
-        if (participants.nonEmpty) {
-          def partPending(uri: String): Boolean =
-            try {
-              val pp = new Path(new Path(new Path(uri), "_txn"),
-                id + ".part.json")
-              pp.getFileSystem(hconf).exists(pp)
-            } catch { case _: java.io.IOException => true }
-          participants.filter(partPending).foreach { uri =>
-            if (uri != rootUri)
-              // a participant Catalog's OWN construction-time recovery
-              // sees this decision and rolls its part forward (it only
-              // READS the decision file — no recursion back here)
-              try { new Catalog(spark, uri, autoCompact = false); () }
-              catch { case scala.util.control.NonFatal(_) => () }
-          }
-          if (participants.forall(u => !partPending(u)))
-            fs.delete(s.getPath, false)
-        } else {
-          // A record whose tables' markers are HELD belongs to a LIVE
-          // writer mid-roll-forward — recovery is for the dead.
-          // Skipping on contention keeps catalog construction and
-          // unrelated commitMulti calls from failing spuriously while a
-          // healthy writer finishes; the next pass completes the record
-          // if the writer died.
-          try withLocks(rec.tables.toList.sorted) {
-            withMarkers(rec.tables.toList.sorted) {
-              applyTxn(id, rec, txnRecordPath(id))
-            }
-          } catch { case _: ConcurrentModificationException => () }
+    for (s <- entries if s.isFile && s.getPath.getName.endsWith(".json") &&
+           !s.getPath.getName.endsWith(".part.json");
+         rec <- read(s.getPath)) {
+      val id = s.getPath.getName.stripSuffix(".json")
+      val participants = rec.participants
+      if (participants.nonEmpty) {
+        def partPending(uri: String): Boolean =
+          try {
+            val pp = new Path(new Path(new Path(uri), "_txn"),
+              id + ".part.json")
+            pp.getFileSystem(hconf).exists(pp)
+          } catch { case _: java.io.IOException => true }
+        participants.filter(partPending).foreach { uri =>
+          if (uri != rootUri)
+            // a participant Catalog's OWN construction-time recovery
+            // sees this decision and rolls its part forward (it only
+            // READS the decision file — no recursion back here)
+            try { new Catalog(spark, uri, autoCompact = false); () }
+            catch { case scala.util.control.NonFatal(_) => () }
         }
-      }
+        if (participants.forall(u => !partPending(u)))
+          fs.delete(s.getPath, false)
+      } else rollForward(id, rec, txnRecordPath(id))
+    }
     entries.filter(_.isDirectory).foreach { d =>
       val id = d.getPath.getName
       val stale = System.currentTimeMillis() -
@@ -1504,8 +1474,6 @@ final class Catalog(spark: SparkSession, warehouse: String,
           stale && !ownerAliveFor(id))
         deleteRecursively(d.getPath)
     }
-    if (isDir(txnRoot) && fs.listStatus(txnRoot).isEmpty)
-      deleteRecursively(txnRoot)
   }
 
   /**
@@ -3012,12 +2980,11 @@ final class Catalog(spark: SparkSession, warehouse: String,
    *      (exact long arithmetic), dropped where it nets zero;
    *   4. touched groups' current view rows + adjustment MERGE INTO the
    *      view — groups reaching zero rows DELETE, new groups insert —
-   *      as ONE commit whose meta write also advances `mv_seq`
-   *      ([[tryCommitMeta]]), so a crashed refresh retried later can
-   *      never double-apply (it re-derives its delta from the recorded
-   *      `mv_seq`). The meta-before-rows window loses at most that one
-   *      refresh's adjustments (the documented [[commitStreamBatch]]
-   *      trade) — re-creating the view repairs it.
+   *      as ONE staged commit whose record also carries the new
+   *      `mv_seq`, so the adjustments and the version they bring the
+   *      view to land together or not at all under any crash: a retry
+   *      re-derives its delta from whichever `mv_seq` is recorded and
+   *      never double-applies.
    *
    * A PHYSICAL REWRITE of the source past `mv_seq` (fold/vacuum/purge/
    * merge re-stamp history; `tail_floor` records it) makes the old
@@ -3026,7 +2993,8 @@ final class Catalog(spark: SparkSession, warehouse: String,
    * same degradation Delta's incremental readers take when a source
    * version is vacuumed away.
    */
-  def refreshMaterializedView(view: String): LineageTable =
+  def refreshMaterializedView(view: String): LineageTable = {
+    recoverTxns() // before the lock: recovery takes other tables' locks
     lock(view).synchronized {
       val vm = readMeta(view)
       val src = vm.mvSrc.getOrElse(throw new IllegalArgumentException(
@@ -3066,11 +3034,12 @@ final class Catalog(spark: SparkSession, warehouse: String,
       val dimUnchanged = dimState.forall { case (dt, dm) =>
         dt.opSeq == vm.mvDimSeq && dm.epoch == vm.mvDimEpoch }
       // LOST-REFRESH detection (ADVICE r8): the last refresh recorded the
-      // view op_seq its adjustment rows were stamped with; the
-      // meta-before-rows write order means a crash inside that refresh
-      // can advance mv_seq while the rows never landed — without this
-      // probe every later refresh would no-op against the advanced
-      // mv_seq and the view would silently diverge FOREVER. The probe is
+      // view op_seq its adjustment rows were stamped with. Warehouses
+      // written before refreshes were staged wrote meta before rows, so
+      // a crash inside a refresh there could advance mv_seq while the
+      // rows never landed — without this probe every later refresh
+      // would no-op against the advanced mv_seq and the view would
+      // silently diverge FOREVER. The probe is
       // one pushed-predicate existence scan of the newest tail stamp
       // (footer min-max prunes every older file); a refresh that
       // legitimately appended nothing (all adjustments netted zero) can
@@ -3230,16 +3199,16 @@ final class Catalog(spark: SparkSession, warehouse: String,
           Txn.empty.mergeInto(merged, measures ++ extrema,
             deleteWhen = Some(col("n_rows") === 0L))
         }
-      tryCommitMeta(view, txn, vm.opSeq, None, None,
-        m => m.copy(mvSeq = newSeq, mvEpoch = srcMeta.epoch,
+      commitOne(view, txn, Some(vm.opSeq),
+        change = m => m.copy(mvSeq = newSeq, mvEpoch = srcMeta.epoch,
           mvLastVer = m.opSeq,
           // re-record the dim vintage this refresh joined against (the
           // incremental path verified it unchanged; the full path adopts
           // whatever it just rebuilt with)
           mvDimSeq = dimState.fold(m.mvDimSeq)(_._1.opSeq),
           mvDimEpoch = dimState.fold(m.mvDimEpoch)(_._2.epoch)))
-        .fold(e => throw e, identity)
     }
+  }
 
   /**
    * The materialized view that can ANSWER an aggregate over `src` grouped
@@ -3877,12 +3846,12 @@ object Catalog {
       // durable intentions: each participant records its share + the
       // coordinator pointer its recovery will consult
       staged.foreach { case (c, rec) =>
-        c.writeString(c.txnPartPath(gid), TableMeta.encode(rec))
+        c.writeRecord(gid, c.txnPartPath(gid), rec)
       }
       coord.crashPoint("across-intent")
       // THE cross-catalog commit point: one atomic file create
-      coord.writeString(coord.txnRecordPath(gid), TableMeta.encode(
-        TxnRecord(participants = sorted.map(_._1.rootUri))))
+      coord.writeRecord(gid, coord.txnRecordPath(gid),
+        TxnRecord(participants = sorted.map(_._1.rootUri)))
       coord.crashPoint("across-committed")
       // fan-out roll-forward; decision retires after the last part
       staged.foreach { case (c, rec) =>

@@ -64,8 +64,8 @@ private[core] case class Meta(
     commitTs: Seq[Long] = Nil,
     /** Last applied streaming batch PER WRITER
       * (parallel seqs: writer id → last batch id),
-      * recorded atomically with the commit's meta
-      * write — the Delta txn-appId/version
+      * recorded atomically with the commit (its
+      * record) — the Delta txn-appId/version
       * idempotence pattern ([[tryCommit]] skips a
       * replayed batch). A MAP, not a single slot:
       * with two interleaved writers on one table a
@@ -114,7 +114,7 @@ private[core] case class Meta(
       * composite groups key on the synthesized
       * `_gkey`), and the source op_seq this view is
       * current AT — advanced atomically with each
-      * refresh commit (same meta write), so a
+      * refresh commit (same commit record), so a
       * crashed refresh can never double-apply its
       * adjustments. */
     mvSrc: Option[String] = None,
@@ -139,13 +139,13 @@ private[core] case class Meta(
     mvSeq: Long = -1L,
     /** The view op_seq whose adjustment rows the
       * LAST refresh appended (−1 before any
-      * refresh): meta-before-rows means a crash
-      * inside a refresh can advance `mv_seq` with
-      * the rows absent — the next refresh probes
-      * for rows at this stamp and falls back to a
-      * full recompute when they never landed,
-      * instead of silently serving a diverged
-      * view forever (ADVICE r8). */
+      * refresh). Releases that wrote meta before
+      * rows could crash inside a refresh with
+      * `mv_seq` advanced and the rows absent — the
+      * next refresh probes for rows at this stamp
+      * and falls back to a full recompute when they
+      * never landed, instead of silently serving a
+      * diverged view forever (ADVICE r8). */
     mvLastVer: Long = -1L,
     /** Incremented by EVERY physical re-stamp
       * (fold/vacuum/purge/saveCompacted). op_seq
@@ -231,11 +231,12 @@ private[core] case class Meta(
 }
 
 /**
- * A cross-table transaction record under `<warehouse>/_txn/`. Empty
- * fields are not written, which leaves three shapes: `<id>.json` from
- * [[Catalog.commitMulti]] (tables with their `expected` → `next` op_seq,
- * the commit point); `<gid>.part.json` from [[Catalog.commitAcross]] (one
- * participant's share plus the `coordinator`'s root URI); and the
+ * A transaction record under `<warehouse>/_txn/`. Empty fields are not
+ * written, which leaves three shapes: `<id>.json`, the commit point of
+ * every single-catalog commit (tables with their `expected` → `next`
+ * op_seq, and a `patch` for each table whose commit sets more meta
+ * fields than op_seq); `<gid>.part.json` from [[Catalog.commitAcross]]
+ * (one participant's share plus the `coordinator`'s root URI); and the
  * coordinator's `<gid>.json` decision naming every participant's root.
  */
 @JsonInclude(JsonInclude.Include.NON_EMPTY)
@@ -243,7 +244,13 @@ private[core] case class TxnRecord(coordinator: Option[String] = None,
                                    tables: Seq[String] = Nil,
                                    expected: Seq[Long] = Nil,
                                    next: Seq[Long] = Nil,
-                                   participants: Seq[String] = Nil)
+                                   participants: Seq[String] = Nil,
+                                   /** Per table: the meta fields the
+                                     * commit sets besides op_seq, as a
+                                     * partial meta object ([[TableMeta
+                                     * .diff]]) — the commit-log entry, a
+                                     * stream batch id, a view's `mv_*`. */
+                                   patch: Map[String, ObjectNode] = Map.empty)
 
 /** The one JSON codec for [[Meta]] and [[TxnRecord]]. It writes one line
   * in the `{"field": value, "list": [a, b]}` spacing earlier releases
@@ -287,4 +294,18 @@ private[core] object TableMeta {
 
   def decodeTxn(json: String): TxnRecord =
     mapper.readValue(json, classOf[TxnRecord])
+
+  /** The fields of `to` whose value differs from `from`'s. */
+  def diff(from: Meta, to: Meta): ObjectNode = {
+    val d = tree(to)
+    tree(from).properties.forEach(e =>
+      if (d.get(e.getKey) == e.getValue) d.remove(e.getKey))
+    d
+  }
+
+  /** `m` with the fields of a [[diff]] replaced. */
+  def patch(m: Meta, fields: ObjectNode): Meta =
+    mapper.treeToValue(tree(m).setAll[ObjectNode](fields), classOf[Meta])
+
+  private def tree(m: Meta): ObjectNode = mapper.valueToTree[ObjectNode](m)
 }

@@ -204,23 +204,23 @@ object StreamOps {
    * Delta Lake documents for streaming upserts): drain a stream of
    * change rows into a warehouse table by running ONE durable MERGE
    * INTO commit per micro-batch ([[graft.core.Txn.mergeInto]] through
-   * [[graft.core.Catalog.commit]] — each batch is one atomic `_ver`).
-   * Exactly-once end to end WHEN the caller supplies a durable
+   * [[graft.core.Catalog.commitStreamBatch]] — each batch is one atomic
+   * `_ver`). Exactly-once end to end WHEN the caller supplies a durable
    * `checkpoint`: the checkpoint records which source files each batch
-   * consumed, each batch's merge is a single catalog commit stamped with
-   * a writer id derived from that checkpoint, so a re-invocation resumes
-   * at the failed batch and the replay guard skips the one batch that
-   * was in flight ([[graft.core.Catalog.commitStreamBatch]]). Without a
-   * caller checkpoint (the default scratch one) the guard covers
-   * retries within this drain only — a fresh call replays the whole
-   * source as a new writer. Determinism across batch splits: a change-stream whose keys are
-   * unique stream-wide yields the same final table for ANY micro-batch
-   * partitioning — each key is merged exactly once (StreamMergeSpec
-   * drives the multi-batch path; per-key last-write-wins streams would
-   * need the source ordered by a change sequence, as every CDC apply
-   * does). Cost per batch ∝ |batch| (mergeInto's candidate
-   * restriction), so a continuous deployment pays for its changes, not
-   * its table size.
+   * consumed, and each batch's merge is one staged catalog commit that
+   * lands its rows and its (writer id, batch id) together — both or
+   * neither under any crash. A re-invocation resumes
+   * at the batch in flight, and the replay guard skips it if its commit
+   * had landed. Without a caller checkpoint (the default scratch one)
+   * the guard covers retries within this drain only — a fresh call
+   * replays the whole source as a new writer. Determinism across batch
+   * splits: a change-stream whose keys are unique stream-wide yields the
+   * same final table for ANY micro-batch partitioning — each key is
+   * merged exactly once (StreamMergeSpec drives the multi-batch path;
+   * per-key last-write-wins streams would need the source ordered by a
+   * change sequence, as every CDC apply does). Cost per batch ∝ |batch|
+   * (mergeInto's candidate restriction), so a continuous deployment pays
+   * for its changes, not its table size.
    */
   def mergeStream(spark: SparkSession, changes: DataFrame,
                   cat: graft.core.Catalog, table: String,
@@ -315,6 +315,15 @@ object StreamOps {
    * Scale: stateless projection over an incremental file listing — no
    * state store, no shuffle; per-batch cost ∝ the commits drained, never
    * the table. Filters a consumer applies compose into the file scan.
+   *
+   * Granularity: a micro-batch may hold PART of a multi-file commit, the
+   * rest arriving in the next batch. A commit's files enter `tail/` one
+   * rename at a time — the staged roll-forward moves them singly, and on
+   * Spark 4.1.2 so does the output committer an append into `tail/`
+   * would use (SQLHadoopMapReduceCommitProtocol over FileOutputCommitter
+   * algorithm 1, whose job commit renames each part file into the
+   * existing directory). Every row carries its `commit_ver`, so a
+   * consumer that needs whole commits can regroup by it.
    *
    * Retention: a physical rewrite (fold/compact/vacuum/purge) RETIRES
    * tail files — change events a consumer has not yet drained are gone

@@ -333,4 +333,40 @@ class MultiTxnSpec extends SparkSpec {
       Catalog.commitAcross(Seq.empty)
     }
   }
+
+  // ------------------ a later commit never overtakes a crashed record
+
+  /** Crash a commitMulti on `ta` past its commit point, then commit again
+    * from the SAME catalog: the crashed transaction lands first, at
+    * `_ver` 1, the new commit after it, and a reopen reads one row for
+    * key 1. (Auto-compaction off: a fold would re-stamp `_ver`.) */
+  private def overtake(crashed: Txn, crashedOps: Long): Unit = {
+    val wh = Files.createTempDirectory("graft_mtx_overtake_").toString
+    val cat = new Catalog(spark, wh, autoCompact = false)
+    cat.createTable("ta", "k", Seq((1L, 10L), (2L, 20L)).toDF("k", "v"))
+    cat.crashPoints = Set("multi-committed")
+    intercept[IllegalStateException] { cat.commitMulti(Map("ta" -> crashed)) }
+    cat.crashPoints = Set.empty
+    cat.commit("ta", Txn.empty.update(col("k") === 1L,
+      Map("v" -> org.apache.spark.sql.functions.lit(7L))))
+    val reopened = new Catalog(spark, wh).getTable("ta")
+    val key1 = reopened.snapshot.where(col("k") === 1L)
+      .collect().map(_.getLong(1)).toSeq
+    assert(key1 === Seq(7L), "one row for key 1, the later commit's")
+    val stamps = reopened.lineage.where(col("k") === 1L)
+      .collect().map(r => (r.getAs[Long]("_ver"), r.getAs[Long]("v")))
+      .toSeq.sortBy(_._1)
+    assert(stamps === Seq((0L, 10L), (1L, 110L), (crashedOps + 1, 7L)),
+      "the crashed transaction lands first, the later commit after it")
+    assert(reopened.opSeq === crashedOps + 1)
+  }
+
+  test("a commit after a crashed commitMulti of the same length lands after it") {
+    overtake(Txn.empty.update(col("k") === 1L,
+      Map("v" -> (col("v") + org.apache.spark.sql.functions.lit(100L)))), 1L)
+  }
+
+  test("a commit after a crashed commitMulti of a different length lands after it") {
+    overtake(txns("ta"), 2L)
+  }
 }
