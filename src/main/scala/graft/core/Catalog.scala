@@ -3,6 +3,7 @@ package graft.core
 import java.nio.charset.StandardCharsets
 import java.util.ConcurrentModificationException
 
+import scala.collection.immutable.ListMap
 import scala.util.Try
 
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -479,10 +480,9 @@ final class Catalog(spark: SparkSession, warehouse: String,
     val meta = readMeta(name)
     // durable ANALYZE stats feed the planner in THIS session too: a
     // reopened warehouse re-registers without re-scanning (metadata-only)
-    if (meta.statsCols.nonEmpty)
+    if (meta.stats.nonEmpty)
       graft.plans.NdvStats.register(fs.makeQualified(dir(name)).toString,
-        graft.plans.NdvStats.TableStats(
-          meta.statsCols.zip(meta.statsNdv).toMap, meta.statsRows))
+        graft.plans.NdvStats.TableStats(meta.stats, meta.statsRows))
     val base = baseFrame(name, meta)
     val tailDir = new Path(dir(name), "tail")
     healLeftoverTail(tailDir, meta.tailFloor)
@@ -515,8 +515,7 @@ final class Catalog(spark: SparkSession, warehouse: String,
     val rows = row.getLong(columns.size)
     lock(name).synchronized { withCommitMarker(name) {
       val meta = readMeta(name)
-      writeMeta(name, meta.copy(statsCols = columns,
-        statsNdv = columns.map(ndvs.toMap), statsRows = rows))
+      writeMeta(name, meta.copy(stats = ListMap.from(ndvs), statsRows = rows))
     } }
     graft.plans.NdvStats.register(fs.makeQualified(dir(name)).toString,
       graft.plans.NdvStats.TableStats(ndvs.toMap, rows))
@@ -544,9 +543,8 @@ final class Catalog(spark: SparkSession, warehouse: String,
     // TYPE WIDENING ([[widenColumn]]): the base is uniform (written
     // wholesale), so upcasting its narrow columns is one cast per
     // widened column...
-    val baseW = meta.widenCols.zip(meta.widenTypes)
-      .foldLeft(base) { case (df, (c, t)) =>
-        if (df.columns.contains(c)) df.withColumn(c, col(c).cast(t)) else df }
+    val baseW = meta.widened.foldLeft(base) { case (df, (c, t)) =>
+      if (df.columns.contains(c)) df.withColumn(c, col(c).cast(t)) else df }
     // an evolved table's tail can MIX pre- and post-evolve files; the
     // default parquet read infers the schema from ONE file (first in
     // listing order — random part-file UUIDs), which would silently drop
@@ -561,10 +559,9 @@ final class Catalog(spark: SparkSession, warehouse: String,
     val unioned =
       if (hasTail) {
         val tail0 =
-          if (meta.widenCols.nonEmpty) {
+          if (meta.widened.nonEmpty) {
             val known = baseW.schema.fieldNames.toSet
-            val extra = meta.addedCols.zip(meta.addedTypes)
-              .filterNot { case (c, _) => known.contains(c) }
+            val extra = meta.added.filterNot { case (c, _) => known.contains(c) }
               .map { case (c, t) =>
                 org.apache.spark.sql.types.StructField(
                   c, org.apache.spark.sql.types.StructType
@@ -576,14 +573,14 @@ final class Catalog(spark: SparkSession, warehouse: String,
           else scanGraftDir(tailDir)
         val tail = tailFilter.fold(tail0)(tail0.where)
         baseW.unionByName(tail,
-          allowMissingColumns = evolved || meta.widenCols.nonEmpty)
+          allowMissingColumns = evolved || meta.widened.nonEmpty)
       } else baseW
     // a column NO file carries yet exists only in metadata — materialize
     // it at its declared (physical) type; then map physical→logical
     // (renames) and normalize column order to the schema — the one
     // select that implements RENAME (aliasing) and DROP (omission)
     // with zero data I/O
-    val lineage0 = meta.addedCols.zip(meta.addedTypes)
+    val lineage0 = meta.added
       .filterNot { case (c, _) => unioned.columns.contains(c) }
       .foldLeft(unioned) { case (df, (c, t)) =>
         df.withColumn(c, lit(null).cast(t)) }
@@ -670,30 +667,21 @@ final class Catalog(spark: SparkSession, warehouse: String,
     require(unknown.isEmpty, s"partitionSnapshot: not partition columns " +
       s"of '$name': ${unknown.mkString(", ")} (partitioned by " +
       s"${meta.partCols.mkString(", ")})")
-    require(!hasManifest(name),
-      s"partitionSnapshot: '$name' is a shallow clone — fold it first")
     val dirOf = meta.partCols.zip(pdColNames(meta)).toMap
-    val raw = if (isEvolved(meta))
-      spark.read.option("mergeSchema", "true").parquet(baseDir(name).toString)
-    else scanGraftDir(baseDir(name), pdColNames(meta))
     // a `_pd*` column is absent only for a base written before the table
     // was partitioned — impossible today (partitioning is create-only),
     // but fall back to the pushed data filter rather than miscount
     // `values` carry the DERIVED canonical string per column (for a
     // days(ts) level: the epoch-day number)
     def derivedOf(c: String) = dirValueExpr(meta, meta.partCols.indexOf(c))
-    val prunedBase = values.foldLeft(raw) { case (df, (c, vs)) =>
-      val dc = dirOf(c)
-      if (df.columns.contains(dc))
-        df.where(col(dc).isin(vs.map("p" + _): _*))
-      else df.where(derivedOf(c).isin(vs: _*))
-    }.drop(pdColNames(meta): _*)
-    val tailPred = values.map { case (c, vs) =>
-      derivedOf(c).isin(vs: _*) }.reduce(_ && _)
-    val tailDir = new Path(dir(name), "tail")
-    healLeftoverTail(tailDir, meta.tailFloor)
-    assembleTable(meta, prunedBase, tailDir, tailFilter = Some(tailPred))
-      .snapshot
+    prunedSnapshot(name, meta, "partitionSnapshot",
+      raw => values.foldLeft(raw) { case (df, (c, vs)) =>
+        val dc = dirOf(c)
+        if (df.columns.contains(dc))
+          df.where(col(dc).isin(vs.map("p" + _): _*))
+        else df.where(derivedOf(c).isin(vs: _*))
+      },
+      values.map { case (c, vs) => derivedOf(c).isin(vs: _*) }.reduce(_ && _))
   }
 
   /**
@@ -714,27 +702,38 @@ final class Catalog(spark: SparkSession, warehouse: String,
     val i = meta.funcs.indexOf("days")
     require(i >= 0, s"timeSliceSnapshot: '$name' has no days(...) " +
       "partition level (createTable with partitionFuncs)")
-    require(!hasManifest(name),
-      s"timeSliceSnapshot: '$name' is a shallow clone — fold it first")
     val c = meta.partCols(i)
     val dc = pdColNames(meta)(i)
     val (dLo, dHi) = (loNanos / dayNanos, hiNanos / dayNanos)
+    val exact = col(c) >= lit(loNanos) && col(c) < lit(hiNanos)
+    prunedSnapshot(name, meta, "timeSliceSnapshot",
+      raw =>
+        if (raw.columns.contains(dc))
+          // substring(3) strips the "p" prefix (1-based, pos 2 onward);
+          // the cast-compare evaluates per DIRECTORY at planning
+          raw.where(expr(s"CAST(substring(`$dc`, 2) AS BIGINT)")
+            .between(dLo, dHi))
+        else raw.where(exact),
+      exact).where(exact)
+  }
+
+  /** The snapshot of partitioned table `name` with its base scan pruned
+    * by `pruneBase` (over the raw scan, `_pd*` directory columns
+    * included) and `tailPred` pushed into its tail scan — the one
+    * directory-pruned read behind [[partitionSnapshotIn]] and
+    * [[timeSliceSnapshot]] (`caller` names it in the error). */
+  private def prunedSnapshot(name: String, meta: Meta, caller: String,
+                             pruneBase: DataFrame => DataFrame,
+                             tailPred: Column): DataFrame = {
+    require(!hasManifest(name),
+      s"$caller: '$name' is a shallow clone — fold it first")
     val raw = if (isEvolved(meta))
       spark.read.option("mergeSchema", "true").parquet(baseDir(name).toString)
     else scanGraftDir(baseDir(name), pdColNames(meta))
-    val exact = col(c) >= lit(loNanos) && col(c) < lit(hiNanos)
-    val prunedBase =
-      (if (raw.columns.contains(dc))
-         // substring(3) strips the "p" prefix (1-based, pos 2 onward);
-         // the cast-compare evaluates per DIRECTORY at planning
-         raw.where(expr(s"CAST(substring(`$dc`, 2) AS BIGINT)")
-           .between(dLo, dHi))
-       else raw.where(exact))
-        .drop(pdColNames(meta): _*)
     val tailDir = new Path(dir(name), "tail")
     healLeftoverTail(tailDir, meta.tailFloor)
-    assembleTable(meta, prunedBase, tailDir, tailFilter = Some(exact))
-      .snapshot.where(exact)
+    assembleTable(meta, pruneBase(raw).drop(pdColNames(meta): _*), tailDir,
+      tailFilter = Some(tailPred)).snapshot
   }
 
   /** The FIRST partition column of a table, if [[createTable]] set one. */
@@ -940,7 +939,7 @@ final class Catalog(spark: SparkSession, warehouse: String,
       require(meta.partCol.isEmpty, s"cloneTable: '$src' is partitioned — " +
         "the flat file manifest cannot carry directory-partition values; " +
         "materialize a copy instead (CTAS)")
-      require(meta.widenCols.isEmpty, s"cloneTable: '$src' has pending " +
+      require(meta.widened.isEmpty, s"cloneTable: '$src' has pending " +
         "type widenings — the manifest read cannot mix physical types; " +
         "fold or compact first (a rewrite makes the files uniformly wide)")
       // frozen view: under src's lock no writer is mid-commit, so
@@ -965,7 +964,7 @@ final class Catalog(spark: SparkSession, warehouse: String,
         // op_seq there could only be crash leftover garbage
         tailFloor = meta.opSeq,
         projCols = Nil,
-        streamApps = Nil, streamBatches = Nil,
+        streamBatches = ListMap.empty,
         snaps = Nil,
         snapsDropped = meta.snaps.nonEmpty || meta.snapsDropped))
       getTable(dst)
@@ -975,16 +974,12 @@ final class Catalog(spark: SparkSession, warehouse: String,
     * dropped columns) — the flag that switches reads onto the
     * schema-merging, column-mapping path. */
   private def isEvolved(meta: Meta): Boolean =
-    meta.addedCols.nonEmpty || meta.renLogical.nonEmpty ||
-      meta.droppedPhys.nonEmpty
+    meta.added.nonEmpty || meta.renamed.nonEmpty || meta.droppedPhys.nonEmpty
 
   /** Physical file-column name of a logical column (identity unless
     * renamed — the Delta column-mapping lookup). */
   private def physOf(meta: Meta, logical: String): String =
-    meta.renLogical.indexOf(logical) match {
-      case i if i >= 0 => meta.renPhysical(i)
-      case _ => logical
-    }
+    meta.renamed.getOrElse(logical, logical)
 
   /** The one writer every lineage data file goes through, carrying the
     * table's physical-layout options: parquet bloom filters on the
@@ -998,7 +993,7 @@ final class Catalog(spark: SparkSession, warehouse: String,
     // PHYSICAL names, whatever the logical schema has been renamed to —
     // a rename never forks the on-disk column namespace
     val mapped =
-      if (meta.renLogical.isEmpty) rows
+      if (meta.renamed.isEmpty) rows
       else rows.select(meta.columns.map(lc =>
         col(lc).as(physOf(meta, lc))) ++
         Seq(LineageTable.VER, LineageTable.DEL).map(col) ++
@@ -1006,10 +1001,7 @@ final class Catalog(spark: SparkSession, warehouse: String,
         // untouched ([[writeBaseData]])
         rows.columns.filter(_.startsWith("_pd")).toSeq.map(col): _*)
     meta.bloomCols.foldLeft(mapped.write) { (w, c) =>
-      val ndv = meta.statsCols.indexOf(c) match {
-        case i if i >= 0 => meta.statsNdv(i)
-        case _ => 100000L
-      }
+      val ndv = meta.stats.getOrElse(c, 100000L)
       w.option(s"parquet.bloom.filter.enabled#$c", "true")
         .option(s"parquet.bloom.filter.expected.ndv#$c", ndv.toString)
     }
@@ -1057,9 +1049,7 @@ final class Catalog(spark: SparkSession, warehouse: String,
       // skipped here — without this, a re-applied delete-arm merge
       // would resurrect its key through the not-matched insert arm.
       val replayed = streamBatch.exists { case (app, bid) =>
-        meta.streamApps.zip(meta.streamBatches)
-          .exists { case (a, b) => a == app && b >= bid }
-      }
+        meta.streamBatches.get(app).exists(_ >= bid) }
       if (!replayed) {
         expectedOpSeq.foreach(e => if (meta.opSeq != e)
           throw new ConcurrentModificationException(
@@ -1068,19 +1058,16 @@ final class Catalog(spark: SparkSession, warehouse: String,
         // the commit log must stay time-ordered or the asOfTimestamp
         // lookup (last entry at-or-before ts) silently skips history —
         // reject out-of-order stamps BEFORE anything is written
-        commitTs.foreach(ts => require(meta.commitTs.forall(_ <= ts),
+        commitTs.foreach(ts => require(meta.commitLog.forall(_._2 <= ts),
           s"$name: commit timestamp $ts precedes the log tail"))
         commitStaged(Map(name -> txn), m => change {
-          val logged = commitTs.fold(m)(ts => m.copy(
-            commitVers = m.commitVers :+ m.opSeq,
-            commitTs = m.commitTs :+ ts))
+          val logged = commitTs.fold(m)(ts =>
+            m.copy(commitLog = m.commitLog :+ (m.opSeq -> ts)))
           // the writer's entry moves last: the least recently
           // committing writers drop past the cap
           streamBatch.fold(logged) { case (app, bid) =>
-            val (apps, bids) = (logged.streamApps.zip(logged.streamBatches)
-              .filter(_._1 != app) :+ (app -> bid))
-              .takeRight(Catalog.maxStreamWriters).unzip
-            logged.copy(streamApps = apps, streamBatches = bids)
+            logged.copy(streamBatches = (logged.streamBatches - app +
+              (app -> bid)).takeRight(Catalog.maxStreamWriters))
           }
         })
         // The reference's background-merge trigger, run inline on
@@ -1245,14 +1232,18 @@ final class Catalog(spark: SparkSession, warehouse: String,
       val meta = readMeta(n)
       val after = txns(n).commit(getTable(n))
       validateConstraints(n, meta, after.delta)
+      val at = meta.copy(opSeq = after.opSeq)
+      // the meta the roll-forward writes passes writeMeta's check here,
+      // before anything is written: a record that failed it would
+      // wedge every later recovery
+      val patch = TableMeta.diff(at, checkedMeta(change(at)))
       // through lineageWriter: the staged files RENAME into the tail at
       // roll-forward, so layout options (bloom filters) must be baked
       // in at the stage write — the rename can't add them later
       after.delta.foreach(d => lineageWriter(d, meta)
         .mode(SaveMode.Append)
         .parquet(new Path(new Path(txnRoot, id), n).toString))
-      val at = meta.copy(opSeq = after.opSeq)
-      (meta.opSeq, after.opSeq, n -> TableMeta.diff(at, change(at)))
+      (meta.opSeq, after.opSeq, n -> patch)
     }.unzip3
     TxnRecord(tables = names, expected = expected, next = next,
       patch = patch.filterNot(_._2.isEmpty).toMap)
@@ -1492,9 +1483,7 @@ final class Catalog(spark: SparkSession, warehouse: String,
    */
   def asOfTimestamp(name: String, ts: Long): org.apache.spark.sql.DataFrame = {
     val meta = readMeta(name)
-    def resolve(m: Meta): Option[Long] = m.commitVers.zip(m.commitTs)
-      .collect { case (v, t) if t <= ts => v }
-      .sorted.lastOption
+    def resolve(m: Meta): Option[Long] = m.loggedVersion(_ <= ts)
     resolve(meta) match {
       case Some(v) => getTable(name).asOfVersion(v)
       case None =>
@@ -1566,10 +1555,10 @@ final class Catalog(spark: SparkSession, warehouse: String,
       // post-compaction commits stamp from 1 again. The commit log resets
       // too — history collapsed, historical stamps are gone.
       writeMeta(name, meta.copy(opSeq = 0, multiVer = false, tailFloor = 0,
-        commitVers = Nil, commitTs = Nil, epoch = meta.epoch + 1,
+        commitLog = Nil, epoch = meta.epoch + 1,
         // every live file now carries the widened types — the mapping is
         // vacuous and clearing it restores plain inferred reads
-        widenCols = Nil, widenTypes = Nil))
+        widened = ListMap.empty))
       rebuildProjections(name, meta)
     } }
 
@@ -1739,13 +1728,11 @@ final class Catalog(spark: SparkSession, warehouse: String,
   def vacuumOlderThan(name: String, ts: Long): LineageTable =
     lock(name).synchronized { withCommitMarker(name) {
       val meta0 = readMeta(name)
-      require(meta0.commitVers.nonEmpty,
+      require(meta0.commitLog.nonEmpty,
         s"vacuumOlderThan: '$name' has no logged commits to resolve the " +
           "instant against — commit with commitAt (wall-clock commits) " +
           "or use the count-based vacuum(keep)")
-      val bound = meta0.commitVers.zip(meta0.commitTs)
-        .collect { case (v, t) if t <= ts => v }.sorted.lastOption
-        .getOrElse(0L)
+      val bound = meta0.loggedVersion(_ <= ts).getOrElse(0L)
       // retention drops retained snapshots too — they hold FULL
       // pre-rewrite history, and a retention pass that left them behind
       // would not have dropped anything
@@ -1865,8 +1852,7 @@ final class Catalog(spark: SparkSession, warehouse: String,
       }
     }
     writeMeta(name, meta.copy(opSeq = opSeqNew, multiVer = conservative,
-      commitVers = Nil, commitTs = Nil, snaps = newSnaps,
-      epoch = meta.epoch + 1))
+      commitLog = Nil, snaps = newSnaps, epoch = meta.epoch + 1))
     // projections go BEFORE the swap (a crash leaves probes falling back
     // to the full candidate scan — for purge this is what makes erasure
     // hold: no projection file ever outlives the values it indexed) and
@@ -1880,12 +1866,12 @@ final class Catalog(spark: SparkSession, warehouse: String,
     // state, consistent — the next rewrite re-stages and converges)
     fs.delete(cloneManifestPath(name), false)
     var m2 = meta.copy(opSeq = opSeqNew, multiVer = hasMulti,
-      tailFloor = opSeqNew, commitVers = Nil, commitTs = Nil,
+      tailFloor = opSeqNew, commitLog = Nil,
       snaps = newSnaps, epoch = meta.epoch + 1,
       // post-swap the adopted base is uniformly wide (the staged write
       // read through the widening casts); retained snapshot manifests
       // keep the pre-rewrite widening for their own files
-      widenCols = Nil, widenTypes = Nil)
+      widened = ListMap.empty)
     writeMeta(name, m2)
     deleteRecursively(new Path(dir(name), "tail"))
     // retention expiry: meta first (a listed-but-deleted snapshot must
@@ -2710,11 +2696,9 @@ final class Catalog(spark: SparkSession, warehouse: String,
     val meta = readMeta(name)
     // retained snapshots' logs first (oldest snapshot first), then the
     // live log — together: every timestamp asOfTimestamp can resolve
-    val snapEntries = meta.snaps.flatMap { id =>
-      val sm = TableMeta.decodeMeta(readString(snapMetaPath(name, id)))
-      sm.commitVers.zip(sm.commitTs)
-    }
-    val rows = (snapEntries ++ meta.commitVers.zip(meta.commitTs)).map {
+    val snapEntries = meta.snaps.flatMap(id =>
+      TableMeta.decodeMeta(readString(snapMetaPath(name, id))).commitLog)
+    val rows = (snapEntries ++ meta.commitLog).map {
       case (v, t) => org.apache.spark.sql.Row(v, t)
     }
     val schema = org.apache.spark.sql.types.StructType(Seq(
@@ -3286,11 +3270,8 @@ final class Catalog(spark: SparkSession, warehouse: String,
     * first logged commit at-or-after `ts` (Delta's startingTimestamp
     * contract). 0 when `ts` precedes the whole log: the feed starts at
     * the tail's beginning. Metadata-only, zero data I/O. */
-  def versionBefore(name: String, ts: Long): Long = {
-    val m = readMeta(name)
-    m.commitVers.zip(m.commitTs)
-      .filter(_._2 < ts).map(_._1).lastOption.getOrElse(0L)
-  }
+  def versionBefore(name: String, ts: Long): Long =
+    readMeta(name).loggedVersion(_ < ts).getOrElse(0L)
 
   /** [[LineageTable.changesBetween]] with the re-stamp guard: a physical
     * rewrite re-stamped everything at-or-below `tail_floor`, so a range
@@ -3361,19 +3342,16 @@ final class Catalog(spark: SparkSession, warehouse: String,
       // (a dropped column's retired name, or the physical side of a live
       // rename) maps to a FRESH physical name — without this, re-adding
       // a dropped column would resurrect every value the drop retired
-      val taken = (meta.droppedPhys ++ meta.renPhysical ++
-        meta.columns.map(c => physOf(meta, c)) ++ meta.addedCols).toSet
+      val taken = (meta.droppedPhys ++ meta.renamed.values ++
+        meta.columns.map(c => physOf(meta, c)) ++ meta.added.keys).toSet
       val phys =
         if (!taken.contains(column)) column
         else Iterator.from(1).map(i => s"${column}_r$i")
           .find(p => !taken.contains(p)).get
-      val (rl, rp) =
-        if (phys == column) (meta.renLogical, meta.renPhysical)
-        else (meta.renLogical :+ column, meta.renPhysical :+ phys)
       writeMeta(name, meta.copy(columns = meta.columns :+ column,
-        addedCols = meta.addedCols :+ phys,
-        addedTypes = meta.addedTypes :+ tpe,
-        renLogical = rl, renPhysical = rp))
+        added = meta.added + (phys -> tpe),
+        renamed = if (phys == column) meta.renamed
+                  else meta.renamed + (column -> phys)))
       getTable(name)
     } }
 
@@ -3398,20 +3376,11 @@ final class Catalog(spark: SparkSession, warehouse: String,
       require(meta.columns.contains(column), s"$name has no column $column")
       requireNotLoadBearing(name, meta, column)
       val phys = physOf(meta, column)
-      val ai = meta.addedCols.indexOf(phys)
-      val (ac, at) =
-        if (ai >= 0) (meta.addedCols.patch(ai, Nil, 1),
-          meta.addedTypes.patch(ai, Nil, 1))
-        else (meta.addedCols, meta.addedTypes)
-      val ri = meta.renLogical.indexOf(column)
-      val (rl, rp) =
-        if (ri >= 0) (meta.renLogical.patch(ri, Nil, 1),
-          meta.renPhysical.patch(ri, Nil, 1))
-        else (meta.renLogical, meta.renPhysical)
+      // the widen entry stays: old files still carry the narrow type,
+      // and the explicit-schema tail read keeps their widened values
       writeMeta(name, meta.copy(
         columns = meta.columns.filterNot(_ == column),
-        addedCols = ac, addedTypes = at,
-        renLogical = rl, renPhysical = rp,
+        added = meta.added - phys, renamed = meta.renamed - column,
         droppedPhys = (meta.droppedPhys :+ phys).distinct))
       getTable(name)
     } }
@@ -3436,17 +3405,11 @@ final class Catalog(spark: SparkSession, warehouse: String,
       checked(to)
       requireNotLoadBearing(name, meta, from)
       val phys = physOf(meta, from)
-      val ri = meta.renLogical.indexOf(from)
-      val (rl0, rp0) =
-        if (ri >= 0) (meta.renLogical.patch(ri, Nil, 1),
-          meta.renPhysical.patch(ri, Nil, 1))
-        else (meta.renLogical, meta.renPhysical)
-      // renaming BACK onto the physical name dissolves the mapping
-      val (rl, rp) =
-        if (phys == to) (rl0, rp0) else (rl0 :+ to, rp0 :+ phys)
+      val rest = meta.renamed - from
       writeMeta(name, meta.copy(
         columns = meta.columns.map(c => if (c == from) to else c),
-        renLogical = rl, renPhysical = rp))
+        // renaming BACK onto the physical name dissolves the mapping
+        renamed = if (phys == to) rest else rest + (to -> phys)))
       getTable(name)
     } }
 
@@ -3491,18 +3454,11 @@ final class Catalog(spark: SparkSession, warehouse: String,
           s"(supported: ${widenable.map { case (f, ts) =>
             s"$f -> ${ts.mkString("/")}" }.mkString("; ")})")
       val phys = physOf(meta, column)
-      val wi = meta.widenCols.indexOf(phys)
-      val (wc, wt) =
-        if (wi >= 0) (meta.widenCols, meta.widenTypes.updated(wi, target))
-        else (meta.widenCols :+ phys, meta.widenTypes :+ target)
       // an ADDED column's declared type must follow, or the
       // null-materialization fill re-narrows it on tables whose files
       // never carried the column
-      val ai = meta.addedCols.indexOf(phys)
-      val at = if (ai >= 0) meta.addedTypes.updated(ai, target)
-               else meta.addedTypes
-      writeMeta(name, meta.copy(widenCols = wc, widenTypes = wt,
-        addedTypes = at))
+      writeMeta(name, meta.copy(widened = meta.widened.updated(phys, target),
+        added = meta.added.updatedWith(phys)(_.map(_ => target))))
       // a projection on the widened column would otherwise accumulate
       // MIXED physical types: its existing files carry the narrow type
       // and post-widen commit deltas append wide ones into the same
@@ -3532,7 +3488,7 @@ final class Catalog(spark: SparkSession, warehouse: String,
                                     column: String): Unit = {
     require(column != meta.key,
       s"$name: $column is the lineage key — structural, not evolvable")
-    constraintPairs(meta).foreach { case (cn, ex) =>
+    meta.constraints.foreach { case (cn, ex) =>
       val refs = org.apache.spark.sql.graft.Bridge.parseExpression(spark, ex)
         .collect { case a: org.apache.spark.sql.catalyst.analysis
           .UnresolvedAttribute => a.nameParts.last }
@@ -3587,9 +3543,9 @@ final class Catalog(spark: SparkSession, warehouse: String,
    *
    * The expression is validated (parse + resolve against the live
    * schema) BEFORE the meta write: a persisted unresolvable expression
-   * would otherwise fail every later commit. Stored hex-encoded in the
-   * metadata ([[Catalog.hex]]). The reference's integrity model is the
-   * implicit key-column contract (lstore/query.py:61 `key = columns[0]`); CHECK
+   * would otherwise fail every later commit. The reference's integrity
+   * model is the implicit key-column contract (lstore/query.py:61
+   * `key = columns[0]`); CHECK
    * generalizes it — note the lineage invariant "≤ 1 live row per key"
    * needs no constraint at all, it holds by snapshot construction.
    */
@@ -3597,34 +3553,27 @@ final class Catalog(spark: SparkSession, warehouse: String,
     lock(name).synchronized { withCommitMarker(name) {
       val meta = readMeta(name)
       checked(cname)
-      require(!meta.conNames.contains(cname),
+      require(!meta.constraints.contains(cname),
         s"$name: constraint $cname already exists")
       require(sqlExpr.trim.nonEmpty, "empty constraint expression")
       val bad = getTable(name).snapshot
         .where(!coalesce(expr(sqlExpr), lit(true))).limit(1).collect()
       require(bad.isEmpty,
         s"$name: existing rows violate $cname ($sqlExpr): ${bad.head}")
-      writeMeta(name, meta.copy(conNames = meta.conNames :+ cname,
-        conExprs = meta.conExprs :+ Catalog.hex(sqlExpr)))
+      writeMeta(name, meta.copy(constraints = meta.constraints + (cname -> sqlExpr)))
     } }
 
   /** DROP CONSTRAINT — metadata-only. */
   def dropConstraint(name: String, cname: String): Unit =
     lock(name).synchronized { withCommitMarker(name) {
       val meta = readMeta(name)
-      val i = meta.conNames.indexOf(cname)
-      require(i >= 0, s"$name: no constraint $cname")
-      writeMeta(name, meta.copy(
-        conNames = meta.conNames.patch(i, Nil, 1),
-        conExprs = meta.conExprs.patch(i, Nil, 1)))
+      require(meta.constraints.contains(cname), s"$name: no constraint $cname")
+      writeMeta(name, meta.copy(constraints = meta.constraints - cname))
     } }
 
   /** The table's CHECK constraints, name → SQL expression. */
   def constraints(name: String): Map[String, String] =
-    constraintPairs(readMeta(name)).toMap
-
-  private def constraintPairs(meta: Meta): Seq[(String, String)] =
-    meta.conNames.zip(meta.conExprs.map(Catalog.unhex))
+    readMeta(name).constraints
 
   /**
    * Commit-time CHECK gate: ONE distributed job over the delta (all
@@ -3637,7 +3586,7 @@ final class Catalog(spark: SparkSession, warehouse: String,
    */
   private def validateConstraints(name: String, meta: Meta,
       delta: Option[org.apache.spark.sql.DataFrame]): Unit = {
-    val cons = constraintPairs(meta)
+    val cons = meta.constraints
     if (cons.nonEmpty) delta.foreach { d =>
       // _del is the 0/1 lineage tombstone marker, not a boolean
       val live = d.where(col(LineageTable.DEL) === 0)
@@ -3705,6 +3654,13 @@ final class Catalog(spark: SparkSession, warehouse: String,
     s
   }
 
+  /** Every string the metadata stores, names and types alike (constraint
+    * expressions as their hex). */
+  private def checkedMeta(m: Meta): Meta = {
+    TableMeta.texts(m).foreach(checked)
+    m
+  }
+
   /**
    * Crash-atomic metadata write: stage the full JSON as `.tmp`, delete the
    * old file, rename the stage into place (rename is the FS's atomic
@@ -3715,13 +3671,7 @@ final class Catalog(spark: SparkSession, warehouse: String,
    * the complete stage. Every state is readable.
    */
   private def writeMeta(name: String, m: Meta): Unit = {
-    // every string the metadata carries, names and types alike
-    m.productIterator.foreach {
-      case s: String => checked(s)
-      case xs: IterableOnce[_] =>
-        xs.iterator.foreach { case s: String => checked(s); case _ => () }
-      case _ => ()
-    }
+    checkedMeta(m)
     // Adopt a crash-orphaned stage BEFORE overwriting it: while the main
     // file is absent, readers serve directly off the stage ([[readMeta]]
     // never renames — promotion on the read path could steal the rename
@@ -3871,15 +3821,4 @@ object Catalog {
     * any real deployment (Delta's txn map has the same unbounded-growth
     * concern and solves it with age-based expiry). */
   val maxStreamWriters = 64
-
-  /** Hex round-trip for CHECK-constraint expressions: `con_exprs` has
-    * always been stored hex-encoded, and stays so for on-disk
-    * compatibility ([0-9a-f] also passes the metadata identifier check). */
-  private[core] def hex(s: String): String =
-    s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      .map("%02x".format(_)).mkString
-
-  private[core] def unhex(h: String): String =
-    new String(h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray,
-      java.nio.charset.StandardCharsets.UTF_8)
 }

@@ -3,16 +3,21 @@ package graft.core
 import com.fasterxml.jackson.annotation.JsonInclude
 import com.fasterxml.jackson.core.JsonGenerator
 import com.fasterxml.jackson.core.util.MinimalPrettyPrinter
-import com.fasterxml.jackson.databind.{DeserializationFeature, PropertyNamingStrategies}
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, PropertyNamingStrategies}
 import com.fasterxml.jackson.databind.json.JsonMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
+
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
 
 /**
  * Table metadata: the content of `<table>/_graft.json` and of each
  * retained snapshot manifest `_snap/<id>.json`. On disk it is one flat
  * JSON object of the fields below, in this order, under their snake_case
  * names ([[TableMeta]]); a field missing from the file takes its default.
+ * Each keyed pairing is one insertion-ordered map here and two parallel
+ * arrays on disk (keys, then values), a layout only [[TableMeta]] knows.
  */
 private[core] case class Meta(
     key: String,
@@ -28,26 +33,25 @@ private[core] case class Meta(
       * so a tail file wholly at-or-below it is a
       * crash leftover ([[healLeftoverTail]]). */
     tailFloor: Long = 0,
-    /** Columns added by [[addColumn]] after creation,
-      * with their declared types (parallel seqs,
-      * PHYSICAL names): files written before the add
-      * lack the column and read back as null
-      * ([[getTable]] fill). */
-    addedCols: Seq[String] = Nil,
-    addedTypes: Seq[String] = Nil,
+    /** Columns added by [[addColumn]] after creation:
+      * PHYSICAL name → declared type. Files written
+      * before the add lack the column and read back
+      * as null ([[getTable]] fill). On disk
+      * `added_cols`/`added_types`. */
+    added: ListMap[String, String] = ListMap.empty,
     /** Columns with a maintained (column, key)
       * projection side table ([[createProjection]]):
       * commit appends deltas, compaction rebuilds. */
     projCols: Seq[String] = Nil,
     /** COLUMN MAPPING ([[renameColumn]], the Delta
       * column-mapping shape): logical name →
-      * physical file-column name, parallel seqs;
-      * only renamed columns appear. Writes map
-      * logical→physical ([[lineageWriter]]), reads
-      * map back ([[assembleTable]]) — no data file
-      * is ever rewritten for a rename. */
-    renLogical: Seq[String] = Nil,
-    renPhysical: Seq[String] = Nil,
+      * physical file-column name; only renamed
+      * columns appear. Writes map logical→physical
+      * ([[lineageWriter]]), reads map back
+      * ([[assembleTable]]) — no data file is ever
+      * rewritten for a rename. On disk
+      * `ren_logical`/`ren_physical`. */
+    renamed: ListMap[String, String] = ListMap.empty,
     /** Physical columns retired by [[dropColumn]]:
       * old files still carry them (metadata-only
       * drop); a later re-ADD of the same logical
@@ -56,15 +60,16 @@ private[core] case class Meta(
       * resurrect. */
     droppedPhys: Seq[String] = Nil,
     /** Commit log for timestamp time travel
-      * ([[commitAt]]/[[asOfTimestamp]]): parallel
-      * seqs of (resulting op_seq, caller timestamp),
-      * append-only and time-ordered; cleared by any
-      * physical re-stamp. */
-    commitVers: Seq[Long] = Nil,
-    commitTs: Seq[Long] = Nil,
+      * ([[commitAt]]/[[asOfTimestamp]]): (resulting
+      * op_seq, caller timestamp) pairs, append-only
+      * and time-ordered; cleared by any physical
+      * re-stamp. On disk `commit_vers`/`commit_ts`. */
+    commitLog: Seq[(Long, Long)] = Nil,
     /** Last applied streaming batch PER WRITER
-      * (parallel seqs: writer id → last batch id),
-      * recorded atomically with the commit (its
+      * (writer id → last batch id, least recently
+      * committing writer first; on disk
+      * `stream_apps`/`stream_batches`), recorded
+      * atomically with the commit (its
       * record) — the Delta txn-appId/version
       * idempotence pattern ([[tryCommit]] skips a
       * replayed batch). A MAP, not a single slot:
@@ -75,14 +80,13 @@ private[core] case class Meta(
       * [[Catalog.maxStreamWriters]] entries (oldest
       * dropped — a dropped writer's replay window
       * has long since closed). */
-    streamApps: Seq[String] = Nil,
-    streamBatches: Seq[Long] = Nil,
-    /** ANALYZE results ([[analyzeTable]]): per-
-      * column NDV estimates (parallel seqs) + live
-      * row count, the statistics [[graft.plans
-      * .NdvBroadcastRule]] plans joins from. */
-    statsCols: Seq[String] = Nil,
-    statsNdv: Seq[Long] = Nil,
+    streamBatches: ListMap[String, Long] = ListMap.empty,
+    /** ANALYZE results ([[analyzeTable]]): column
+      * → NDV estimate (on disk `stats_cols`/
+      * `stats_ndv`) + live row count, the
+      * statistics [[graft.plans.NdvBroadcastRule]]
+      * plans joins from. */
+    stats: ListMap[String, Long] = ListMap.empty,
     statsRows: Long = -1L,
     /** Retained pre-rewrite snapshot ids, oldest
       * first (id = the pre-rewrite op_seq; data
@@ -99,14 +103,13 @@ private[core] case class Meta(
       * the wrong data as if it were right. */
     snapsDropped: Boolean = false,
     /** CHECK constraints ([[addConstraint]]):
-      * names (checked identifiers) parallel to
-      * their SQL expressions, hex-encoded
-      * ([[Catalog.hex]] — the form existing
-      * metadata files hold). Enforced at O(delta) per commit
-      * ([[tryCommit]]/[[commitMulti]]); the full-
-      * table scan happens ONCE, at add time. */
-    conNames: Seq[String] = Nil,
-    conExprs: Seq[String] = Nil,
+      * name (a checked identifier) → SQL
+      * expression. On disk `con_names`/`con_exprs`,
+      * the expression hex-encoded as every metadata
+      * file has held it. Enforced at O(delta) per
+      * commit ([[tryCommit]]/[[commitMulti]]); the
+      * full-table scan happens ONCE, at add time. */
+    constraints: ListMap[String, String] = ListMap.empty,
     /** Materialized-view definition
       * ([[createMaterializedView]]): the source
       * table + summed columns + group columns
@@ -210,15 +213,14 @@ private[core] case class Meta(
     partFuncs: Seq[String] = Nil,
     /** TYPE WIDENING ([[widenColumn]], the Delta
       * type-widening shape, r11): PHYSICAL column
-      * name → widened type, parallel seqs.
-      * Metadata-only — old files keep their narrow
+      * name → widened type (on disk `widen_cols`/
+      * `widen_types`). Metadata-only — old files keep their narrow
       * physical type and the reader upcasts
       * (explicit-schema parquet reads promote
       * int32→bigint / float→double per file);
       * writes use the widened type from the first
       * post-widen op on. */
-    widenCols: Seq[String] = Nil,
-    widenTypes: Seq[String] = Nil) {
+    widened: ListMap[String, String] = ListMap.empty) {
   /** First partition column — the single-column convenience the r11
     * surface exposed; multi-column callers read [[partCols]]. */
   def partCol: Option[String] = partCols.headOption
@@ -228,6 +230,11 @@ private[core] case class Meta(
   def funcs: Seq[String] =
     if (partFuncs.size == partCols.size) partFuncs
     else partCols.map(_ => "id")
+  /** The newest logged op_seq whose timestamp passes `within` — what
+    * timestamp time travel, time-based vacuum and a change feed's
+    * starting timestamp resolve through. */
+  def loggedVersion(within: Long => Boolean): Option[Long] =
+    commitLog.collect { case (v, t) if within(t) => v }.maxOption
 }
 
 /**
@@ -254,7 +261,9 @@ private[core] case class TxnRecord(coordinator: Option[String] = None,
 
 /** The one JSON codec for [[Meta]] and [[TxnRecord]]. It writes one line
   * in the `{"field": value, "list": [a, b]}` spacing earlier releases
-  * wrote, and reads every earlier release's files through one path. */
+  * wrote, and reads every earlier release's files through one path. It
+  * alone knows that a [[Meta]] map is stored as two parallel arrays: the
+  * on-disk tree ([[tree]]) serves encoding, [[diff]] and [[patch]]. */
 private[core] object TableMeta {
   private val mapper = JsonMapper.builder().addModule(DefaultScalaModule)
     .propertyNamingStrategy(PropertyNamingStrategies.SNAKE_CASE)
@@ -271,8 +280,31 @@ private[core] object TableMeta {
       g.writeRaw(", ")
   })
 
-  def encode(m: Meta): String = writer.writeValueAsString(m)
+  /** Each keyed pairing of [[Meta]] with the arrays that store its keys
+    * and its values on disk, at the pairing's position. */
+  private val pairs = Seq(
+    ("added", "added_cols", "added_types"),
+    ("renamed", "ren_logical", "ren_physical"),
+    ("commit_log", "commit_vers", "commit_ts"),
+    ("stream_batches", "stream_apps", "stream_batches"),
+    ("stats", "stats_cols", "stats_ndv"),
+    ("constraints", "con_names", "con_exprs"),
+    ("widened", "widen_cols", "widen_types"))
+  private val byField = pairs.map(p => p._1 -> p).toMap
+  private val byKeys = pairs.map(p => p._2 -> p).toMap
+  private val valueArrays = pairs.map(_._3).toSet
+
+  def encode(m: Meta): String = writer.writeValueAsString(tree(m))
   def encode(r: TxnRecord): String = writer.writeValueAsString(r)
+
+  /** Every text value `m` stores, as written — names, types and the
+    * hex of constraint expressions. */
+  def texts(m: Meta): Iterator[String] = {
+    def walk(n: JsonNode): Iterator[String] =
+      if (n.isTextual) Iterator(n.textValue)
+      else n.elements.asScala.flatMap(walk)
+    walk(tree(m))
+  }
 
   def decodeMeta(json: String): Meta = {
     val o = mapper.readTree(json) match {
@@ -287,7 +319,7 @@ private[core] object TableMeta {
         "part_cols" -> "part_col", "part_types" -> "part_type"))
       if (o.path(list).isEmpty && o.path(scalar).isTextual)
         o.putArray(list).add(o.get(scalar))
-    val m = mapper.treeToValue(o, classOf[Meta])
+    val m = fromTree(o)
     require(m.key != null, s"table metadata lacks a key: $json")
     m
   }
@@ -305,7 +337,63 @@ private[core] object TableMeta {
 
   /** `m` with the fields of a [[diff]] replaced. */
   def patch(m: Meta, fields: ObjectNode): Meta =
-    mapper.treeToValue(tree(m).setAll[ObjectNode](fields), classOf[Meta])
+    fromTree(tree(m).setAll[ObjectNode](fields))
 
-  private def tree(m: Meta): ObjectNode = mapper.valueToTree[ObjectNode](m)
+  /** `m` in its on-disk shape: each map split in place into its key and
+    * value arrays, constraint expressions hex-encoded. */
+  private def tree(m: Meta): ObjectNode = {
+    val out = mapper.createObjectNode()
+    mapper.valueToTree[ObjectNode](m).properties.forEach { e =>
+      byField.get(e.getKey) match {
+        case Some((field, keys, values)) =>
+          val (ks, vs) = (out.putArray(keys), out.putArray(values))
+          // the commit log is an array of pairs, every other field an object
+          if (field == "commit_log")
+            e.getValue.forEach { kv => ks.add(kv.get(0)); vs.add(kv.get(1)) }
+          else e.getValue.properties.forEach { kv =>
+            ks.add(kv.getKey)
+            if (field == "constraints") vs.add(hex(kv.getValue.textValue))
+            else vs.add(kv.getValue)
+          }
+        case None => out.set[JsonNode](e.getKey, e.getValue)
+      }
+    }
+    out
+  }
+
+  /** The [[Meta]] an on-disk tree holds: each key array zipped with its
+    * value array into the map at the key array's position. */
+  private def fromTree(o: ObjectNode): Meta = {
+    val in = mapper.createObjectNode()
+    o.properties.forEach { e =>
+      byKeys.get(e.getKey) match {
+        case Some((field, _, values)) =>
+          val zipped = e.getValue.elements.asScala
+            .zip(o.path(values).elements.asScala)
+          if (field == "commit_log") {
+            val log = in.putArray(field)
+            zipped.foreach { case (k, v) => log.addArray().add(k).add(v) }
+          } else {
+            val map = in.putObject(field)
+            zipped.foreach { case (k, v) =>
+              if (field == "constraints") map.put(k.asText, unhex(v.asText))
+              else map.set[JsonNode](k.asText, v)
+            }
+          }
+        case None if valueArrays(e.getKey) => ()
+        case None => in.set[JsonNode](e.getKey, e.getValue)
+      }
+    }
+    mapper.treeToValue(in, classOf[Meta])
+  }
+
+  /** `con_exprs` has always held each expression hex-encoded, which also
+    * passes the metadata identifier check. */
+  private def hex(s: String): String =
+    s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      .map("%02x".format(_)).mkString
+
+  private def unhex(h: String): String =
+    new String(h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray,
+      java.nio.charset.StandardCharsets.UTF_8)
 }

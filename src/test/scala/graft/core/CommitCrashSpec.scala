@@ -140,6 +140,23 @@ class CommitCrashSpec extends SparkSpec {
     assert(rows(open(wh), "t").contains(Seq(1L, 110L, "a")))
   }
 
+  test("a writer id that is not an identifier aborts before anything is written") {
+    val wh = copyOfTemplate()
+    val cat = open(wh)
+    table(cat, "u")
+    val before = (rows(cat, "t"), cat.getTable("t").opSeq)
+    val e = intercept[IllegalArgumentException](
+      cat.commitStreamBatch("t", bump, "orders-stream", 1L))
+    assert(e.getMessage.contains("'orders-stream'"))
+    assert(Option(new File(wh, "_txn").list()).toSeq.flatten.isEmpty,
+      "no record and no staging")
+    // the warehouse still opens and commits: nothing is left to recover
+    val fresh = open(wh)
+    assert((rows(fresh, "t"), fresh.getTable("t").opSeq) === before)
+    fresh.commit("u", Txn.empty.insert(Seq((1000L, 1L)).toDF("k", "v")))
+    assert(open(wh).getTable("u").opSeq === 1L)
+  }
+
   // ------------------------------------------ concurrent recovery
 
   private def table(cat: Catalog, name: String): Unit =
