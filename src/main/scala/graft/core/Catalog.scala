@@ -103,6 +103,7 @@ final class Catalog(spark: SparkSession, warehouse: String,
   private def dir(table: String) = new Path(root, checked(table))
   private def metaPath(table: String) = new Path(dir(table), "_graft.json")
   private def metaTmpPath(table: String) = new Path(dir(table), "_graft.json.tmp")
+  private def baseDir(table: String) = new Path(dir(table), "base")
   private def projDir(table: String, column: String) =
     new Path(new Path(dir(table), "proj"), column)
 
@@ -409,7 +410,7 @@ final class Catalog(spark: SparkSession, warehouse: String,
     * as a `p`-prefixed STRING so directory-value inference can never
     * mangle the real column's type — the data column itself stays in
     * the files), everything else writes flat. Every base rewrite
-    * ([[createTable]], [[saveCompacted]], [[restampSwap]]) goes through
+    * ([[createTable]], [[commitRewrite]]) goes through
     * here, so the partition layout survives all maintenance. */
   private def writeBaseData(df: org.apache.spark.sql.DataFrame, meta: Meta,
                             path: Path): Unit =
@@ -483,10 +484,7 @@ final class Catalog(spark: SparkSession, warehouse: String,
     if (meta.stats.nonEmpty)
       graft.plans.NdvStats.register(fs.makeQualified(dir(name)).toString,
         graft.plans.NdvStats.TableStats(meta.stats, meta.statsRows))
-    val base = baseFrame(name, meta)
-    val tailDir = new Path(dir(name), "tail")
-    healLeftoverTail(tailDir, meta.tailFloor)
-    assembleTable(meta, base, tailDir)
+    assembleTable(meta, liveBase(name, meta), new Path(dir(name), "tail"))
   }
 
   /**
@@ -727,13 +725,8 @@ final class Catalog(spark: SparkSession, warehouse: String,
                              tailPred: Column): DataFrame = {
     require(!hasManifest(name),
       s"$caller: '$name' is a shallow clone — fold it first")
-    val raw = if (isEvolved(meta))
-      spark.read.option("mergeSchema", "true").parquet(baseDir(name).toString)
-    else scanGraftDir(baseDir(name), pdColNames(meta))
-    val tailDir = new Path(dir(name), "tail")
-    healLeftoverTail(tailDir, meta.tailFloor)
-    assembleTable(meta, pruneBase(raw).drop(pdColNames(meta): _*), tailDir,
-      tailFilter = Some(tailPred)).snapshot
+    assembleTable(meta, baseFrame(meta, baseDir(name), pruneBase),
+      new Path(dir(name), "tail"), tailFilter = Some(tailPred)).snapshot
   }
 
   /** The FIRST partition column of a table, if [[createTable]] set one. */
@@ -753,61 +746,11 @@ final class Catalog(spark: SparkSession, warehouse: String,
     * [[partitionColsOf]] (r12). */
   def partitionFuncsOf(name: String): Seq[String] = readMeta(name).funcs
 
-  /**
-   * Crash-window heal for the re-stamp swap ([[vacuum]]/[[purge]]/
-   * [[foldTail]]): a crash between base adoption and tail deletion leaves
-   * the pre-swap tail on disk. Reads stay consistent (strict shadowing:
-   * every leftover row ranks below the re-stamped base), but for PURGE
-   * the leftover physically retains erased rows — so erasure must
-   * converge without waiting for a manual follow-up op.
-   *
-   * Detection is exact and footer-only: `tail_floor` records the op_seq
-   * of the last completed swap, every legitimate post-swap commit stamps
-   * `_ver > tail_floor` (op_seq is monotonic except at [[saveCompacted]],
-   * which resets the floor with it), and a leftover file's rows all carry
-   * pre-swap stamps ≤ tail_floor. Deletion is per FILE (a leftover is
-   * whole files — nothing rewrites tail files in place), so a tail that
-   * mixes leftover files with post-crash commits heals precisely. A file
-   * whose footer lacks usable `_ver` stats is kept — shadowing keeps it
-   * harmless and the next swap reclaims it; a wrong bound here would
-   * delete live data.
-   */
-  private def healLeftoverTail(tailDir: Path, floor: Long): Unit =
-    if (floor > 0 && isDir(tailDir)) {
-      fs.listStatus(tailDir).foreach { s =>
-        if (s.isFile && s.getPath.getName.endsWith(".parquet")) {
-          val (rows, maxVer) = graft.sources.ParquetMeta
-            .footerCountMax(hconf, s.getPath.toString, LineageTable.VER)
-          if (rows == 0 || maxVer.exists(_ <= floor)) fs.delete(s.getPath, false)
-        }
-      }
-      if (!hasParquet(tailDir)) deleteRecursively(tailDir)
-    }
-
-  /** Recover-aware base dir: if a crash interrupted [[saveCompacted]]
-    * between retiring the old base and adopting the staged one, the data
-    * is intact under base_old — fall back to it. */
-  private def baseDir(name: String): Path = {
-    val base = new Path(dir(name), "base")
-    val old = new Path(dir(name), "base_old")
-    if (isDir(base)) base
-    else if (isDir(old)) old
-    else {
-      require(metaExists(name), s"no such table: $name")
-      // crash between a retention fold's two renames: the retired base
-      // lives in the newest listed snapshot ([[swapBaseIntoSnap]])
-      readMeta(name).snaps.lastOption
-        .map(id => snapDataDir(name, id, "base"))
-        .filter(isDir)
-        .getOrElse(base)
-    }
-  }
-
   // ------------------------------------------------------ shallow clones
 
   /** A shallow clone's frozen base manifest: one absolute parquet file
     * path per line ([[cloneTable]]). Presence of this file makes
-    * [[baseFrame]] read the listed files instead of `base/`; any
+    * [[liveBase]] read the listed files instead of `base/`; any
     * physical rewrite materializes the clone into its own base dir and
     * deletes the manifest (the clone DETACHES — Delta shallow-clone
     * semantics). */
@@ -875,12 +818,11 @@ final class Catalog(spark: SparkSession, warehouse: String,
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
       .map(s => fs.makeQualified(s.getPath).toString)
 
-  /** The table's base rows: the frozen manifest file list for a shallow
-    * clone, the `base/` directory (with crash fallbacks, [[baseDir]])
-    * otherwise. Schema-merging when evolution is in play, matching the
-    * tail read in [[assembleTable]]. */
-  private def baseFrame(name: String,
-                        meta: Meta): org.apache.spark.sql.DataFrame =
+  /** The live base rows of `name`: the frozen manifest file list for a
+    * shallow clone (schema-merging when evolution is in play: a clone's
+    * manifest mixes base and tail files), the `base/` directory
+    * otherwise. */
+  private def liveBase(name: String, meta: Meta): DataFrame =
     if (hasManifest(name)) {
       val files = readString(cloneManifestPath(name))
         .split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
@@ -895,16 +837,21 @@ final class Catalog(spark: SparkSession, warehouse: String,
           case Some(s) => spark.read.schema(s).parquet(files: _*)
           case None => spark.read.parquet(files: _*)
         }
-    } else {
-      // a partitioned base restores `_pd*` from the directory names — a
-      // storage artifact, not a table column (the real partition column
-      // lives IN the files); the pruned read path filters on it BEFORE
-      // this drop ([[partitionSnapshot]]). Unpartitioned tables drop
-      // nothing: a (pre-r12 legacy) data column named `_pd` must survive.
-      val raw = scanGraftDir(baseDir(name),
-        if (meta.partCols.isEmpty) Nil else pdColNames(meta))
-      if (meta.partCols.isEmpty) raw else raw.drop(pdColNames(meta): _*)
-    }
+    } else baseFrame(meta, baseDir(name))
+
+  /** The rows of base directory `base` — the live base or a retained
+    * snapshot's — read under one footer's schema ([[scanGraftDir]]): a
+    * base is written whole by one job, so every file carries the same
+    * schema, evolved table or not. A partitioned base restores `_pd*`
+    * from the directory names — a storage artifact, not a table column
+    * (the real partition column lives IN the files) — so they drop after
+    * `prune` has filtered on them ([[prunedSnapshot]]). Unpartitioned
+    * tables drop nothing: a (pre-r12 legacy) data column named `_pd` must
+    * survive. */
+  private def baseFrame(meta: Meta, base: Path,
+                        prune: DataFrame => DataFrame = identity): DataFrame =
+    if (meta.partCols.isEmpty) prune(scanGraftDir(base))
+    else prune(scanGraftDir(base, pdColNames(meta))).drop(pdColNames(meta): _*)
 
   /**
    * Zero-copy shallow clone (the Delta `CREATE TABLE ... SHALLOW CLONE`
@@ -1060,7 +1007,7 @@ final class Catalog(spark: SparkSession, warehouse: String,
         // reject out-of-order stamps BEFORE anything is written
         commitTs.foreach(ts => require(meta.commitLog.forall(_._2 <= ts),
           s"$name: commit timestamp $ts precedes the log tail"))
-        commitStaged(Map(name -> txn), m => change {
+        commitStaged("multi")(stage(_, Map(name -> txn), m => change {
           val logged = commitTs.fold(m)(ts =>
             m.copy(commitLog = m.commitLog :+ (m.opSeq -> ts)))
           // the writer's entry moves last: the least recently
@@ -1069,7 +1016,7 @@ final class Catalog(spark: SparkSession, warehouse: String,
             logged.copy(streamBatches = (logged.streamBatches - app +
               (app -> bid)).takeRight(Catalog.maxStreamWriters))
           }
-        })
+        }))
         // The reference's background-merge trigger, run inline on
         // commit. On a LOGGED (commitAt) commit this is only safe when
         // snapshot retention is on: with retention, foldTail moves the
@@ -1202,20 +1149,24 @@ final class Catalog(spark: SparkSession, warehouse: String,
     // recovery takes its own per-record locks in sorted order, and
     // nesting those inside ours could interleave two lock orders.
     recoverTxns()
-    withLocks(names) { withMarkers(names) { commitStaged(txns) } }
+    withLocks(names) { withMarkers(names) {
+      commitStaged("multi")(stage(_, txns))
+    } }
     postCommitMaintenance(names)
     names.map(n => n -> getTable(n)).toMap
   }
 
-  /** Stage `txns`, create their record — the commit point — and roll it
-    * forward. The caller holds every table's lock and marker. */
-  private def commitStaged(txns: Map[String, Txn],
-                           change: Meta => Meta = identity): Unit = {
+  /** Stage a transaction under `_txn/<id>/` — `stage` writes it and
+    * returns its record — create the record, the commit point, and roll
+    * it forward. The caller holds every table's lock and marker; `kind`
+    * names the crash points ("multi" for commits, "rewrite" for
+    * [[commitRewrite]]). */
+  private def commitStaged(kind: String)(stage: String => TxnRecord): Unit = {
     val id = "tx_" + java.util.UUID.randomUUID().toString.replace("-", "_")
-    val rec = stage(id, txns, change)
-    crashPoint("multi-staged")
+    val rec = stage(id)
+    crashPoint(s"$kind-staged")
     writeRecord(id, txnRecordPath(id), rec)
-    crashPoint("multi-committed")
+    crashPoint(s"$kind-committed")
     applyTxn(id, rec, txnRecordPath(id))
   }
 
@@ -1318,6 +1269,7 @@ final class Catalog(spark: SparkSession, warehouse: String,
     * retires it, once every participant's part is gone. */
   private def applyTxn(id: String, rec: TxnRecord, record: Path): Unit = {
     rec.tables.lazyZip(rec.expected).lazyZip(rec.next).foreach { (n, e, x) =>
+      val kind = if (rec.rewrites.contains(n)) "rewrite" else "multi"
       val meta = readMeta(n)
       if (meta.opSeq == e) {
         val at = meta.copy(opSeq = x)
@@ -1325,9 +1277,13 @@ final class Catalog(spark: SparkSession, warehouse: String,
       } else require(meta.opSeq == x,
         s"$n: op_seq ${meta.opSeq} matches neither the transaction's " +
           s"expected $e nor committed $x state — foreign writer interleaved")
-      crashPoint(s"multi-meta-$n")
+      crashPoint(s"$kind-meta-$n")
       val sdir = new Path(new Path(txnRoot, id), n)
-      if (isDir(sdir) && hasParquet(sdir)) {
+      // a rewrite's staging holds a new base, never tail files
+      if (kind == "rewrite") {
+        rollRewrite(n, e, sdir, readMeta(n))
+        crashPoint(s"rewrite-proj-$n")
+      } else if (isDir(sdir) && hasParquet(sdir)) {
         // projections BEFORE rows, so a crash between the two leaves the
         // projection a SUPERSET of the lineage; a recovery re-run may
         // re-append pairs — extra candidates are filtered by the probe's
@@ -1349,7 +1305,7 @@ final class Catalog(spark: SparkSession, warehouse: String,
         }
       }
       deleteRecursively(sdir)
-      crashPoint(s"multi-done-$n")
+      crashPoint(s"$kind-done-$n")
     }
     deleteRecursively(new Path(txnRoot, id))
     fs.delete(record, false)
@@ -1489,32 +1445,28 @@ final class Catalog(spark: SparkSession, warehouse: String,
       case None =>
         // no current-log entry at-or-before ts: walk retained snapshots
         // newest-first — each manifest's log addresses its own retired
-        // files, so the read is the snapshot's data at ITS version. An
-        // incomplete snapshot (a crash-interrupted fold whose base never
-        // retired — the live table still holds that data) is skipped.
+        // files, so the read is the snapshot's data at ITS version
         val snapMetas = meta.snaps.reverse.map(id =>
           id -> TableMeta.decodeMeta(readString(snapMetaPath(name, id))))
-        snapMetas.collectFirst { case (id, sm)
-            if isDir(snapDataDir(name, id, "base")) && resolve(sm).isDefined =>
+        snapMetas.collectFirst { case (id, sm) if resolve(sm).isDefined =>
           loadSnapshot(name, id, sm).asOfVersion(resolve(sm).get)
         }.getOrElse {
           // ts precedes ALL logged history. If retention ever dropped a
           // snapshot, the state at ts may have lived in it — clamping
           // would serve wrong data as if right, so ERROR (the Iceberg
           // expire-snapshots contract). Otherwise clamp to the oldest
-          // addressable base state: the oldest complete snapshot's
-          // pre-log base, or — with no snapshots — the live table's
-          // tail_floor (0 for a never-rewritten table = original base).
+          // addressable base state: the oldest snapshot's pre-log base,
+          // or — with no snapshots — the live table's tail_floor (0 for
+          // a never-rewritten table = original base).
           if (meta.snapsDropped)
             throw new IllegalArgumentException(
               s"$name: timestamp $ts is beyond the retention horizon — " +
                 "the snapshots covering it were expired or erased " +
                 "(vacuum/purge/merge); raise snapshotRetention to keep " +
                 "more pre-compaction states")
-          snapMetas.reverse.collectFirst { case (id, sm)
-              if isDir(snapDataDir(name, id, "base")) =>
-            loadSnapshot(name, id, sm).asOfVersion(sm.tailFloor)
-          }.getOrElse(getTable(name).asOfVersion(meta.tailFloor))
+          snapMetas.lastOption.fold(getTable(name).asOfVersion(meta.tailFloor)) {
+            case (id, sm) => loadSnapshot(name, id, sm).asOfVersion(sm.tailFloor)
+          }
         }
     }
   }
@@ -1523,67 +1475,28 @@ final class Catalog(spark: SparkSession, warehouse: String,
     * meta over the snapshot's own base/tail dirs. Read-only by
     * construction (nothing ever writes under a listed snapshot). */
   private def loadSnapshot(name: String, id: Long, sm: Meta): LineageTable =
-    assembleTable(sm,
-      spark.read.parquet(snapDataDir(name, id, "base").toString),
+    assembleTable(sm, baseFrame(sm, snapDataDir(name, id, "base")),
       snapDataDir(name, id, "tail"))
 
   /** Persist a full table state: compacted base, empty tail (reference:
     * Table.__merge + Database.close persistence in one step). History
-    * COLLAPSES to the live snapshot (the reference's merge semantics);
-    * auto-compaction uses the history-preserving [[foldTail]] instead.
-    * The base is range-partitioned + sorted by the indexed column (or the
-    * key), so min-max pruning serves probes on that column. The swap is
-    * crash-tolerant: base retires to base_old before the staged base is
-    * adopted, and [[getTable]] falls back to base_old if a crash lands
-    * between the two renames. */
+    * COLLAPSES to the live snapshot (the reference's merge semantics) and
+    * retained snapshots collapse with it; auto-compaction uses the
+    * history-preserving [[foldTail]] instead. The base is
+    * range-partitioned + sorted by the indexed column (or the key), so
+    * min-max pruning serves probes on that column. One [[commitRewrite]]:
+    * a crash reopens to the state before or after it. */
   def saveCompacted(name: String, t: LineageTable): Unit =
     lock(name).synchronized { withCommitMarker(name) {
-      // history collapses — retained snapshots collapse with it
-      val meta = dropSnapshots(name, readMeta(name))
-      val staged = new Path(dir(name), "base_staged")
-      // stage FIRST: `t` may have been read through the baseDir fallback
-      // (base missing, base_old live after an interrupted swap), so its
-      // plan references whichever directory exists — nothing may be moved
-      // or deleted until the new state is fully written out.
-      writeBaseData(layoutOrdered(t.compact.lineage, meta), meta, staged)
-      dropProjectionFiles(name, meta) // crash ⇒ probe falls back, never stale
-      swapBase(name)
-      fs.delete(cloneManifestPath(name), false) // clone detach, see restampSwap
-      deleteRecursively(new Path(dir(name), "tail"))
-      // op_seq resets to 0, so tail_floor MUST reset with it: the heal
-      // invariant is "legitimate tail rows stamp above the floor", and
-      // post-compaction commits stamp from 1 again. The commit log resets
-      // too — history collapsed, historical stamps are gone.
-      writeMeta(name, meta.copy(opSeq = 0, multiVer = false, tailFloor = 0,
-        commitLog = Nil, epoch = meta.epoch + 1,
-        // every live file now carries the widened types — the mapping is
-        // vacuous and clearing it restores plain inferred reads
-        widened = ListMap.empty))
-      rebuildProjections(name, meta)
+      compactAs(name, readMeta(name), t); ()
     } }
 
-  /** Crash-tolerant base adoption shared by [[saveCompacted]] and
-    * [[restampSwap]]: retire base to base_old, adopt base_staged, clean
-    * up — with [[baseDir]]'s base_old fallback covering a crash between
-    * the two renames. ONE audited implementation; staging must be
-    * complete before calling. */
-  private def swapBase(name: String): Unit = {
-    val staged = new Path(dir(name), "base_staged")
-    val base = new Path(dir(name), "base")
-    val old = new Path(dir(name), "base_old")
-    if (isDir(base)) {
-      deleteRecursively(old)
-      move(base, old)   // retire (data still readable via fallback)
-      move(staged, base) // adopt
-      deleteRecursively(old)
-    } else {
-      // recovering from a crash between the two renames: base_old (or
-      // nothing, for a table created empty) holds the prior data and the
-      // staged dir is already the complete next state — adopt directly
-      move(staged, base)
-      deleteRecursively(old)
-    }
-  }
+  /** [[saveCompacted]] laid out under `meta` — the live meta with any
+    * layout change ([[createIndex]], [[dropIndex]], [[zorderTable]])
+    * that the same record commits. op_seq resets to 0 and `tail_floor`
+    * with it: every row of the compacted base stamps 0. */
+  private def compactAs(name: String, meta: Meta, t: LineageTable): LineageTable =
+    commitRewrite(name, meta, t.compact.lineage, 0L, multiPossible = false)
 
   /**
    * The reference's periodic background merge trigger (lstore/table.py:186
@@ -1618,9 +1531,9 @@ final class Catalog(spark: SparkSession, warehouse: String,
         .footerRowCount(hconf, f)).sum)
     }
     val baseRows =
-      if (hasManifest(name)) baseFrame(name, readMeta(name)).count()
+      if (hasManifest(name)) liveBase(name, readMeta(name)).count()
       else footerRows(baseDir(name))
-        .getOrElse(baseFrame(name, readMeta(name)).count())
+        .getOrElse(liveBase(name, readMeta(name)).count())
     val tailRows = footerRows(tailPath)
       .getOrElse(spark.read.parquet(tailPath.toString).count())
     val due = baseRows == 0 || tailRows.toDouble / baseRows > maxTailRatio
@@ -1637,20 +1550,24 @@ final class Catalog(spark: SparkSession, warehouse: String,
    * indexed column) keeping EVERY version, so read amplification and
    * file counts are bounded like the reference's background merge while
    * version reads, ls_history audits, and vacuum retention semantics
-   * survive compaction untouched. Goes through the same ranked re-stamp
-   * swap as [[vacuum]]/[[purge]] (per-key version ORDER is the portable
-   * contract, raw stamps are internal), which is also what makes it
-   * crash-tolerant — a naive "rewrite base := base ∪ tail" would
-   * duplicate (key, _ver) pairs if a crash left the old tail behind.
+   * survive compaction untouched. The surviving lineage is re-stamped by
+   * per-key rank ([[restamped]] — per-key version ORDER is the portable
+   * contract, raw stamps are internal) and committed as one
+   * [[commitRewrite]], which retires the replaced base and tail into a
+   * retained snapshot when `snapshotRetention` > 0.
    */
   def foldTail(name: String): LineageTable = lock(name).synchronized {
-    withCommitMarker(name) {
-      val meta = readMeta(name)
-      val t = getTable(name)
-      restampSwap(name, meta, rankByVerDesc(meta.key, t.lineage),
-        t.opSeq + depthBudget(meta.key, t.lineage), multiPossible = true,
-        retainSnapshot = true)
-    }
+    withCommitMarker(name)(fold(name, readMeta(name)))
+  }
+
+  /** [[foldTail]] laid out under `meta` — the live meta with any layout
+    * change the same record commits ([[createBloomFilter]]). */
+  private def fold(name: String, meta: Meta): LineageTable = {
+    val t = getTable(name)
+    val opSeqNew = t.opSeq + depthBudget(meta.key, t.lineage)
+    commitRewrite(name, meta,
+      restamped(rankByVerDesc(meta.key, t.lineage), opSeqNew), opSeqNew,
+      multiPossible = true, keepSnapshots = true)
   }
 
   /** Newest-first per-key rank — the shared pre-step of every re-stamp. */
@@ -1659,10 +1576,17 @@ final class Catalog(spark: SparkSession, warehouse: String,
     rows.withColumn("_rn", row_number().over(
       Window.partitionBy(col(key)).orderBy(col(LineageTable.VER).desc)))
 
+  /** Ranked rows re-stamped ABOVE every old version: rank r of a key gets
+    * `opSeqNew + 1 - r`, preserving per-key order — rank 1 is exactly
+    * opSeqNew for every key. */
+  private def restamped(ranked: DataFrame, opSeqNew: Long): DataFrame =
+    ranked.withColumn(LineageTable.VER, lit(opSeqNew) + 1 - col("_rn"))
+      .drop("_rn")
+
   /** Depth term of the stamp budget for a full-depth re-stamp
-    * ([[foldTail]]/[[purge]]): new stamps must strictly shadow every
-    * existing stamp (≤ op_seq) during the crash window before a leftover
-    * tail heals, so the budget is `op_seq + deepest per-key history`. The
+    * ([[foldTail]]/[[purge]]): new stamps strictly shadow every existing
+    * stamp (≤ op_seq), so the budget is `op_seq + deepest per-key
+    * history`. The
     * depth is one map-side-combinable groupBy-count over the key column
     * alone — a column-pruned scan, no window, no sort — and makes op_seq
     * grow LINEARLY with real history. (The previous `2*op_seq + 1` budget
@@ -1683,32 +1607,21 @@ final class Catalog(spark: SparkSession, warehouse: String,
   /**
    * Persist a retention vacuum (see [[LineageTable.vacuum]]): physically
    * drop superseded versions beyond the newest `keep` per key (and
-   * fully-dead lone tombstones).
-   *
-   * Crash tolerance comes from STRICT SHADOWING, the same property that
-   * protects [[saveCompacted]]: the retained rows are re-stamped with
-   * fresh versions ABOVE every existing stamp (rank r of a key gets
-   * `op_seq + keep + 1 - r`, preserving per-key order), the whole
-   * retained set becomes the new base via the shared staged swap, and
-   * the tail is deleted last. At every crash point the readable state is
-   * consistent: before the swap nothing changed; after the swap a
-   * leftover tail's rows rank strictly BELOW the re-stamped base rows
-   * (no (key, _ver) ties — preserving raw stamps here was a bug: a crash
-   * before tail deletion would have produced duplicate ranks and
-   * corrupted version reads), so a snapshot is correct — and the next
-   * [[getTable]] deletes the leftover outright ([[healLeftoverTail]]).
+   * fully-dead lone tombstones). The retained rows are re-stamped above
+   * every existing stamp ([[restamped]], budget `op_seq + keep`) and
+   * committed as the new base by one [[commitRewrite]], which also drops
+   * every retained snapshot: they hold FULL pre-rewrite history, and a
+   * retention vacuum that left them behind would not have dropped
+   * anything. A crash reopens to the state before or after it.
    */
   def vacuum(name: String, keep: Int = 1): LineageTable =
     lock(name).synchronized { withCommitMarker(name) {
       require(keep >= 1, s"must keep at least the newest version, got $keep")
-      // snapshots hold FULL pre-rewrite history — a retention vacuum
-      // that left them behind would not have dropped anything
-      val meta = dropSnapshots(name, readMeta(name))
       val t = getTable(name)
       // shared retention core (LineageTable.retained — ONE implementation
-      // of the keep/lone-tombstone rules) feeding the shared re-stamp swap
-      restampSwap(name, meta, t.retained(keep), t.opSeq + keep,
-        multiPossible = keep > 1)
+      // of the keep/lone-tombstone rules)
+      commitRewrite(name, readMeta(name), restamped(t.retained(keep),
+        t.opSeq + keep), t.opSeq + keep, multiPossible = keep > 1)
     } }
 
   /**
@@ -1727,164 +1640,96 @@ final class Catalog(spark: SparkSession, warehouse: String,
    */
   def vacuumOlderThan(name: String, ts: Long): LineageTable =
     lock(name).synchronized { withCommitMarker(name) {
-      val meta0 = readMeta(name)
-      require(meta0.commitLog.nonEmpty,
+      val meta = readMeta(name)
+      require(meta.commitLog.nonEmpty,
         s"vacuumOlderThan: '$name' has no logged commits to resolve the " +
           "instant against — commit with commitAt (wall-clock commits) " +
           "or use the count-based vacuum(keep)")
-      val bound = meta0.loggedVersion(_ <= ts).getOrElse(0L)
-      // retention drops retained snapshots too — they hold FULL
-      // pre-rewrite history, and a retention pass that left them behind
-      // would not have dropped anything
-      val meta = dropSnapshots(name, meta0)
+      val bound = meta.loggedVersion(_ <= ts).getOrElse(0L)
       val t = getTable(name)
-      restampSwap(name, meta, rankByVerDesc(meta.key, t.retainedSince(bound)),
-        t.opSeq + depthBudget(meta.key, t.lineage), multiPossible = true)
+      val opSeqNew = t.opSeq + depthBudget(meta.key, t.lineage)
       // the instant-addressable history below the bound is GONE even if
-      // no snapshot ever existed — mark the horizon so a pre-bound
-      // asOfTimestamp fails loud instead of silently clamping to a
-      // state the caller's instant never saw
-      writeMeta(name, readMeta(name).copy(snapsDropped = true))
-      getTable(name)
+      // no snapshot ever existed — the same record marks the horizon, so
+      // a pre-bound asOfTimestamp fails loud instead of silently clamping
+      // to a state the caller's instant never saw
+      commitRewrite(name, meta.copy(snapsDropped = true),
+        restamped(rankByVerDesc(meta.key, t.retainedSince(bound)), opSeqNew),
+        opSeqNew, multiPossible = true)
     } }
 
   /**
    * Persist a hard purge (see [[LineageTable.purge]]) — right-to-be-
    * forgotten erasure of every version of matching keys, with version
    * addressing preserved for every other key. The surviving lineage is
-   * ranked at full depth and goes through the same re-stamped
-   * crash-tolerant swap as [[vacuum]]. A crash-leftover tail — which
-   * could still contain purged rows — is shadowed for reads and deleted
-   * by the next [[getTable]] ([[healLeftoverTail]] matches its files by
-   * footer `_ver` bounds), so erasure converges on the next table load
-   * with no manual follow-up op. The stamp budget comes from op_seq
-   * ([[depthBudget]] over the FULL lineage — a safe upper bound on the
-   * surviving depth that avoids running the purge anti-join twice).
+   * ranked at full depth, re-stamped and committed by one
+   * [[commitRewrite]], whose roll-forward deletes the old base, the old
+   * tail, every retained snapshot (they physically hold the purged
+   * keys' rows) and the projections (rebuilt from the new base). A crash
+   * before the record reopens to the state before the purge; from the
+   * record on, recovery completes the erasure. The stamp budget comes
+   * from op_seq ([[depthBudget]] over the FULL lineage — a safe upper
+   * bound on the surviving depth that avoids running the purge
+   * anti-join twice).
    */
   def purge(name: String,
             predicate: org.apache.spark.sql.Column): LineageTable =
     lock(name).synchronized { withCommitMarker(name) {
-      // erasure-FIRST: snapshots physically retain purged keys' rows, so
-      // right-to-be-forgotten must delete them before anything else
-      val meta = dropSnapshots(name, readMeta(name))
+      val meta = readMeta(name)
       val t = getTable(name)
-      restampSwap(name, meta, rankByVerDesc(meta.key, t.purge(predicate).lineage),
-        t.opSeq + depthBudget(meta.key, t.lineage), multiPossible = t.opSeq > 0)
+      val opSeqNew = t.opSeq + depthBudget(meta.key, t.lineage)
+      commitRewrite(name, meta,
+        restamped(rankByVerDesc(meta.key, t.purge(predicate).lineage), opSeqNew),
+        opSeqNew, multiPossible = t.opSeq > 0)
     } }
 
   /**
-   * Shared persistence core for [[vacuum]], [[purge]] and [[foldTail]]:
-   * re-stamp the ranked surviving rows ABOVE every old version (rank r of
-   * a key gets `opSeqNew + 1 - r`, preserving per-key order — rank 1 is
-   * exactly opSeqNew for every key), stage as the new base, swap
-   * crash-safely, drop the tail.
+   * Commit a physical rewrite: `rows`, already stamped at or below
+   * `opSeqNew`, become the base of `name` through one `_txn` record —
+   * the protocol every commit takes ([[commitMulti]]). `meta` is the
+   * live meta with any change the rewrite makes besides the ones below
+   * (a layout, the retention horizon); the base is laid out under it.
    *
-   * Crash tolerance: at every crash point the readable state is
-   * consistent — before the swap nothing changed; after the swap a
-   * leftover tail's rows rank strictly BELOW the re-stamped base rows
-   * (no (key,_ver) ties), so snapshots are correct, and the leftover is
-   * reclaimed by [[healLeftoverTail]] on the next load. Meta ordering:
-   * op_seq advances BEFORE the swap (commit's rule — a crash leaves a
-   * version gap, never a reused stamp), `tail_floor` advances only AFTER
-   * the swap and BEFORE the tail delete (a pre-swap floor at opSeqNew
-   * would let the heal delete the still-live tail), and multi_ver may
-   * only transition true→false AFTER the swap (the fast path must never
-   * see a multi-version base), so the pre-swap write keeps the
-   * CONSERVATIVE value — too-true is merely slower, too-false reads
-   * superseded versions as live. The exact multi_ver comes from the
-   * staged data itself: any _ver below opSeqNew is a rank≥2 row (pruned
-   * single-column scan of what was just written).
+   * Staging writes the base under `_txn/<id>/<name>/base/` and, when the
+   * replaced state is retained, that state's meta verbatim as
+   * `_snap/<op_seq>.json` (whose commit log still addresses the retired
+   * files' own stamps, so [[asOfTimestamp]] keeps resolving across the
+   * rewrite). The record's patch carries every meta field the rewrite
+   * sets: op_seq and `tail_floor` (both `opSeqNew`), a new epoch, the
+   * exact `multi_ver` (any staged `_ver` below `opSeqNew` is a rank≥2
+   * row), the commit log (cleared — the re-stamp invalidates historical
+   * stamps), the retained snapshots and the widenings (cleared — the
+   * staged write read through the widening casts). [[rollRewrite]]
+   * adopts the staged base.
+   *
+   * `keepSnapshots` is [[foldTail]]'s: retained snapshots stay and the
+   * replaced state joins them, capped at `snapshotRetention` (oldest
+   * expire). Every other rewrite drops them all — physical erasure must
+   * erase. Either way a dropped snapshot sets `snaps_dropped`, so a
+   * too-old timestamp ERRORS instead of silently clamping past it.
    */
-  private def restampSwap(name: String, meta: Meta, ranked:
-      org.apache.spark.sql.DataFrame, opSeqNew: Long,
-      multiPossible: Boolean,
-      retainSnapshot: Boolean = false): LineageTable = {
-    val staged = new Path(dir(name), "base_staged")
-    writeBaseData(layoutOrdered(ranked
-      .withColumn(LineageTable.VER, lit(opSeqNew) + 1 - col("_rn"))
-      .drop("_rn"), meta), meta, staged)
-    val hasMulti = multiPossible && !spark.read.parquet(staged.toString)
-      .where(col(LineageTable.VER) < opSeqNew).isEmpty
-    val conservative = meta.multiVer || multiPossible
-    // the re-stamp invalidates historical absolute versions, so the
-    // commit log clears with it (in BOTH meta writes: a crash between
-    // them must not leave a log addressing re-stamped rows). WITH
-    // retention ([[foldTail]] under snapshotRetention > 0) the log moves
-    // into the snapshot manifest rather than vanishing: `_snap/<id>.json`
-    // holds the PRE-rewrite meta verbatim, whose log addresses the
-    // retired files' own stamps, so asOfTimestamp keeps resolving across
-    // the rewrite ([[asOfTimestamp]] walks retained manifests). Without
-    // retention this is the Delta/Iceberg VACUUM rule: time travel is
-    // bounded by the last physical rewrite.
-    // a shallow clone's "base" is foreign files referenced by manifest —
-    // they cannot be RENAMED into a snapshot dir (they belong to the
-    // clone source), so a clone's first fold runs the non-retaining path
-    // and detaches it; retention applies from its next fold on
-    val retain = retainSnapshot && snapshotRetention > 0 && !hasManifest(name)
-    val snapId = meta.opSeq
-    val newSnaps = if (retain) meta.snaps :+ snapId else meta.snaps
-    if (retain) {
-      // GC orphan snapshot dirs first (ids never listed in meta — crash
-      // leftovers of an interrupted fold; bounded by retention, cheap)
-      if (isDir(snapRoot(name)))
-        fs.listStatus(snapRoot(name)).foreach { s =>
-          val id = s.getPath.getName.stripSuffix(".json")
-          if (id.forall(_.isDigit) && !meta.snaps.contains(id.toLong)
-              && id.toLong != snapId)
-            deleteRecursively(s.getPath)
-        }
-      fs.mkdirs(snapRoot(name))
-      // manifest BEFORE any data move: an unreferenced manifest is
-      // harmless; a moved base without its manifest would be unreadable
-      writeString(snapMetaPath(name, snapId), TableMeta.encode(meta))
-      // the tail is COPIED (it is ≤ compactRatio of the base by the
-      // trigger, so the copy is bounded); the base — the big half — is
-      // retired by RENAME in swapBaseIntoSnap below, never copied
-      val tailDir = new Path(dir(name), "tail")
-      if (isDir(tailDir)) {
-        val snapTail = snapDataDir(name, snapId, "tail")
-        fs.mkdirs(snapTail)
-        fs.listStatus(tailDir).foreach { s =>
-          if (s.isFile && s.getPath.getName.endsWith(".parquet"))
-            org.apache.hadoop.fs.FileUtil.copy(fs, s.getPath, fs,
-              new Path(snapTail, s.getPath.getName), false, hconf)
-        }
-      }
+  private def commitRewrite(name: String, meta: Meta, rows: DataFrame,
+                            opSeqNew: Long, multiPossible: Boolean,
+                            keepSnapshots: Boolean = false): LineageTable = {
+    val live = readMeta(name)
+    commitStaged("rewrite") { id =>
+      val staged = new Path(new Path(new Path(txnRoot, id), name), "base")
+      writeBaseData(layoutOrdered(rows, meta), meta, staged)
+      val multiVer = multiPossible && !spark.read.parquet(staged.toString)
+        .where(col(LineageTable.VER) < opSeqNew).isEmpty
+      // a shallow clone's base is the source's files: they cannot retire
+      // into a snapshot, so a clone's first fold detaches it unretained
+      val retain = keepSnapshots && snapshotRetention > 0 && !hasManifest(name)
+      if (retain) writeString(snapMetaPath(name, live.opSeq), TableMeta.encode(live))
+      val offered = meta.snaps ++ Option.when(retain)(live.opSeq)
+      val snaps = if (keepSnapshots) offered.takeRight(snapshotRetention) else Nil
+      val after = meta.copy(opSeq = opSeqNew, multiVer = multiVer,
+        tailFloor = opSeqNew, commitLog = Nil, epoch = meta.epoch + 1,
+        snaps = snaps, snapsDropped = meta.snapsDropped || snaps.size < offered.size,
+        widened = ListMap.empty)
+      TxnRecord(tables = Seq(name), expected = Seq(live.opSeq),
+        next = Seq(opSeqNew), rewrites = Seq(name), patch = Map(name ->
+          TableMeta.diff(live.copy(opSeq = opSeqNew), checkedMeta(after))))
     }
-    writeMeta(name, meta.copy(opSeq = opSeqNew, multiVer = conservative,
-      commitLog = Nil, snaps = newSnaps, epoch = meta.epoch + 1))
-    // projections go BEFORE the swap (a crash leaves probes falling back
-    // to the full candidate scan — for purge this is what makes erasure
-    // hold: no projection file ever outlives the values it indexed) and
-    // rebuild AFTER from the adopted base
-    dropProjectionFiles(name, meta)
-    if (retain) swapBaseIntoSnap(name, snapDataDir(name, snapId, "base"))
-    else swapBase(name)
-    // the rewrite materialized a shallow clone into its own base — the
-    // manifest is stale the instant the staged base is adopted (a crash
-    // between swap and delete still reads the manifest: pre-rewrite
-    // state, consistent — the next rewrite re-stages and converges)
-    fs.delete(cloneManifestPath(name), false)
-    var m2 = meta.copy(opSeq = opSeqNew, multiVer = hasMulti,
-      tailFloor = opSeqNew, commitLog = Nil,
-      snaps = newSnaps, epoch = meta.epoch + 1,
-      // post-swap the adopted base is uniformly wide (the staged write
-      // read through the widening casts); retained snapshot manifests
-      // keep the pre-rewrite widening for their own files
-      widened = ListMap.empty)
-    writeMeta(name, m2)
-    deleteRecursively(new Path(dir(name), "tail"))
-    // retention expiry: meta first (a listed-but-deleted snapshot must
-    // never exist), then the files; snapsDropped makes a too-old lookup
-    // ERROR instead of silently clamping past dropped history
-    while (m2.snaps.size > snapshotRetention) {
-      val oldest = m2.snaps.head
-      m2 = m2.copy(snaps = m2.snaps.tail, snapsDropped = true)
-      writeMeta(name, m2)
-      deleteRecursively(new Path(snapRoot(name), oldest.toString))
-      fs.delete(snapMetaPath(name, oldest), false)
-    }
-    rebuildProjections(name, meta)
     getTable(name)
   }
 
@@ -1896,62 +1741,78 @@ final class Catalog(spark: SparkSession, warehouse: String,
   private def snapDataDir(name: String, id: Long, part: String) =
     new Path(new Path(snapRoot(name), id.toString), part)
 
-  /** [[swapBase]]'s retention twin: the old base RETIRES into the
-    * snapshot (one rename — the big half of a snapshot is never copied)
-    * instead of being deleted. A crash between the two renames leaves
-    * base absent with the snapshot holding the data — [[baseDir]] falls
-    * back to the newest listed snapshot's base, so reads stay whole. */
-  private def swapBaseIntoSnap(name: String, snapBase: Path): Unit = {
-    val staged = new Path(dir(name), "base_staged")
-    val base = new Path(dir(name), "base")
-    if (isDir(base)) {
-      fs.mkdirs(snapBase.getParent)
-      move(base, snapBase)
-      move(staged, base)
-    } else {
-      // recovering a crash between the two renames: the snapshot already
-      // holds the retired base; the staged dir is the complete new state
-      move(staged, base)
+  /**
+   * Roll rewrite `expected` → `meta` of table `name` forward from its
+   * staging `sdir` ([[commitRewrite]]). Each step is idempotent and
+   * guarded by what it consumes, so a re-run resumes where a crash left
+   * off. While the staged base exists: the projections are dropped
+   * (until their rebuild a probe falls back to the full candidate scan,
+   * and no projection outlives the values it indexed), the live base and
+   * tail retire — renamed into `_snap/<expected>/` when `meta` retains
+   * that snapshot, deleted otherwise — and the staged base is adopted.
+   * Then every `_snap` entry `meta` does not list goes, a shallow clone
+   * detaches (its manifest named the files the rewrite materialized) and
+   * the projections rebuild from the new base.
+   */
+  private def rollRewrite(name: String, expected: Long, sdir: Path,
+                          meta: Meta): Unit = {
+    val staged = new Path(sdir, "base")
+    if (isDir(staged)) {
+      meta.projCols.foreach(c => deleteRecursively(projDir(name, c)))
+      val snap = Option.when(meta.snaps.contains(expected))(
+        new Path(snapRoot(name), expected.toString))
+      snap.foreach(fs.mkdirs)
+      for (part <- Seq("base", "tail")) {
+        val live = new Path(dir(name), part)
+        if (isDir(live))
+          snap.fold(deleteRecursively(live))(s => move(live, new Path(s, part)))
+        crashPoint(s"rewrite-$part-$name")
+      }
+      move(staged, baseDir(name))
+      crashPoint(s"rewrite-adopted-$name")
     }
-    deleteRecursively(new Path(dir(name), "base_old"))
-  }
-
-  /** Drop every retained snapshot NOW — the erasure-first step of
-    * vacuum/purge/saveCompacted (snapshots hold full pre-rewrite data,
-    * so a version-dropping or key-erasing rewrite that left them behind
-    * would not have dropped or erased anything). Meta is written before
-    * the delete so a listed-but-deleted snapshot can never be observed. */
-  private def dropSnapshots(name: String, meta: Meta): Meta = {
-    val m = meta.copy(snaps = Nil,
-      snapsDropped = meta.snapsDropped || meta.snaps.nonEmpty)
-    if (meta.snaps.nonEmpty) writeMeta(name, m)
-    deleteRecursively(snapRoot(name))
-    m
+    if (meta.snaps.isEmpty) deleteRecursively(snapRoot(name))
+    else if (isDir(snapRoot(name)))
+      fs.listStatus(snapRoot(name)).foreach { s =>
+        val id = s.getPath.getName.stripSuffix(".json")
+        if (!id.toLongOption.exists(meta.snaps.contains))
+          deleteRecursively(s.getPath)
+      }
+    crashPoint(s"rewrite-snaps-$name")
+    fs.delete(cloneManifestPath(name), false)
+    if (meta.projCols.nonEmpty) {
+      val rows = spark.read.parquet(baseDir(name).toString)
+      meta.projCols.foreach { c =>
+        rows.select(col(c), col(meta.key))
+          .repartitionByRange(col(c))
+          .sortWithinPartitions(col(c))
+          .write.mode(SaveMode.Overwrite).parquet(projDir(name, c).toString)
+      }
+    }
   }
 
   /**
    * Build a physical index on `column` (reference: Index.create_index,
    * lstore/index.py:59): re-layout the base range-partitioned + sorted by
    * that column and record it in the metadata, so secondary probes prune
-   * at file/row-group level instead of scanning the snapshot.
+   * at file/row-group level instead of scanning the snapshot. The
+   * re-layout is [[saveCompacted]]'s, and the index lands in its record.
    */
   def createIndex(name: String, column: String): LineageTable =
     lock(name).synchronized { withCommitMarker(name) {
       val t = getTable(name)
       require(t.dataCols.contains(column), s"no such column: $column")
-      writeMeta(name, readMeta(name).copy(index = Some(column),
-        zorderCols = Nil))
-      saveCompacted(name, t)
-      getTable(name)
+      compactAs(name, readMeta(name).copy(index = Some(column),
+        zorderCols = Nil), t)
     } }
 
   /** Drop the index (reference: Index.drop_index, lstore/index.py:66):
-    * forget the metadata and restore the default key layout. */
+    * forget the metadata and restore the default key layout, in one
+    * [[saveCompacted]] record. */
   def dropIndex(name: String): LineageTable =
     lock(name).synchronized { withCommitMarker(name) {
-      writeMeta(name, readMeta(name).copy(index = None, zorderCols = Nil))
-      saveCompacted(name, getTable(name))
-      getTable(name)
+      compactAs(name, readMeta(name).copy(index = None, zorderCols = Nil),
+        getTable(name))
     } }
 
   /** The indexed column, if an index exists (reference: Index surface). */
@@ -2040,10 +1901,7 @@ final class Catalog(spark: SparkSession, warehouse: String,
           "at most 6 (lakehouse guidance is 2-4)")
       columns.foreach(c => require(t.dataCols.contains(c),
         s"no such column: $c"))
-      writeMeta(name, readMeta(name).copy(index = None,
-        zorderCols = columns))
-      saveCompacted(name, t)
-      getTable(name)
+      compactAs(name, readMeta(name).copy(index = None, zorderCols = columns), t)
     } }
 
   /** The Z-order clustering columns, if [[zorderTable]] set them. */
@@ -2083,13 +1941,10 @@ final class Catalog(spark: SparkSession, warehouse: String,
       val meta = readMeta(name)
       require(getTable(name).dataCols.contains(column),
         s"no such column: $column")
+      // the fold bakes the filters into the existing base+tail and its
+      // record lists the column; later writes carry them via lineageWriter
       if (meta.bloomCols.contains(column)) getTable(name)
-      else {
-        writeMeta(name, meta.copy(bloomCols = meta.bloomCols :+ column))
-        // bake the filters into the existing base+tail; later writes
-        // carry them via lineageWriter
-        foldTail(name)
-      }
+      else fold(name, meta.copy(bloomCols = meta.bloomCols :+ column))
     } }
 
   /** Columns carrying parquet bloom filters ([[createBloomFilter]]). */
@@ -2111,10 +1966,11 @@ final class Catalog(spark: SparkSession, warehouse: String,
    * Maintenance is O(delta): every commit appends just the delta's
    * `(column, key)` pairs ([[tryCommit]]); compaction/vacuum/purge
    * rebuild projections from the new base as part of the rewrite they
-   * already pay ([[restampSwap]]/[[saveCompacted]]) — which is also what
-   * makes purge's erasure reach the projections (values are scrubbed
-   * with the base; the projection dirs are DELETED before the swap, so
-   * no crash window retains purged values — a probe with a missing
+   * already pay ([[rollRewrite]]) — which is also what makes purge's
+   * erasure reach the projections: the roll-forward deletes the
+   * projection dirs before it retires the old base, and a recovery
+   * re-run after a crash deletes and rebuilds them again, so no
+   * projection outlives the purged values (a probe with a missing
    * projection dir falls back to the full candidate scan).
    *
    * The probe contract is superset-safe by construction: the projection
@@ -2669,24 +2525,6 @@ final class Catalog(spark: SparkSession, warehouse: String,
       }
   }
 
-  /** Delete projection side tables (pre-swap: crash leaves a FALLBACK,
-    * never a stale projection — essential for purge erasure). */
-  private def dropProjectionFiles(name: String, meta: Meta): Unit =
-    meta.projCols.foreach(c => deleteRecursively(projDir(name, c)))
-
-  /** Rebuild every projection from the (just-swapped) base — part of the
-    * table rewrite compaction/vacuum/purge already pay. */
-  private def rebuildProjections(name: String, meta: Meta): Unit =
-    if (meta.projCols.nonEmpty) {
-      val rows = spark.read.parquet(baseDir(name).toString)
-      meta.projCols.foreach { c =>
-        rows.select(col(c), col(meta.key))
-          .repartitionByRange(col(c))
-          .sortWithinPartitions(col(c))
-          .write.mode(SaveMode.Overwrite).parquet(projDir(name, c).toString)
-      }
-    }
-
   /** DESCRIBE HISTORY: the commit log as a table — one row per LOGGED
     * commit (`version` = the commit's resulting op_seq, `commit_ts` =
     * its [[commitAt]] timestamp). A pure metadata read: the log lives in
@@ -2723,8 +2561,7 @@ final class Catalog(spark: SparkSession, warehouse: String,
    * assembled frame — declared, not inferred per stream start, and exact
    * under schema evolution. The tail dir is created if absent so a feed
    * can be attached before the first post-base commit (it streams zero
-   * batches until one lands). The table resolves first: after a fold,
-   * resolving ([[healLeftoverTail]]) deletes an empty tail directory.
+   * batches until one lands) or right after a rewrite retired the tail.
    */
   def changeFeedInfo(name: String): (String, org.apache.spark.sql.types.StructType) = {
     val schema = getTable(name).lineage.schema
@@ -3466,9 +3303,8 @@ final class Catalog(spark: SparkSession, warehouse: String,
       // execution (or resolves by listing order). Rebuild it NOW from
       // the widened-typed lineage read — one column-pruned scan, the
       // createProjection cost, under the same lock so no commit can
-      // interleave (crash mid-rewrite = the dropProjectionFiles
-      // contract: a missing/partial dir reads as fallback on reopen
-      // because the next rewrite rebuilds projections wholesale).
+      // interleave (a crash mid-rewrite leaves a missing or partial dir
+      // until the next rewrite rebuilds projections wholesale).
       if (meta.projCols.contains(column)) {
         val widened = getTable(name)
         widened.lineage.select(col(column), col(meta.key))

@@ -28,10 +28,10 @@ private[core] case class Meta(
       * history (a keep>1 vacuum) — the empty-tail
       * fast path and footer inventory must not fire. */
     multiVer: Boolean = false,
-    /** op_seq of the last completed re-stamp swap:
-      * every legitimate tail row stamps ABOVE this,
-      * so a tail file wholly at-or-below it is a
-      * crash leftover ([[healLeftoverTail]]). */
+    /** op_seq of the last physical rewrite: every
+      * row of its base stamps at or below this and
+      * every later commit above it, so it addresses
+      * the base state ([[asOfTimestamp]]'s clamp). */
     tailFloor: Long = 0,
     /** Columns added by [[addColumn]] after creation:
       * PHYSICAL name → declared type. Files written
@@ -240,9 +240,10 @@ private[core] case class Meta(
 /**
  * A transaction record under `<warehouse>/_txn/`. Empty fields are not
  * written, which leaves three shapes: `<id>.json`, the commit point of
- * every single-catalog commit (tables with their `expected` → `next`
- * op_seq, and a `patch` for each table whose commit sets more meta
- * fields than op_seq); `<gid>.part.json` from [[Catalog.commitAcross]]
+ * every single-catalog commit and physical rewrite (tables with their
+ * `expected` → `next` op_seq, a `patch` for each table whose commit sets
+ * more meta fields than op_seq, and the `rewrites`); `<gid>.part.json`
+ * from [[Catalog.commitAcross]]
  * (one participant's share plus the `coordinator`'s root URI); and the
  * coordinator's `<gid>.json` decision naming every participant's root.
  */
@@ -256,8 +257,15 @@ private[core] case class TxnRecord(coordinator: Option[String] = None,
                                      * commit sets besides op_seq, as a
                                      * partial meta object ([[TableMeta
                                      * .diff]]) — the commit-log entry, a
-                                     * stream batch id, a view's `mv_*`. */
-                                   patch: Map[String, ObjectNode] = Map.empty)
+                                     * stream batch id, a view's `mv_*`,
+                                     * every field a rewrite sets. */
+                                   patch: Map[String, ObjectNode] = Map.empty,
+                                   /** The tables this record gives a new
+                                     * base, staged under
+                                     * `_txn/<id>/<table>/base/` — a
+                                     * physical rewrite ([[Catalog
+                                     * .commitRewrite]]). */
+                                   rewrites: Seq[String] = Nil)
 
 /** The one JSON codec for [[Meta]] and [[TxnRecord]]. It writes one line
   * in the `{"field": value, "list": [a, b]}` spacing earlier releases

@@ -101,43 +101,6 @@ object ParquetMeta {
   }
 
   /**
-   * (row count, max of integer `column`) of one parquet file from footer
-   * statistics alone. The max is None when any row-carrying block lacks
-   * stats for the column — callers must treat that as "unknown", never as
-   * a bound. Used by [[graft.core.Catalog]]'s leftover-tail heal, where a
-   * wrong bound would delete live data.
-   */
-  def footerCountMax(conf: Configuration, file: String,
-                     column: String): (Long, Option[Long]) = {
-    val in = HadoopInputFile.fromPath(new Path(file), conf)
-    val r = ParquetFileReader.open(in)
-    try {
-      val blocks = r.getFooter.getBlocks
-      var rows = 0L
-      var max = Option.empty[Long]
-      var known = true
-      blocks.forEach { b =>
-        rows += b.getRowCount
-        if (b.getRowCount > 0) {
-          val stats = {
-            var found: org.apache.parquet.column.statistics.Statistics[_] = null
-            b.getColumns.forEach { c =>
-              if (c.getPath.toDotString == column) found = c.getStatistics
-            }
-            found
-          }
-          if (stats == null || stats.isEmpty || !stats.hasNonNullValue) known = false
-          else stats.genericGetMax match {
-            case n: Number => max = Some(max.fold(n.longValue)(_ max n.longValue))
-            case _         => known = false
-          }
-        }
-      }
-      (rows, if (known) max else None)
-    } finally r.close()
-  }
-
-  /**
    * (table, n_rows) for a set of tables, one distributed footer-read job:
    * the (table, file) pairs fan out over executors, each task reads only
    * footer bytes, and the per-table sum is a tiny reduceByKey. The
@@ -183,9 +146,9 @@ object ParquetMeta {
   /**
    * Per-column (min, max, null count) of one parquet file from footer
    * statistics alone — None for a column any row-carrying block lacks
-   * usable NUMERIC stats for (unknown is never a bound, the
-   * [[footerCountMax]] safety rule; string stats are excluded outright
-   * because parquet may truncate them). Also returns the file's row count.
+   * usable NUMERIC stats for (unknown is never a bound; string stats
+   * are excluded outright because parquet may truncate them). Also
+   * returns the file's row count.
    */
   private def footerColumnStats(conf: Configuration, file: String,
       columns: Seq[String]): (Long, Map[String, Option[(Double, Double, Long)]]) = {

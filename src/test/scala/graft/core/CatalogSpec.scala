@@ -93,18 +93,6 @@ class CatalogSpec extends SparkSpec {
     intercept[IllegalArgumentException](cat.createIndex("t", "nope"))
   }
 
-  test("getTable survives a crash between saveCompacted's two renames") {
-    val (cat, wh) = freshCatalog()
-    cat.createTable("t", "k", base)
-    val want = cat.getTable("t").snapshot.collect().map(_.toSeq).toSet
-    // simulate the crash window: base retired to base_old, staged not yet
-    // adopted
-    val t = java.nio.file.Paths.get(wh, "t")
-    Files.move(t.resolve("base"), t.resolve("base_old"))
-    assert(new Catalog(spark, wh).getTable("t")
-      .snapshot.collect().map(_.toSeq).toSet === want)
-  }
-
   test("parallel per-table batches commit concurrently with correct finals") {
     import spark.implicits._
     val (cat, _) = freshCatalog()
@@ -275,74 +263,6 @@ class CatalogSpec extends SparkSpec {
     val inv = cat.inventory().collect()
       .map(r => (r.getString(0), r.getLong(1))).toMap
     assert(inv("t") === 1L) // k=1 only (k=2, k=3 purged)
-  }
-
-  test("vacuum heals a crash that leaves the old tail behind") {
-    // a crash between base adoption and tail deletion leaves the old tail
-    // on disk; the re-stamped base rows rank strictly ABOVE every old
-    // stamp (no (key,_ver) ties), and the next getTable detects the
-    // leftover by its footer _ver bound vs tail_floor and deletes it —
-    // erasure converges on the next LOAD, no manual follow-up op
-    def copyDir(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
-      val s = Files.walk(src)
-      try s.iterator().forEachRemaining { p =>
-        val q = dst.resolve(src.relativize(p).toString)
-        if (Files.isDirectory(p)) Files.createDirectories(q)
-        else Files.copy(p, q)
-      } finally s.close()
-    }
-    val (cat, wh) = freshCatalog(autoCompact = false)
-    cat.createTable("t", "k", base)
-    cat.commit("t", Txn.empty
-      .update(col("k") === 1L, Map("v" -> lit(11L)))
-      .update(col("k") === 1L, Map("v" -> lit(12L)))
-      .delete(col("k") === 2L))
-    val snap = cat.getTable("t").snapshot.collect().map(_.toSeq).toSet
-    val tail = java.nio.file.Paths.get(wh, "t", "tail")
-    val saved = java.nio.file.Paths.get(wh, "t_saved_tail")
-    copyDir(tail, saved)
-    cat.vacuum("t", keep = 2)
-    copyDir(saved, tail) // the crash state
-    val crashed = cat.getTable("t")
-    assert(crashed.snapshot.collect().map(_.toSeq).toSet === snap)
-    // previous version of k=1 is v=11 exactly once (clean ranks)
-    val prev = crashed.asOfRelative(-1).where(col("k") === 1L).collect()
-    assert(prev.map(_.getAs[Long]("v")).toSeq === Seq(11L))
-    // the load itself healed the leftover: tail physically gone
-    assert(!Files.isDirectory(tail), "leftover tail should be healed on load")
-    assert(cat.getTable("t").lineage.where(col("k") === 1L).count() === 2)
-    // a LIVE tail (post-swap commit, stamps above tail_floor) is never
-    // touched by the heal
-    cat.commit("t", Txn.empty.update(col("k") === 1L, Map("v" -> lit(13L))))
-    assert(Files.isDirectory(tail), "live tail must survive the heal check")
-    assert(cat.getTable("t").snapshot.where(col("k") === 1L).collect()
-      .map(_.getAs[Long]("v")).toSeq === Seq(13L))
-  }
-
-  test("purge leftover tail is erased on the next load (RTBF converges)") {
-    // the right-to-be-forgotten crash window: purged rows still physically
-    // present in a crash-leftover tail must disappear at the next table
-    // load, not wait for a manual vacuum/compaction
-    def copyDir(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
-      val s = Files.walk(src)
-      try s.iterator().forEachRemaining { p =>
-        val q = dst.resolve(src.relativize(p).toString)
-        if (Files.isDirectory(p)) Files.createDirectories(q)
-        else Files.copy(p, q)
-      } finally s.close()
-    }
-    val (cat, wh) = freshCatalog(autoCompact = false)
-    cat.createTable("t", "k", base)
-    cat.commit("t", Txn.empty.update(col("k") === 2L, Map("v" -> lit(22L))))
-    val tail = java.nio.file.Paths.get(wh, "t", "tail")
-    val saved = java.nio.file.Paths.get(wh, "t_saved_tail2")
-    copyDir(tail, saved)
-    cat.purge("t", col("k") === 2L)
-    copyDir(saved, tail) // crash: leftover tail still holds k=2 rows
-    val t = cat.getTable("t")
-    // loaded state shows no trace of k=2 AND the leftover file is gone
-    assert(t.lineage.where(col("k") === 2L).isEmpty)
-    assert(!Files.isDirectory(tail), "purged rows must be physically erased on load")
   }
 
   test("optimistic commit aborts the stale writer (CAS on op_seq)") {

@@ -220,4 +220,22 @@ class TimeTravelSpec extends SparkSpec {
     assert(intercept[IllegalArgumentException](g.sql(
       "CALL graft.vacuum('t')")).getMessage.contains("exactly one"))
   }
+
+  test("a partitioned table's retained snapshot reads without its directory column") {
+    val (cat, _) = freshCatalog()
+    cat.createTable("t", "k",
+      Seq((1L, "a", 10L), (2L, "b", 20L), (3L, "a", 30L)).toDF("k", "cat", "v"),
+      partitionBy = Some("cat"))
+    cat.commitAt("t", Txn.empty.update(col("k") === 1L, Map("v" -> lit(11L))),
+      ts = 1000L)
+    cat.foldTail("t") // the partitioned base retires into a snapshot
+    cat.commitAt("t", Txn.empty.delete(col("k") === 2L), ts = 2000L)
+    def at(ts: Long) =
+      cat.asOfTimestamp("t", ts).collect().map(_.toSeq).toSet
+    assert(at(500L) ===
+      Set(Seq(1L, "a", 10L), Seq(2L, "b", 20L), Seq(3L, "a", 30L)))
+    assert(at(1500L) ===
+      Set(Seq(1L, "a", 11L), Seq(2L, "b", 20L), Seq(3L, "a", 30L)))
+    assert(at(2500L) === Set(Seq(1L, "a", 11L), Seq(3L, "a", 30L)))
+  }
 }
