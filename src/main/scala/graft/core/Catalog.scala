@@ -760,18 +760,22 @@ final class Catalog(spark: SparkSession, warehouse: String,
   private def hasManifest(name: String): Boolean =
     pathExists(cloneManifestPath(name))
 
-  /** First parquet data file under `p`, recursing into partition
-    * directories (`_pd*=`) — the one footer [[scanGraftDir]] takes the
-    * schema from. */
-  private def firstParquetUnder(p: Path): Option[String] = {
-    if (!isDir(p)) return None
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val s = it.next()
-      if (s.isFile && s.getPath.getName.endsWith(".parquet"))
-        return Some(s.getPath.toString)
+  /** The parquet data files under `p` (none when absent), recursing
+    * into partition directories (`_pd*=`), listed lazily so a caller
+    * that needs only the first file ([[scanGraftDir]]'s schema footer)
+    * lists only its way to it. Plain
+    * `listStatus`, not `listFiles(p, recursive = true)`: that builds a
+    * `LocatedFileStatus` per file, which reads the file's permission,
+    * and on the local filesystem without Hadoop's native library each
+    * permission read forks a `stat` process (~3 ms a file). Spark's
+    * `HadoopFSUtils.listLeafFiles` avoids it for the same reason. */
+  private def parquetUnder(p: Path): Iterator[String] = {
+    def walk(d: Path): Iterator[String] = fs.listStatus(d).iterator.flatMap { s =>
+      if (s.isDirectory) walk(s.getPath)
+      else if (s.getPath.getName.endsWith(".parquet")) Iterator.single(s.getPath.toString)
+      else Iterator.empty
     }
-    None
+    if (isDir(p)) walk(p) else Iterator.empty
   }
 
   /**
@@ -798,7 +802,7 @@ final class Catalog(spark: SparkSession, warehouse: String,
     val pdHere = pdCols.nonEmpty && isDir(dirPath) &&
       fs.listStatus(dirPath).exists(s => s.isDirectory &&
         s.getPath.getName.startsWith(pdCols.head + "="))
-    firstParquetUnder(dirPath)
+    parquetUnder(dirPath).nextOption()
       .flatMap(f => graft.sources.ParquetMeta.footerSparkSchema(hconf, f)) match {
       case Some(s) =>
         val full =
@@ -1519,13 +1523,7 @@ final class Catalog(spark: SparkSession, warehouse: String,
     // distributed count wins (a 100 TB base is many footers); a clone
     // manifest keeps the scan path too (its files live outside dir()).
     def footerRows(p: Path): Option[Long] = {
-      val it = fs.listFiles(p, true)
-      var files = List.empty[String]
-      while (it.hasNext) {
-        val s = it.next()
-        if (s.isFile && s.getPath.getName.endsWith(".parquet"))
-          files ::= s.getPath.toString
-      }
+      val files = parquetUnder(p).take(65).toSeq
       if (files.size > 64) None
       else Some(files.map(f => graft.sources.ParquetMeta
         .footerRowCount(hconf, f)).sum)

@@ -2404,19 +2404,23 @@ class GraftSql(val spark: SparkSession) {
   }
 
   /** Execute the op on the registered handle; DML returns empty (the
-    * Spark command convention) and the read view refreshes. Inside an
-    * open transaction the op is STASHED instead — nothing lands durably
-    * until COMMIT; this session's reads see the in-memory
-    * read-your-own-writes overlay ([[stash]]). */
+    * Spark command convention) and the read view re-registers from the
+    * handle the op returned — the commit already resolved the new state,
+    * so it is not resolved again. Inside an open transaction the op is
+    * STASHED instead — nothing lands durably until COMMIT; this session's
+    * reads see the in-memory read-your-own-writes overlay ([[stash]]). */
   private def apply(name: String, txn: Txn): DataFrame = {
     if (inTxn) return stash(name, txn)
-    session.get(name) match {
-      case Some(t) => session(name) = txn.commit(t)
+    val t = session.get(name) match {
+      case Some(t0) =>
+        val t = txn.commit(t0)
+        session(name) = t
+        t
       case None =>
         val (cat, tbl) = durable(name)
         cat.commit(tbl, txn)
     }
-    refreshView(name)
+    t.snapshot.createOrReplaceTempView(name)
     spark.emptyDataFrame
   }
 

@@ -15,6 +15,24 @@ class CatalogSpec extends SparkSpec {
     (new Catalog(spark, wh, autoCompact = autoCompact), wh)
   }
 
+  /** `body`'s result and the Spark jobs started while it ran. Listener
+    * events are async; a short drain keeps the count complete
+    * (undercounting is the safe direction for the upper-bound asserts
+    * this feeds). */
+  private def jobsOf[A](body: => A): (A, Int) = {
+    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        counter.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val result =
+      try { val r = body; Thread.sleep(300); r }
+      finally spark.sparkContext.removeSparkListener(listener)
+    (result, counter.get())
+  }
+
   private def base = {
     import spark.implicits._
     Seq((1L, 10L, "A"), (2L, 20L, "B"), (3L, 30L, "C")).toDF("k", "v", "s")
@@ -406,25 +424,34 @@ class CatalogSpec extends SparkSpec {
     val (cat, _) = freshCatalog(autoCompact = false)
     cat.createTable("t", "k", base)
     cat.commit("t", Txn.empty.update(col("k") === 1L, Map("v" -> lit(11L))))
-    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        counter.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      cat.purge("t", col("k") === 2L)
-      // listener events are async; a short drain keeps the count complete
-      // (undercounting is the safe direction for this upper-bound assert)
-      Thread.sleep(300)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (_, jobs) = jobsOf(cat.purge("t", col("k") === 2L))
     // measured 11 jobs before the depth aggregate: the staged write under
     // AQE (range-partition sampling + per-stage jobs) + the pruned
     // multi_ver probe. The groupBy-count depth budget adds ~2 (partial +
     // final agg); a windowed rank aggregate would add ~3 more on top —
     // this bound trips if one returns.
-    assert(counter.get() <= 14, s"purge ran ${counter.get()} jobs — windowed depth job back?")
+    assert(jobs <= 14, s"purge ran $jobs jobs — windowed depth job back?")
+  }
+
+  test("the one-row commit path's Spark jobs: insert ≤ 1, update ≤ 2, " +
+    "a compaction check below the ratio none") {
+    // the auto-compaction check counts rows from footers on the driver
+    // (up to 64 files a side); a Spark count job per side, or any other
+    // job a refactor slips into the commit path, trips these bounds
+    import spark.implicits._
+    val (cat, _) = freshCatalog() // autoCompact on, ratio 0.3
+    cat.createTable("t", "k", spark.range(100)
+      .select(col("id").as("k"), (col("id") * 10).as("v"), lit("x").as("s")))
+    val (_, insert) = jobsOf(cat.commit("t",
+      Txn.empty.insert(Seq((1000L, 1L, "I")).toDF("k", "v", "s"))))
+    assert(insert <= 1, s"one-row insert ran $insert jobs")
+    val (_, update) = jobsOf(cat.commit("t",
+      Txn.empty.update(col("k") === 7L, Map("v" -> lit(71L)))))
+    assert(update <= 2, s"one-key update ran $update jobs")
+    val (due, check) = jobsOf(cat.maybeCompact("t"))
+    assert(!due, "a 2-row tail over a 100-row base is below the 0.3 ratio")
+    assert(check === 0, s"the compaction check ran $check jobs")
+    assert(cat.getTable("t").snapshot.count() === 101)
   }
 
   test("cross-process commits: two catalogs over one warehouse, one aborts") {

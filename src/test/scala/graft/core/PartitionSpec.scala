@@ -89,6 +89,26 @@ class PartitionSpec extends SparkSpec {
       s"pruning read $scanned of $allFiles files")
   }
 
+  test("maybeCompact counts a partitioned base through its directories") {
+    // the base's files sit under `_pd=` directories: a count that did not
+    // descend into them would see 0 base rows and fold on every call
+    val (cat, wh) = fresh()
+    cat.createTable("t", "k", rows, partitionBy = Some("cat"))
+    val tail = java.nio.file.Paths.get(wh, "t", "tail")
+    cat.commit("t", Txn.empty.update(col("k") === 1L, Map("v" -> lit(11L))))
+    assert(!cat.maybeCompact("t", maxTailRatio = 0.5)) // tail 1 / base 6
+    assert(Files.isDirectory(tail))
+    Seq(2L, 3L, 4L).foreach(k => cat.commit("t",
+      Txn.empty.update(col("k") === k, Map("v" -> lit(k * 10 + 1)))))
+    val want = m(cat.getTable("t").snapshot)
+    assert(cat.maybeCompact("t", maxTailRatio = 0.5)) // tail 4 / base 6
+    assert(m(cat.getTable("t").snapshot) === want)
+    assert(!Files.isDirectory(tail))
+    val dirs = new java.io.File(s"$wh/t/base").listFiles()
+      .filter(_.isDirectory).map(_.getName).sorted
+    assert(dirs.toSeq === Seq("_pd=pa", "_pd=pb", "_pd=pc"))
+  }
+
   test("partitionSnapshotIn prunes to EXACTLY the named directory set (r13)") {
     val (cat, _) = fresh()
     cat.createTable("t", "k", rows, partitionBy = Some("cat"))
