@@ -10,6 +10,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 
 import graft.ops.{KnnGraph, Similarity}
 
@@ -123,9 +124,6 @@ final class Catalog(spark: SparkSession, warehouse: String,
   }
 
   private def deleteRecursively(p: Path): Unit = { fs.delete(p, true); () }
-
-  private def hasParquet(p: Path): Boolean =
-    fs.listStatus(p).exists(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
 
   private def writeString(p: Path, s: String): Unit = {
     val out = fs.create(p, true)
@@ -522,7 +520,11 @@ final class Catalog(spark: SparkSession, warehouse: String,
 
   /** Assemble a [[LineageTable]] from a meta + base frame + tail dir —
     * shared by [[getTable]] (the live table) and [[loadSnapshot]] (a
-    * retained pre-rewrite state, same mechanics over `_snap/<id>/`). */
+    * retained pre-rewrite state, same mechanics over `_snap/<id>/`). The
+    * base frame was read under the table's declared schema
+    * ([[declaredSchema]]); the tail reads under that same schema, so
+    * every file — pre- or post-evolve, narrow or wide — meets one frame
+    * and the union is a plain `unionByName`. */
   private def assembleTable(meta: Meta,
                             base: org.apache.spark.sql.DataFrame,
                             tailDir: Path,
@@ -530,64 +532,21 @@ final class Catalog(spark: SparkSession, warehouse: String,
                               * tail scan ([[partitionSnapshot]]) —
                               * physical column names. */
                             tailFilter: Option[org.apache.spark.sql.Column] = None): LineageTable = {
-    val hasTail = isDir(tailDir) && hasParquet(tailDir)
-    // allowMissingColumns only when schema evolution is in play: files
-    // written before an addColumn legitimately lack the added column (and
-    // read back null there — the Delta/Iceberg ADD COLUMN semantics), and
-    // files written after a DROP legitimately lack the dropped physical
-    // column; an un-evolved table keeps the strict union as a corruption
-    // guard.
-    val evolved = isEvolved(meta)
-    // TYPE WIDENING ([[widenColumn]]): the base is uniform (written
-    // wholesale), so upcasting its narrow columns is one cast per
-    // widened column...
-    val baseW = meta.widened.foldLeft(base) { case (df, (c, t)) =>
-      if (df.columns.contains(c)) df.withColumn(c, col(c).cast(t)) else df }
-    // an evolved table's tail can MIX pre- and post-evolve files; the
-    // default parquet read infers the schema from ONE file (first in
-    // listing order — random part-file UUIDs), which would silently drop
-    // the added column's committed values whenever it sampled a pre-evolve
-    // file. mergeSchema unions every footer's schema — O(tail files)
-    // metadata reads, no data scan. ...the TAIL however can mix pre- and
-    // post-widen files for one column, which BOTH inference and
-    // mergeSchema reject — a widened table's tail reads under an
-    // EXPLICIT schema instead (the widened base schema + added columns),
-    // which parquet serves per file with native widening promotions
-    // (int32→bigint, float→double) and null-fills absent columns.
+    val hasTail = parquetUnder(tailDir).hasNext
     val unioned =
       if (hasTail) {
-        val tail0 =
-          if (meta.widened.nonEmpty) {
-            val known = baseW.schema.fieldNames.toSet
-            val extra = meta.added.filterNot { case (c, _) => known.contains(c) }
-              .map { case (c, t) =>
-                org.apache.spark.sql.types.StructField(
-                  c, org.apache.spark.sql.types.StructType
-                    .fromDDL(s"`$c` $t").head.dataType) }
-            spark.read.schema(org.apache.spark.sql.types.StructType(
-              baseW.schema.fields ++ extra)).parquet(tailDir.toString)
-          } else if (evolved)
-            spark.read.option("mergeSchema", "true").parquet(tailDir.toString)
-          else scanGraftDir(tailDir)
-        val tail = tailFilter.fold(tail0)(tail0.where)
-        baseW.unionByName(tail,
-          allowMissingColumns = evolved || meta.widened.nonEmpty)
-      } else baseW
-    // a column NO file carries yet exists only in metadata — materialize
-    // it at its declared (physical) type; then map physical→logical
-    // (renames) and normalize column order to the schema — the one
-    // select that implements RENAME (aliasing) and DROP (omission)
-    // with zero data I/O
-    val lineage0 = meta.added
-      .filterNot { case (c, _) => unioned.columns.contains(c) }
-      .foldLeft(unioned) { case (df, (c, t)) =>
-        df.withColumn(c, lit(null).cast(t)) }
+        val tail = spark.read.schema(base.schema).parquet(tailDir.toString)
+        base.unionByName(tailFilter.fold(tail)(tail.where))
+      } else base
+    // map physical→logical (renames) and normalize column order to the
+    // schema — the one select that implements RENAME (aliasing) and DROP
+    // (omission) with zero data I/O
     val lineage =
-      if (evolved)
-        lineage0.select(meta.columns.map(lc =>
+      if (isEvolved(meta))
+        unioned.select(meta.columns.map(lc =>
           col(physOf(meta, lc)).as(lc)) ++
           Seq(LineageTable.VER, LineageTable.DEL).map(col): _*)
-      else lineage0
+      else unioned
     // With no tail AND a single-version base (multiVer records when a
     // vacuum left retained history in the base), every record has exactly
     // one live version: snapshot ≡ base scan (no window/shuffle) — the
@@ -760,6 +719,11 @@ final class Catalog(spark: SparkSession, warehouse: String,
   private def hasManifest(name: String): Boolean =
     pathExists(cloneManifestPath(name))
 
+  /** The files a clone's manifest lists, its base's first. */
+  private def manifestFiles(name: String): Seq[String] =
+    readString(cloneManifestPath(name)).split("\n").toSeq.map(_.trim)
+      .filter(_.nonEmpty)
+
   /** The parquet data files under `p` (none when absent), recursing
     * into partition directories (`_pd*=`), listed lazily so a caller
     * that needs only the first file ([[scanGraftDir]]'s schema footer)
@@ -778,84 +742,87 @@ final class Catalog(spark: SparkSession, warehouse: String,
     if (isDir(p)) walk(p) else Iterator.empty
   }
 
+  /** The Spark schema graft's writer recorded in `file`'s footer — a
+    * driver-side read of a few KB
+    * ([[graft.sources.ParquetMeta.footerSparkSchema]]). */
+  private def footerSchema(file: String): StructType =
+    graft.sources.ParquetMeta.footerSparkSchema(hconf, file).getOrElse(
+      throw new IllegalStateException(s"$file: no Spark schema in its footer"))
+
   /**
-   * Parquet scan of a graft-written directory with the schema SUPPLIED
-   * from one footer's Spark row-metadata (a driver-side read of a few
-   * KB, [[graft.sources.ParquetMeta.footerSparkSchema]]) instead of a
-   * schema-inference Spark job. Why it matters (guide §1 measure-first):
-   * every `spark.read.parquet(dir)` launches a 1-task footer-read job
-   * (~25ms + ~40ms driver gap at local sf0.1), and `getTable` runs TWO
-   * of them (base + tail) — measured as 24 of sql_partition's 51 jobs,
-   * the dominant share of the per-commit floor on every multi-statement
-   * transcript. Sound because graft data files are uniform per directory
-   * (written wholesale through [[lineageWriter]]); the EVOLVED/WIDENED
-   * paths keep their mergeSchema / explicit-widened reads — callers gate
-   * on that. `pdCols` re-attaches the `_pd*` directory keys (STRING —
-   * the "p"-prefixed canonical form, exactly what inference produced)
-   * when the directory actually has partition subdirs; a flat base (the
-   * empty-CREATE fallback) must NOT declare them, or the pruned read
-   * would see an all-null `_pd` instead of falling back to the data
-   * filter. Falls back to inference when no footer carries the key.
+   * The one rule every read of a table's files goes by: the table's read
+   * schema is its base's first footer schema, with each `widened` column
+   * at its wide type and each `added` column the footer lacks at its
+   * declared type. The base, a clone's manifest, the tail and a retained
+   * snapshot all read under it ([[baseFrame]], [[liveBase]],
+   * [[assembleTable]]). Parquet serves each file under the declared
+   * schema: a narrow physical type promotes natively (every
+   * [[widenable]] pair, in both the vectorized and the row reader) and
+   * a column the file lacks reads null, so a tail mixing pre- and
+   * post-evolve or narrow and wide files reads as one frame with no
+   * schema-inference job. A dropped column stays in the schema while the
+   * base carries it, and [[assembleTable]]'s select omits it. Every file
+   * after the base is written at the declared types ([[stage]]'s cast),
+   * so no file is wider than the rule.
    */
-  private def scanGraftDir(dirPath: Path,
-                           pdCols: Seq[String] = Nil): org.apache.spark.sql.DataFrame = {
-    val pdHere = pdCols.nonEmpty && isDir(dirPath) &&
-      fs.listStatus(dirPath).exists(s => s.isDirectory &&
-        s.getPath.getName.startsWith(pdCols.head + "="))
-    parquetUnder(dirPath).nextOption()
-      .flatMap(f => graft.sources.ParquetMeta.footerSparkSchema(hconf, f)) match {
-      case Some(s) =>
-        val full =
-          if (pdHere) org.apache.spark.sql.types.StructType(s.fields ++
-            pdCols.map(c => org.apache.spark.sql.types.StructField(
-              c, org.apache.spark.sql.types.StringType)))
-          else s
-        spark.read.schema(full).parquet(dirPath.toString)
-      case None => spark.read.parquet(dirPath.toString)
-    }
+  private def declaredSchema(meta: Meta, baseFile: String): StructType = {
+    val footer = footerSchema(baseFile)
+    StructType(footer.map(f => meta.widened.get(f.name)
+      .fold(f)(t => f.copy(dataType = DataType.fromDDL(t)))) ++
+      meta.added.collect { case (c, t) if !footer.fieldNames.contains(c) =>
+        StructField(c, DataType.fromDDL(t)) })
   }
 
-  /** Flat listing of the parquet files under `p` (empty when absent). */
-  private def parquetFiles(p: Path): Seq[String] =
-    if (!isDir(p)) Nil
-    else fs.listStatus(p).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(s => fs.makeQualified(s.getPath).toString)
+  /**
+   * Parquet scan of a graft-written directory under the schema `schemaOf`
+   * gives its first file — by default that file's own footer
+   * ([[footerSchema]]), for a directory one job wrote whole (a staged
+   * delta, a rewritten base); the table's [[declaredSchema]] for a base.
+   * Supplying the schema saves the 1-task schema-inference job every
+   * schema-less parquet read of a directory launches (~25ms + ~40ms
+   * driver gap at local sf0.1). `pdCols` re-attaches the `_pd*`
+   * directory keys (STRING — the "p"-prefixed canonical form, exactly
+   * what inference produced) when the directory actually has partition
+   * subdirs; a flat base (the
+   * empty-CREATE fallback) must NOT declare them, or the pruned read
+   * would see an all-null `_pd` instead of falling back to the data
+   * filter.
+   */
+  private def scanGraftDir(dirPath: Path,
+                           schemaOf: String => StructType = footerSchema,
+                           pdCols: Seq[String] = Nil): DataFrame = {
+    val first = parquetUnder(dirPath).nextOption().getOrElse(
+      throw new IllegalStateException(s"$dirPath holds no parquet file"))
+    val pdHere = pdCols.nonEmpty && fs.listStatus(dirPath).exists(s =>
+      s.isDirectory && s.getPath.getName.startsWith(pdCols.head + "="))
+    val s = schemaOf(first)
+    spark.read.schema(if (!pdHere) s
+      else StructType(s.fields ++ pdCols.map(StructField(_, StringType))))
+      .parquet(dirPath.toString)
+  }
 
-  /** The live base rows of `name`: the frozen manifest file list for a
-    * shallow clone (schema-merging when evolution is in play: a clone's
-    * manifest mixes base and tail files), the `base/` directory
-    * otherwise. */
+  /** The live base rows of `name`, under its [[declaredSchema]]: the
+    * frozen manifest's files for a shallow clone (base and tail files of
+    * the source, which read as one frame just as a tail does), the
+    * `base/` directory otherwise. */
   private def liveBase(name: String, meta: Meta): DataFrame =
     if (hasManifest(name)) {
-      val files = readString(cloneManifestPath(name))
-        .split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
-      if (isEvolved(meta))
-        spark.read.option("mergeSchema", "true").parquet(files: _*)
-      else files.headOption
-        .flatMap(f => graft.sources.ParquetMeta.footerSparkSchema(hconf, f))
-        match {
-          // same no-inference-job read as [[scanGraftDir]]; a clone's
-          // manifest mixes base+tail files of ONE un-evolved table, so
-          // one footer's schema covers all of them
-          case Some(s) => spark.read.schema(s).parquet(files: _*)
-          case None => spark.read.parquet(files: _*)
-        }
+      val files = manifestFiles(name)
+      spark.read.schema(declaredSchema(meta, files.head)).parquet(files: _*)
     } else baseFrame(meta, baseDir(name))
 
   /** The rows of base directory `base` — the live base or a retained
-    * snapshot's — read under one footer's schema ([[scanGraftDir]]): a
-    * base is written whole by one job, so every file carries the same
-    * schema, evolved table or not. A partitioned base restores `_pd*`
-    * from the directory names — a storage artifact, not a table column
-    * (the real partition column lives IN the files) — so they drop after
-    * `prune` has filtered on them ([[prunedSnapshot]]). Unpartitioned
-    * tables drop nothing: a (pre-r12 legacy) data column named `_pd` must
-    * survive. */
+    * snapshot's — under the table's [[declaredSchema]]. A partitioned
+    * base restores `_pd*` from the directory names — a storage artifact,
+    * not a table column (the real partition column lives IN the files) —
+    * so they drop after `prune` has filtered on them
+    * ([[prunedSnapshot]]). Unpartitioned tables drop nothing: a (pre-r12
+    * legacy) data column named `_pd` must survive. */
   private def baseFrame(meta: Meta, base: Path,
                         prune: DataFrame => DataFrame = identity): DataFrame =
-    if (meta.partCols.isEmpty) prune(scanGraftDir(base))
-    else prune(scanGraftDir(base, pdColNames(meta))).drop(pdColNames(meta): _*)
+    if (meta.partCols.isEmpty) prune(scanGraftDir(base, declaredSchema(meta, _)))
+    else prune(scanGraftDir(base, declaredSchema(meta, _), pdColNames(meta)))
+      .drop(pdColNames(meta): _*)
 
   /**
    * Zero-copy shallow clone (the Delta `CREATE TABLE ... SHALLOW CLONE`
@@ -867,7 +834,9 @@ final class Catalog(spark: SparkSession, warehouse: String,
    * files), so `dst` keeps reading the exact clone-time state no matter
    * what `src` appends afterwards.
    *
-   * What carries over: schema (incl. evolution), key, index layout (the
+   * What carries over: schema (incl. evolution and pending widenings —
+   * the manifest reads under the table's [[declaredSchema]], so its
+   * narrow and wide files mix as a tail's do), key, index layout (the
    * referenced files ARE the indexed layout), op_seq (dst's stamps
    * continue above every referenced stamp), the commit log (time travel
    * into pre-clone states works — the log addresses stamps contained in
@@ -890,18 +859,14 @@ final class Catalog(spark: SparkSession, warehouse: String,
       require(meta.partCol.isEmpty, s"cloneTable: '$src' is partitioned — " +
         "the flat file manifest cannot carry directory-partition values; " +
         "materialize a copy instead (CTAS)")
-      require(meta.widened.isEmpty, s"cloneTable: '$src' has pending " +
-        "type widenings — the manifest read cannot mix physical types; " +
-        "fold or compact first (a rewrite makes the files uniformly wide)")
       // frozen view: under src's lock no writer is mid-commit, so
       // base ∪ tail (or src's own manifest, for a clone of a clone) is
       // exactly src's current durable state
+      def files(p: Path) =
+        parquetUnder(p).map(f => fs.makeQualified(new Path(f)).toString).toSeq
       val baseFiles =
-        if (hasManifest(src))
-          readString(cloneManifestPath(src))
-            .split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
-        else parquetFiles(baseDir(src))
-      val tailFiles = parquetFiles(new Path(dir(src), "tail"))
+        if (hasManifest(src)) manifestFiles(src) else files(baseDir(src))
+      val tailFiles = files(new Path(dir(src), "tail"))
       require(baseFiles.nonEmpty, s"clone source $src has no data files")
       fs.mkdirs(dir(dst))
       writeString(cloneManifestPath(dst),
@@ -922,8 +887,8 @@ final class Catalog(spark: SparkSession, warehouse: String,
     }
 
   /** True when any schema evolution is in play (added, renamed or
-    * dropped columns) — the flag that switches reads onto the
-    * schema-merging, column-mapping path. */
+    * dropped columns) — the flag that puts [[assembleTable]]'s
+    * column-mapping select on the read. */
   private def isEvolved(meta: Meta): Boolean =
     meta.added.nonEmpty || meta.renamed.nonEmpty || meta.droppedPhys.nonEmpty
 
@@ -1185,8 +1150,15 @@ final class Catalog(spark: SparkSession, warehouse: String,
     val names = txns.keys.toList.sorted
     val (expected, next, patch) = names.map { n =>
       val meta = readMeta(n)
-      val after = txns(n).commit(getTable(n))
-      validateConstraints(n, meta, after.delta)
+      val before = getTable(n)
+      val after = txns(n).commit(before)
+      // every column at the table's declared type, as UPDATE casts its
+      // assignments: a tail file wider than the declared schema cannot
+      // be read under it ([[declaredSchema]]). A value that does not fit
+      // fails here (ANSI), before the record
+      val delta = after.delta.map(_.select(before.lineage.schema.map(f =>
+        col(f.name).cast(f.dataType)): _*))
+      validateConstraints(n, meta, delta)
       val at = meta.copy(opSeq = after.opSeq)
       // the meta the roll-forward writes passes writeMeta's check here,
       // before anything is written: a record that failed it would
@@ -1195,7 +1167,7 @@ final class Catalog(spark: SparkSession, warehouse: String,
       // through lineageWriter: the staged files RENAME into the tail at
       // roll-forward, so layout options (bloom filters) must be baked
       // in at the stage write — the rename can't add them later
-      after.delta.foreach(d => lineageWriter(d, meta)
+      delta.foreach(d => lineageWriter(d, meta)
         .mode(SaveMode.Append)
         .parquet(new Path(new Path(txnRoot, id), n).toString))
       (meta.opSeq, after.opSeq, n -> patch)
@@ -1287,14 +1259,14 @@ final class Catalog(spark: SparkSession, warehouse: String,
       if (kind == "rewrite") {
         rollRewrite(n, e, sdir, readMeta(n))
         crashPoint(s"rewrite-proj-$n")
-      } else if (isDir(sdir) && hasParquet(sdir)) {
+      } else if (parquetUnder(sdir).hasNext) {
         // projections BEFORE rows, so a crash between the two leaves the
         // projection a SUPERSET of the lineage; a recovery re-run may
         // re-append pairs — extra candidates are filtered by the probe's
         // final predicate re-application (a missing key would lose rows)
         val projCols = meta.projCols
         if (projCols.nonEmpty) {
-          val delta = spark.read.parquet(sdir.toString)
+          val delta = scanGraftDir(sdir)
           projCols.foreach { c =>
             delta.select(col(c), col(meta.key))
               .write.mode(SaveMode.Append).parquet(projDir(n, c).toString)
@@ -1515,7 +1487,7 @@ final class Catalog(spark: SparkSession, warehouse: String,
   def maybeCompact(name: String, maxTailRatio: Double = 0.3,
                    preserveHistory: Boolean = false): Boolean = {
     val tailPath = new Path(dir(name), "tail")
-    if (!isDir(tailPath) || !hasParquet(tailPath)) return false
+    if (!parquetUnder(tailPath).hasNext) return false
     // footer row counts DRIVER-SIDE when the file count is small: the
     // per-commit trigger previously ran TWO Spark count jobs (each a
     // task dispatch + scheduler round-trip for pure footer metadata) —
@@ -1533,7 +1505,7 @@ final class Catalog(spark: SparkSession, warehouse: String,
       else footerRows(baseDir(name))
         .getOrElse(liveBase(name, readMeta(name)).count())
     val tailRows = footerRows(tailPath)
-      .getOrElse(spark.read.parquet(tailPath.toString).count())
+      .getOrElse(scanGraftDir(tailPath).count())
     val due = baseRows == 0 || tailRows.toDouble / baseRows > maxTailRatio
     if (due) {
       if (preserveHistory) foldTail(name)
@@ -1696,7 +1668,7 @@ final class Catalog(spark: SparkSession, warehouse: String,
    * exact `multi_ver` (any staged `_ver` below `opSeqNew` is a rank≥2
    * row), the commit log (cleared — the re-stamp invalidates historical
    * stamps), the retained snapshots and the widenings (cleared — the
-   * staged write read through the widening casts). [[rollRewrite]]
+   * staged rows were read at the wide types). [[rollRewrite]]
    * adopts the staged base.
    *
    * `keepSnapshots` is [[foldTail]]'s: retained snapshots stay and the
@@ -1712,7 +1684,7 @@ final class Catalog(spark: SparkSession, warehouse: String,
     commitStaged("rewrite") { id =>
       val staged = new Path(new Path(new Path(txnRoot, id), name), "base")
       writeBaseData(layoutOrdered(rows, meta), meta, staged)
-      val multiVer = multiPossible && !spark.read.parquet(staged.toString)
+      val multiVer = multiPossible && !scanGraftDir(staged)
         .where(col(LineageTable.VER) < opSeqNew).isEmpty
       // a shallow clone's base is the source's files: they cannot retire
       // into a snapshot, so a clone's first fold detaches it unretained
@@ -1779,7 +1751,7 @@ final class Catalog(spark: SparkSession, warehouse: String,
     crashPoint(s"rewrite-snaps-$name")
     fs.delete(cloneManifestPath(name), false)
     if (meta.projCols.nonEmpty) {
-      val rows = spark.read.parquet(baseDir(name).toString)
+      val rows = scanGraftDir(baseDir(name))
       meta.projCols.foreach { c =>
         rows.select(col(c), col(meta.key))
           .repartitionByRange(col(c))
@@ -3212,7 +3184,7 @@ final class Catalog(spark: SparkSession, warehouse: String,
       requireNotLoadBearing(name, meta, column)
       val phys = physOf(meta, column)
       // the widen entry stays: old files still carry the narrow type,
-      // and the explicit-schema tail read keeps their widened values
+      // and the declared schema ([[declaredSchema]]) keeps reading it wide
       writeMeta(name, meta.copy(
         columns = meta.columns.filterNot(_ == column),
         added = meta.added - phys, renamed = meta.renamed - column,
@@ -3261,9 +3233,8 @@ final class Catalog(spark: SparkSession, warehouse: String,
    * ALTER COLUMN TYPE — metadata-only type WIDENING (r11, completing
    * the Delta column-mapping family after ADD/DROP/RENAME): int→bigint,
    * float→double (and the smaller-int chains). No data file is touched:
-   * old files keep the narrow physical type and the read path upcasts
-   * them per file (an EXPLICIT-schema parquet read promotes
-   * int32→bigint / float→double natively — [[assembleTable]]), while
+   * old files keep the narrow physical type and every read promotes
+   * them per file under the declared schema ([[declaredSchema]]), while
    * every write from the first post-widen op on carries the wide type,
    * so a tail can MIX pre- and post-widen files and still read as one
    * frame. Narrowing and any lossy conversion are rejected loud. The
@@ -3289,9 +3260,9 @@ final class Catalog(spark: SparkSession, warehouse: String,
           s"(supported: ${widenable.map { case (f, ts) =>
             s"$f -> ${ts.mkString("/")}" }.mkString("; ")})")
       val phys = physOf(meta, column)
-      // an ADDED column's declared type must follow, or the
-      // null-materialization fill re-narrows it on tables whose files
-      // never carried the column
+      // an ADDED column's declared type must follow, or the declared
+      // schema re-narrows it on tables whose base never carried the
+      // column
       writeMeta(name, meta.copy(widened = meta.widened.updated(phys, target),
         added = meta.added.updatedWith(phys)(_.map(_ => target))))
       // a projection on the widened column would otherwise accumulate
@@ -3457,7 +3428,7 @@ final class Catalog(spark: SparkSession, warehouse: String,
       // base, so multi_ver tables take the snapshot-count path — and a
       // shallow clone's base is a manifest, not the `base/` dir the
       // footer inventory lists
-      !(isDir(tailDir) && hasParquet(tailDir)) && !readMeta(n).multiVer &&
+      !parquetUnder(tailDir).hasNext && !readMeta(n).multiVer &&
         !hasManifest(n)
     }
     val viaFooters =

@@ -34,10 +34,11 @@ private[core] case class Meta(
       * the base state ([[asOfTimestamp]]'s clamp). */
     tailFloor: Long = 0,
     /** Columns added by [[addColumn]] after creation:
-      * PHYSICAL name → declared type. Files written
-      * before the add lack the column and read back
-      * as null ([[getTable]] fill). On disk
-      * `added_cols`/`added_types`. */
+      * PHYSICAL name → declared type. The read schema
+      * carries each one the base's footer lacks, at
+      * this type ([[Catalog.declaredSchema]]), so a
+      * file written before the add reads null there.
+      * On disk `added_cols`/`added_types`. */
     added: ListMap[String, String] = ListMap.empty,
     /** Columns with a maintained (column, key)
       * projection side table ([[createProjection]]):
@@ -214,12 +215,13 @@ private[core] case class Meta(
     /** TYPE WIDENING ([[widenColumn]], the Delta
       * type-widening shape, r11): PHYSICAL column
       * name → widened type (on disk `widen_cols`/
-      * `widen_types`). Metadata-only — old files keep their narrow
-      * physical type and the reader upcasts
-      * (explicit-schema parquet reads promote
-      * int32→bigint / float→double per file);
-      * writes use the widened type from the first
-      * post-widen op on. */
+      * `widen_types`). Metadata-only — old files keep
+      * their narrow physical type; the read schema
+      * carries the column at this type
+      * ([[Catalog.declaredSchema]]) and parquet
+      * promotes each narrow file to it. Writes use
+      * the widened type from the first post-widen op
+      * on; a physical rewrite clears the entry. */
     widened: ListMap[String, String] = ListMap.empty) {
   /** First partition column — the single-column convenience the r11
     * surface exposed; multi-column callers read [[partCols]]. */

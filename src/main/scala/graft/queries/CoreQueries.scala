@@ -227,7 +227,7 @@ object CoreQueries {
    * back null in the new column. autoCompact is OFF so the tail keeps
    * BOTH generations of files — commit 1's without the column, commit 2's
    * with it — making this query exercise the mixed-schema tail read
-   * (mergeSchema in Catalog.getTable), the one genuinely risky evolve
+   * (Catalog's declared read schema), the one genuinely risky evolve
    * path; the fold/vacuum interplay is EvolveSpec's job.
    */
   def evolvedOrders(spark: SparkSession, sfDir: String): LineageTable =
@@ -1613,7 +1613,7 @@ object CoreQueries {
     // widens qty→bigint and price→double METADATA-ONLY, then a
     // post-widen commit pushes qty past int range — the SAME tail now
     // mixes int32 and int64 files for one column, read back as one
-    // frame (explicit-schema parquet reads promote per file). The
+    // frame (the declared-schema read promotes per file). The
     // oracle replays with the same narrow→wide casts; values past 2^31
     // prove the widening is real, not a display cast.
     "ls_evolve_widen" -> { (s, d) =>

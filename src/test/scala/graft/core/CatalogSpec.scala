@@ -658,4 +658,58 @@ class CatalogSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
     assert(got === Set(("a", 2L, 13.0), ("b", 1L, 1.0)))
   }
+
+  test("a delta is written at the table's declared types: an int frame " +
+    "into a bigint column leaves a readable tail") {
+    // an API insert whose frame carries int for a bigint column, then a
+    // bigint insert: the first-listed tail footer once said int, and
+    // every later getTable failed on the other file
+    import spark.implicits._
+    val (cat, wh) = freshCatalog(autoCompact = false)
+    cat.createTable("t", "k", Seq((1L, 10L)).toDF("k", "v"))
+    cat.commit("t", Txn.empty.insert(Seq((2L, 20)).toDF("k", "v")))
+    cat.commit("t", Txn.empty.insert(Seq((3L, 30L)).toDF("k", "v")))
+    val tail = new java.io.File(s"$wh/t/tail").listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+    assert(tail.length >= 2)
+    tail.foreach(f => assert(spark.read.parquet(f.getPath).schema("v")
+      .dataType.simpleString === "bigint", s"${f.getName} is not v bigint"))
+    val fresh = new Catalog(spark, wh, autoCompact = false)
+    assert(fresh.getTable("t").snapshot.collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet ===
+      Set((1L, 10L), (2L, 20L), (3L, 30L)))
+  }
+
+  test("a value that does not fit the declared type aborts the commit " +
+    "before its record") {
+    import spark.implicits._
+    val (cat, wh) = freshCatalog(autoCompact = false)
+    cat.createTable("t", "k", Seq((1L, 10)).toDF("k", "v"))
+    def txnDir = Option(new java.io.File(s"$wh/_txn").list()).toSeq.flatten.toSet
+    def state(c: Catalog) = {
+      val t = c.getTable("t")
+      (t.snapshot.collect().map(_.toSeq).toSet, t.opSeq)
+    }
+    val (before, txnBefore) = (state(cat), txnDir)
+    intercept[Exception](cat.commit("t",
+      Txn.empty.insert(Seq((2L, 3000000000L)).toDF("k", "v"))))
+    assert(txnDir === txnBefore, "the stage left something under _txn/")
+    assert(state(cat) === before)
+    assert(state(new Catalog(spark, wh, autoCompact = false)) === before)
+  }
+
+  test("getTable on an evolved table with a tail starts no Spark job") {
+    // the tail reads under the declared schema; a footer-merging read
+    // started one job per getTable
+    import spark.implicits._
+    val (cat, _) = freshCatalog(autoCompact = false)
+    cat.createTable("t", "k", Seq((1L, 10L), (2L, 20L)).toDF("k", "v"))
+    cat.commit("t", Txn.empty.update(col("k") === 1L, Map("v" -> lit(11L))))
+    cat.addColumn("t", "n", "bigint")
+    cat.commit("t", Txn.empty.update(col("k") === 2L, Map("n" -> lit(7L))))
+    val (t, jobs) = jobsOf(cat.getTable("t"))
+    assert(jobs === 0, s"getTable ran $jobs jobs")
+    assert(t.snapshot.collect().map(_.toSeq).toSet ===
+      Set(Seq(1L, 11L, null), Seq(2L, 20L, 7L)))
+  }
 }

@@ -150,4 +150,27 @@ class CloneSpec extends SparkSpec {
       Txn.empty.update(col("k") === 1L, Map("v" -> lit(-5L)))))
     assert(r.isFailure)
   }
+
+  test("clone of an evolved, widened table reads the source's snapshot") {
+    // the source tail mixes files from before and after an ADD COLUMN
+    // and an int -> bigint widening; the manifest reads them as one frame
+    import spark.implicits._
+    val (cat, _) = freshCatalog()
+    cat.createTable("t", "k",
+      Seq((1L, 10, "A"), (2L, 20, "B"), (3L, 30, "C")).toDF("k", "v", "s"))
+    cat.commit("t", Txn.empty.update(col("k") === 1L, Map("v" -> lit(11))))
+    cat.addColumn("t", "n", "bigint")
+    cat.widenColumn("t", "v", "bigint")
+    cat.commit("t", Txn.empty.update(col("k") === 2L,
+      Map("n" -> lit(7L), "v" -> lit(3000000000L))))
+    val want = Set(Seq(1L, 11L, "A", null), Seq(2L, 3000000000L, "B", 7L),
+      Seq(3L, 30L, "C", null))
+    assert(snap(cat, "t") === want)
+    cat.cloneTable("t", "t2")
+    assert(snap(cat, "t2") === want)
+    assert(cat.getTable("t2").snapshot.schema("v").dataType.simpleString === "bigint")
+    cat.foldTail("t2")
+    assert(snap(cat, "t2") === want)
+    assert(snap(cat, "t") === want)
+  }
 }

@@ -284,6 +284,39 @@ class EvolveSpec extends SparkSpec {
       .map(_.getLong(1)).toSeq === Seq(5L, 7L))
   }
 
+  test("tinyint and smallint widenings: mixed-vintage tail, reopen, fold") {
+    // each pair: a narrow base and a narrow tail file, then a wide tail
+    // file whose value only the wide type holds; parquet promotes the
+    // narrow files under the declared schema
+    import spark.implicits._
+    val pairs = Seq("tinyint" -> "smallint", "tinyint" -> "int",
+      "tinyint" -> "bigint", "smallint" -> "int", "smallint" -> "bigint")
+    val big = Map("smallint" -> 300L, "int" -> 70000L, "bigint" -> 3000000000L)
+    for ((from, to) <- pairs) {
+      val (cat, wh) = freshCat(autoCompact = false)
+      cat.createTable("w", "k", Seq((1L, 1), (2L, 2)).toDF("k", "v")
+        .select(col("k"), col("v").cast(from).as("v")))
+      cat.commit("w", Txn.empty.update(col("k") === 1L,
+        Map("v" -> lit(10).cast(from))))
+      cat.widenColumn("w", "v", to)
+      cat.commit("w", Txn.empty.insert(Seq((3L, big(to))).toDF("k", "v")
+        .select(col("k"), col("v").cast(to).as("v"))))
+      val want = Seq((1L, 10L), (2L, 2L), (3L, big(to)))
+      def check(c: Catalog, when: String): Unit = {
+        val snap = c.getTable("w").snapshot
+        assert(snap.schema("v").dataType.simpleString === to, s"$from->$to $when")
+        assert(snap.orderBy("k").collect().map(r =>
+          (r.getLong(0), r.getAs[Number](1).longValue)).toSeq === want,
+          s"$from->$to $when")
+      }
+      check(cat, "before reopen")
+      val reopened = new Catalog(spark, wh, autoCompact = false)
+      check(reopened, "after reopen")
+      reopened.foldTail("w")
+      check(reopened, "after foldTail")
+    }
+  }
+
   test("widening a PROJECTED column rebuilds the projection wide (r12)") {
     import spark.implicits._
     val (cat, wh) = freshCat(autoCompact = false)
