@@ -897,31 +897,32 @@ final class Catalog(spark: SparkSession, warehouse: String,
   private def physOf(meta: Meta, logical: String): String =
     meta.renamed.getOrElse(logical, logical)
 
+  /** Column mapping on the WRITE side: lineage rows under their
+    * PHYSICAL names, whatever the logical schema has been renamed to —
+    * a rename never forks the on-disk column namespace. */
+  private def physical(rows: DataFrame, meta: Meta): DataFrame =
+    if (meta.renamed.isEmpty) rows
+    else rows.select(meta.columns.map(lc =>
+      col(lc).as(physOf(meta, lc))) ++
+      Seq(LineageTable.VER, LineageTable.DEL).map(col) ++
+      // the partition-directory keys ride through the rename mapping
+      // untouched ([[writeBaseData]])
+      rows.columns.filter(_.startsWith("_pd")).toSeq.map(col): _*)
+
   /** The one writer every lineage data file goes through, carrying the
-    * table's physical-layout options: parquet bloom filters on the
-    * [[createBloomFilter]] columns (expected NDV from ANALYZE stats when
-    * present — an undersized bloom saturates and prunes nothing). The
-    * options are per-write, so staged commits, compactions and re-stamps
-    * all emit them and the layout survives every rewrite. */
+    * table's physical names ([[physical]]) and physical-layout options:
+    * parquet bloom filters on the [[createBloomFilter]] columns (expected
+    * NDV from ANALYZE stats when present — an undersized bloom saturates
+    * and prunes nothing). The options are per-write, so staged commits,
+    * compactions and re-stamps all emit them and the layout survives
+    * every rewrite. */
   private def lineageWriter(rows: org.apache.spark.sql.DataFrame,
-                            meta: Meta): org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] = {
-    // column mapping on the WRITE side: data files uniformly carry
-    // PHYSICAL names, whatever the logical schema has been renamed to —
-    // a rename never forks the on-disk column namespace
-    val mapped =
-      if (meta.renamed.isEmpty) rows
-      else rows.select(meta.columns.map(lc =>
-        col(lc).as(physOf(meta, lc))) ++
-        Seq(LineageTable.VER, LineageTable.DEL).map(col) ++
-        // the partition-directory keys ride through the rename mapping
-        // untouched ([[writeBaseData]])
-        rows.columns.filter(_.startsWith("_pd")).toSeq.map(col): _*)
-    meta.bloomCols.foldLeft(mapped.write) { (w, c) =>
+                            meta: Meta): org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] =
+    meta.bloomCols.foldLeft(physical(rows, meta).write) { (w, c) =>
       val ndv = meta.stats.getOrElse(c, 100000L)
       w.option(s"parquet.bloom.filter.enabled#$c", "true")
         .option(s"parquet.bloom.filter.expected.ndv#$c", ndv.toString)
     }
-  }
 
   /**
    * Apply a [[Txn]] to the stored table and make it durable, validating
@@ -1264,14 +1265,9 @@ final class Catalog(spark: SparkSession, warehouse: String,
         // projection a SUPERSET of the lineage; a recovery re-run may
         // re-append pairs — extra candidates are filtered by the probe's
         // final predicate re-application (a missing key would lose rows)
-        val projCols = meta.projCols
-        if (projCols.nonEmpty) {
-          val delta = scanGraftDir(sdir)
-          projCols.foreach { c =>
-            delta.select(col(c), col(meta.key))
-              .write.mode(SaveMode.Append).parquet(projDir(n, c).toString)
-          }
-        }
+        if (meta.projCols.nonEmpty)
+          writeProjections(n, meta, scanGraftDir(sdir), meta.projCols,
+            SaveMode.Append)
         crashPoint(s"multi-proj-$n")
         val tail = new Path(dir(n), "tail")
         fs.mkdirs(tail)
@@ -1750,15 +1746,9 @@ final class Catalog(spark: SparkSession, warehouse: String,
       }
     crashPoint(s"rewrite-snaps-$name")
     fs.delete(cloneManifestPath(name), false)
-    if (meta.projCols.nonEmpty) {
-      val rows = scanGraftDir(baseDir(name))
-      meta.projCols.foreach { c =>
-        rows.select(col(c), col(meta.key))
-          .repartitionByRange(col(c))
-          .sortWithinPartitions(col(c))
-          .write.mode(SaveMode.Overwrite).parquet(projDir(name, c).toString)
-      }
-    }
+    if (meta.projCols.nonEmpty)
+      writeProjections(name, meta, scanGraftDir(baseDir(name)), meta.projCols,
+        SaveMode.Overwrite)
   }
 
   /**
@@ -1934,9 +1924,13 @@ final class Catalog(spark: SparkSession, warehouse: String,
    * sorted projection.
    *
    * Maintenance is O(delta): every commit appends just the delta's
-   * `(column, key)` pairs ([[tryCommit]]); compaction/vacuum/purge
+   * `(column, key)` pairs ([[applyTxn]]); compaction/vacuum/purge
    * rebuild projections from the new base as part of the rewrite they
-   * already pay ([[rollRewrite]]) — which is also what makes purge's
+   * already pay ([[rollRewrite]]). The build, the appends and the
+   * rebuilds all go through [[writeProjections]], which writes the
+   * column under its logical name at its declared type, so a renamed or
+   * re-added column keeps its projection through every commit and
+   * rewrite. The rewrite rebuild is also what makes purge's
    * erasure reach the projections: the roll-forward deletes the
    * projection dirs before it retires the old base, and a recovery
    * re-run after a crash deletes and rebuilds them again, so no
@@ -1956,12 +1950,28 @@ final class Catalog(spark: SparkSession, warehouse: String,
       require(t.dataCols.contains(column), s"no such column: $column")
       require(!meta.projCols.contains(column),
         s"$name already has a projection on $column")
-      t.lineage.select(col(column), col(meta.key))
-        .repartitionByRange(col(column))
-        .sortWithinPartitions(col(column))
-        .write.mode(SaveMode.Overwrite).parquet(projDir(name, column).toString)
+      writeProjections(name, meta, physical(t.lineage, meta), Seq(column),
+        SaveMode.Overwrite)
       writeMeta(name, meta.copy(projCols = meta.projCols :+ column))
     } }
+
+  /** The one projection writer. `rows` carry the table's PHYSICAL column
+    * names — a staged delta, a rewritten base, or the lineage mapped by
+    * [[physical]] — at its declared types ([[stage]] casts every delta,
+    * and a rewrite and the lineage read under [[declaredSchema]]). Each
+    * projection gets the `(column, key)` pairs under their LOGICAL
+    * names, so a renamed or re-added column reads back under the name
+    * [[probeProjected]] asks for. A build (Overwrite) lays the pairs out
+    * range-partitioned and sorted by the column; a commit (Append) adds
+    * its delta's pairs as they are. */
+  private def writeProjections(name: String, meta: Meta, rows: DataFrame,
+                               columns: Seq[String], mode: SaveMode): Unit =
+    columns.foreach { c =>
+      val pairs = rows.select(col(physOf(meta, c)).as(c), col(meta.key))
+      (if (mode == SaveMode.Append) pairs
+       else pairs.repartitionByRange(col(c)).sortWithinPartitions(col(c)))
+        .write.mode(mode).parquet(projDir(name, c).toString)
+    }
 
   /** Drop a projection: forget the metadata, delete the side table. */
   def dropProjection(name: String, column: String): Unit =
@@ -2021,10 +2031,13 @@ final class Catalog(spark: SparkSession, warehouse: String,
       .filter(_.endsWith(".parquet"))
   }
 
-  /** A sidecar part as a frame; None when it has no parquet part. */
+  /** A sidecar part as a frame, read under its first part's footer
+    * schema (the file schema inference would pick, without its job);
+    * None when it has no parquet part. */
   private def readSidecar(table: String, part: String): Option[DataFrame] = {
     val parts = sidecarParts(table, part)
-    if (parts.isEmpty) None else Some(spark.read.parquet(parts: _*))
+    if (parts.isEmpty) None
+    else Some(spark.read.schema(footerSchema(parts.head)).parquet(parts: _*))
   }
 
   /** The provenance file's rows and the provenance they carry, in one
@@ -2471,7 +2484,10 @@ final class Catalog(spark: SparkSession, warehouse: String,
    * predicate pushes to ITS parquet scan, where the sort makes row-group
    * min-max stats selective), then the lineage is semi-joined down to
    * those keys and only the candidates are windowed — never the full
-   * table. Falls back to the plain full-lineage probe when no projection
+   * table. The side table reads under the column's and the key's
+   * declared types (the lineage schema), so pre- and post-widen pairs
+   * promote natively and no schema-inference job runs. Falls back to the
+   * plain full-lineage probe when no projection
    * serves `column` (including the purge crash window, which deletes
    * projection dirs first) or when the predicate references columns
    * beyond the projected one — a compound predicate cannot resolve
@@ -2486,7 +2502,10 @@ final class Catalog(spark: SparkSession, warehouse: String,
     if (!meta.projCols.contains(column) || !isDir(pd)) t.probe(predicate)
     else
       try {
-        val cand = spark.read.parquet(pd.toString)
+        val types = t.lineage.schema
+        val cand = spark.read
+          .schema(StructType(Seq(types(column), types(meta.key))))
+          .parquet(pd.toString)
           .where(predicate) // resolves NOW — throws if predicate needs more columns
           .select(col(meta.key).as("_match_key")).distinct()
         t.probeWithCandidates(cand, predicate)
@@ -3241,7 +3260,10 @@ final class Catalog(spark: SparkSession, warehouse: String,
    * key, the partition column, and indexed/layout columns widen too —
    * the promotion is order-preserving, so layouts and probes survive —
    * but the PARTITION column is rejected (its declared type is baked
-   * into directory-value semantics).
+   * into directory-value semantics). A projection on the column is not
+   * rewritten either: its narrow files and the wide pairs later commits
+   * append read as one frame under the declared type
+   * ([[probeProjected]]).
    */
   def widenColumn(name: String, column: String, tpe: String): LineageTable =
     lock(name).synchronized { withCommitMarker(name) {
@@ -3265,23 +3287,6 @@ final class Catalog(spark: SparkSession, warehouse: String,
       // column
       writeMeta(name, meta.copy(widened = meta.widened.updated(phys, target),
         added = meta.added.updatedWith(phys)(_.map(_ => target))))
-      // a projection on the widened column would otherwise accumulate
-      // MIXED physical types: its existing files carry the narrow type
-      // and post-widen commit deltas append wide ones into the same
-      // directory, whose schema-inferred probe read then fails at
-      // execution (or resolves by listing order). Rebuild it NOW from
-      // the widened-typed lineage read — one column-pruned scan, the
-      // createProjection cost, under the same lock so no commit can
-      // interleave (a crash mid-rewrite leaves a missing or partial dir
-      // until the next rewrite rebuilds projections wholesale).
-      if (meta.projCols.contains(column)) {
-        val widened = getTable(name)
-        widened.lineage.select(col(column), col(meta.key))
-          .repartitionByRange(col(column))
-          .sortWithinPartitions(col(column))
-          .write.mode(SaveMode.Overwrite)
-          .parquet(projDir(name, column).toString)
-      }
       getTable(name)
     } }
 

@@ -208,15 +208,7 @@ final class LineageTable private (
    * version are skipped wholesale by footer min-max); the rank window
    * then runs over surviving rows only.
    */
-  def asOfVersion(maxVer: Long): DataFrame = {
-    val upTo = lineage.where(col(VER) <= maxVer)
-    val live =
-      if (compactedOnly) upTo.where(col(DEL) === 0)
-      else rankedWithCount(upTo)
-        .where(col("_rn") === 1 && col(DEL) === 0)
-        .drop("_rn", "_cnt")
-    live.select(dataCols.map(col): _*)
-  }
+  def asOfVersion(maxVer: Long): DataFrame = liveAt(lineage, maxVer)
 
   /** [[asOfVersion]] restricted to candidate keys BEFORE the window (the
     * [[probe]] trick, shared with [[Catalog.refreshMaterializedView]]'s
@@ -224,13 +216,17 @@ final class LineageTable private (
     * (a single `_match_key` column) — the rank window shuffles the
     * candidates, never the table, so a differential read against a
     * 100 TB table costs its changed keys. */
-  private[core] def asOfVersionKeys(maxVer: Long, keys: DataFrame): DataFrame = {
-    val cand = lineage
-      .join(keys, col(keyCol) <=> col("_match_key"), "left_semi")
-      .where(col(VER) <= maxVer)
+  private[core] def asOfVersionKeys(maxVer: Long, keys: DataFrame): DataFrame =
+    liveAt(lineage.join(keys, col(keyCol) <=> col("_match_key"), "left_semi"),
+      maxVer)
+
+  /** Each record's newest live row of `rows` (lineage-shaped) stamped
+    * ≤ `maxVer`, as data columns. */
+  private def liveAt(rows: DataFrame, maxVer: Long): DataFrame = {
+    val upTo = rows.where(col(VER) <= maxVer)
     val live =
-      if (compactedOnly) cand.where(col(DEL) === 0)
-      else rankedWithCount(cand)
+      if (compactedOnly) upTo.where(col(DEL) === 0)
+      else rankedWithCount(upTo)
         .where(col("_rn") === 1 && col(DEL) === 0)
         .drop("_rn", "_cnt")
     live.select(dataCols.map(col): _*)

@@ -51,9 +51,9 @@ object Graph {
     val spark = edges.sparkSession
     // |E| lives in files, not block memory (see scaladoc)
     val dir = graft.sources.TextSources.scratchDir(spark, "graft_pagerank_")
-    edges.select(col("src"), col("dst"))
-      .write.mode("overwrite").parquet(dir)
-    val out = pagerankOn(spark.read.parquet(dir), iters)
+    val e = edges.select(col("src"), col("dst"))
+    e.write.mode("overwrite").parquet(dir)
+    val out = pagerankOn(spark.read.schema(e.schema).parquet(dir), iters)
     deleteQuietly(spark, dir)
     out
   }
@@ -130,8 +130,9 @@ object Graph {
     require(maxHops >= 0, s"bfs: maxHops=$maxHops must be >= 0")
     val spark = edges.sparkSession
     val dir = graft.sources.TextSources.scratchDir(spark, "graft_bfs_")
-    edges.select(col("src"), col("dst")).write.mode("overwrite").parquet(dir)
-    val out = bfsOn(spark.read.parquet(dir), sources, maxHops)
+    val e = edges.select(col("src"), col("dst"))
+    e.write.mode("overwrite").parquet(dir)
+    val out = bfsOn(spark.read.schema(e.schema).parquet(dir), sources, maxHops)
     deleteQuietly(spark, dir)
     out
   }

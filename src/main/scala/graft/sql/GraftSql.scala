@@ -1288,7 +1288,7 @@ class GraftSql(val spark: SparkSession) {
     h.child match {
       case agg: Aggregate =>
         for {
-          (df, gs, sumCols, centsOf, minOf, maxOf) <- routeAggregate(agg)
+          (df, gs, measures) <- routeAggregate(agg)
           // the translated predicate references the view's RAW measure
           // columns (n_rows, cents[_x]) and is applied after the select
           // aliased them away — Spark's ResolveMissingReferences then
@@ -1296,14 +1296,13 @@ class GraftSql(val spark: SparkSession) {
           // those names (… sum(v) AS n_rows … HAVING count(*) > 5), the
           // predicate would silently bind to the user column and filter
           // the wrong measure — fall back to the direct path (ADVICE r9).
-          internal = "n_rows" +: (centsOf.values.toSeq ++
-            minOf.values ++ maxOf.values)
+          internal = "n_rows" +: (measures.centsOf.values.toSeq ++
+            measures.minOf.values ++ measures.maxOf.values)
           userAliases = agg.aggregateExpressions.collect {
             case a: org.apache.spark.sql.catalyst.expressions.Alias => a.name
           }
           if userAliases.intersect(internal).isEmpty
-          cond <- translateHaving(h.havingCondition, gs, sumCols, centsOf,
-            minOf, maxOf)
+          cond <- translateHaving(h.havingCondition, gs, measures)
         } yield df.where(cond)
       case _ => None
     }
@@ -1351,16 +1350,43 @@ class GraftSql(val spark: SparkSession) {
     case _ => None
   }
 
+  /** What a routed view maintains per measure: its summed columns and
+    * their cents columns, and its min/max extremum columns (empty for a
+    * join view). */
+  private case class ViewMeasures(sumCols: Seq[String],
+                                  centsOf: Map[String, String],
+                                  minOf: Map[String, String],
+                                  maxOf: Map[String, String])
+
+  /** The one measure translator, shared by the routed select list and
+    * HAVING: an aggregate call onto the view's columns — count(*) →
+    * n_rows, sum/avg of a summed column → the exact cents arithmetic,
+    * min/max of a maintained extremum → its column. None for any other
+    * call, which fails the route. */
+  private def measureOf(e: Expression, m: ViewMeasures): Option[Column] = {
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
+    e match {
+      case UnresolvedFunction(Seq(f), args, false, None, false, Nil, false) =>
+        def arg(cols: Iterable[String]) = sumArgOf(args, cols.toSeq)
+        f match {
+          case "count" if isCount1(args) => Some(col("n_rows"))
+          case "sum" => arg(m.sumCols).map(c => col(m.centsOf(c)) / 100.0)
+          case "avg" => arg(m.sumCols).map(c =>
+            col(m.centsOf(c)) / 100.0 / col("n_rows"))
+          case "min" => arg(m.minOf.keys).map(c => col(m.minOf(c)) / 100.0)
+          case "max" => arg(m.maxOf.keys).map(c => col(m.maxOf(c)) / 100.0)
+          case _ => None
+        }
+      case _ => None
+    }
+  }
+
   /** Translate a HAVING predicate onto the view's columns: group
-    * attributes pass through, count(*) → n_rows, sum/avg of summed
-    * columns → the exact cents arithmetic; anything else (another
-    * function, a non-group column, a subquery) fails the route. */
+    * attributes pass through, aggregate calls go through [[measureOf]];
+    * anything else (another function, a non-group column, a subquery)
+    * fails the route. */
   private def translateHaving(cond: Expression, gs: Seq[String],
-                              sumCols: Seq[String],
-                              centsOf: Map[String, String],
-                              minOf: Map[String, String] = Map.empty,
-                              maxOf: Map[String, String] = Map.empty)
-      : Option[Column] = {
+                              measures: ViewMeasures): Option[Column] = {
     import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
     var ok = true
     // explicit top-down recursion, NOT transformUp/Down: bottom-up would
@@ -1369,25 +1395,8 @@ class GraftSql(val spark: SparkSession) {
     // own view-column attributes — both falsely fail the group-column
     // check. Aggregate-call leaves are terminal here.
     def tr(e: Expression): Expression = e match {
-      case UnresolvedFunction(Seq("count"), args, false, None, false, Nil, false)
-          if isCount1(args) =>
-        Bridge.expression(col("n_rows"))
-      case UnresolvedFunction(Seq("sum"), args, false, None, false, Nil, false)
-          if sumArgOf(args, sumCols).isDefined =>
-        Bridge.expression(col(centsOf(sumArgOf(args, sumCols).get)) / 100.0)
-      case UnresolvedFunction(Seq("avg"), args, false, None, false, Nil, false)
-          if sumArgOf(args, sumCols).isDefined =>
-        Bridge.expression(
-          col(centsOf(sumArgOf(args, sumCols).get)) / 100.0 / col("n_rows"))
-      case UnresolvedFunction(Seq("min"), args, false, None, false, Nil, false)
-          if sumArgOf(args, minOf.keys.toSeq).isDefined =>
-        Bridge.expression(
-          col(minOf(sumArgOf(args, minOf.keys.toSeq).get)) / 100.0)
-      case UnresolvedFunction(Seq("max"), args, false, None, false, Nil, false)
-          if sumArgOf(args, maxOf.keys.toSeq).isDefined =>
-        Bridge.expression(
-          col(maxOf(sumArgOf(args, maxOf.keys.toSeq).get)) / 100.0)
-      case _: UnresolvedFunction => ok = false; e
+      case _: UnresolvedFunction =>
+        measureOf(e, measures).fold { ok = false; e }(Bridge.expression)
       case _: SubqueryExpression => ok = false; e
       case a: UnresolvedAttribute =>
         if (!gs.contains(a.nameParts.last)) ok = false
@@ -1402,8 +1411,7 @@ class GraftSql(val spark: SparkSession) {
     * the routed frame plus the translation context (group columns,
     * summed columns, measure-column names) a HAVING above needs. */
   private def routeAggregate(aggPlan: Aggregate)
-      : Option[(DataFrame, Seq[String], Seq[String], Map[String, String],
-                Map[String, String], Map[String, String])] = {
+      : Option[(DataFrame, Seq[String], ViewMeasures)] = {
     import org.apache.spark.sql.catalyst.analysis.{UnresolvedAlias, UnresolvedFunction}
     import org.apache.spark.sql.catalyst.expressions.Alias
     aggPlan match {
@@ -1433,8 +1441,7 @@ class GraftSql(val spark: SparkSession) {
         // registered in the SAME catalog, equality of two plain columns;
         // fact/dim and fk/key orders all tried, the dim-key check in
         // currentJoinViewFor disambiguates)
-        val hit: Option[(Catalog, String, Seq[String], Map[String, String],
-                         Map[String, String], Map[String, String])] =
+        val hit: Option[(Catalog, String, ViewMeasures)] =
           rel match {
             case Join(l, r, org.apache.spark.sql.catalyst.plans.Inner,
                 Some(EqualTo(x: UnresolvedAttribute, y: UnresolvedAttribute)),
@@ -1450,8 +1457,8 @@ class GraftSql(val spark: SparkSession) {
                   if fcat eq dcat
                   h <- fcat.currentJoinViewFor(ftbl, dtbl, fk, dk, gs)
                   // join views maintain count/sum only — no extrema maps
-                } yield (fcat, h._1, h._2, h._3,
-                  Map.empty[String, String], Map.empty[String, String])
+                } yield (fcat, h._1, ViewMeasures(h._2, h._3, Map.empty,
+                  Map.empty))
               val xs = x.nameParts.last; val ys = y.nameParts.last
               tryOrder(l, r, xs, ys).orElse(tryOrder(l, r, ys, xs))
                 .orElse(tryOrder(r, l, xs, ys))
@@ -1462,10 +1469,10 @@ class GraftSql(val spark: SparkSession) {
                 if durable.contains(src)
                 (cat, tbl) = durable(src)
                 h <- cat.currentViewFor(tbl, gs)
-              } yield (cat, h._1, h._2, h._3, h._4, h._5)
+              } yield (cat, h._1, ViewMeasures(h._2, h._3, h._4, h._5))
           }
         for {
-          (cat, view, sumCols, centsOf, minOf, maxOf) <- hit
+          (cat, view, measures) <- hit
           // the WHERE routes only when every column it names is a group
           // column and it calls no functions (a nondeterministic rand()
           // gate must not be re-evaluated against different rows) and no
@@ -1489,25 +1496,7 @@ class GraftSql(val spark: SparkSession) {
               case UnresolvedAlias(a: UnresolvedAttribute, _)
                   if gs.contains(a.nameParts.last) =>
                 Some(col(a.nameParts.last))
-              case Alias(UnresolvedFunction(Seq("count"), args, false, None, false, Nil, false),
-                  name) if isCount1(args) =>
-                Some(col("n_rows").as(name))
-              case Alias(UnresolvedFunction(Seq("sum"), args, false, None, false, Nil, false),
-                  name) if sumArgOf(args, sumCols).isDefined =>
-                Some((col(centsOf(sumArgOf(args, sumCols).get)) / 100.0).as(name))
-              case Alias(UnresolvedFunction(Seq("avg"), args, false, None, false, Nil, false),
-                  name) if sumArgOf(args, sumCols).isDefined =>
-                Some((col(centsOf(sumArgOf(args, sumCols).get)) / 100.0
-                  / col("n_rows")).as(name))
-              // min/max serve from the maintained extremum columns (r10)
-              case Alias(UnresolvedFunction(Seq("min"), args, false, None, false, Nil, false),
-                  name) if sumArgOf(args, minOf.keys.toSeq).isDefined =>
-                Some((col(minOf(sumArgOf(args, minOf.keys.toSeq).get))
-                  / 100.0).as(name))
-              case Alias(UnresolvedFunction(Seq("max"), args, false, None, false, Nil, false),
-                  name) if sumArgOf(args, maxOf.keys.toSeq).isDefined =>
-                Some((col(maxOf(sumArgOf(args, maxOf.keys.toSeq).get))
-                  / 100.0).as(name))
+              case Alias(f, name) => measureOf(f, measures).map(_.as(name))
               case _ => None
             }
             if (translated.forall(_.isDefined)) Some(translated.map(_.get))
@@ -1516,7 +1505,7 @@ class GraftSql(val spark: SparkSession) {
         } yield {
           val base = cat.getTable(view).snapshot
           (filt.fold(base)(c => base.where(rebased(c))).select(cols: _*),
-            gs, sumCols, centsOf, minOf, maxOf)
+            gs, measures)
         }
       case _ => None
     }

@@ -189,11 +189,13 @@ object StreamOps {
       .start()
     try query.awaitTermination() finally query.stop()
     // read the result back on the CALLER's session: downstream batch ops
-    // on it plan with the caller's full width. Existence is checked
-    // through the same Hadoop FS the sink wrote through.
+    // on it plan with the caller's full width. The files hold the plan's
+    // rows, so they read under its schema with no inference job.
+    // Existence is checked through the same Hadoop FS the sink wrote
+    // through.
     val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(out))
-      spark.read.parquet(out.toString)
+      spark.read.schema(plan.schema).parquet(out.toString)
     else // a drained stream with zero batches yields an empty result
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         plan.schema)

@@ -8,6 +8,24 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
+
+  /** `body`'s result and the Spark jobs started while it ran. Listener
+    * events are async; a short drain keeps the count complete
+    * (undercounting is the safe direction for the upper-bound asserts
+    * this feeds). */
+  protected def jobsOf[A](body: => A): (A, Int) = {
+    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        counter.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val result =
+      try { val r = body; Thread.sleep(300); r }
+      finally spark.sparkContext.removeSparkListener(listener)
+    (result, counter.get())
+  }
 }
 
 object SparkSpec {

@@ -15,24 +15,6 @@ class CatalogSpec extends SparkSpec {
     (new Catalog(spark, wh, autoCompact = autoCompact), wh)
   }
 
-  /** `body`'s result and the Spark jobs started while it ran. Listener
-    * events are async; a short drain keeps the count complete
-    * (undercounting is the safe direction for the upper-bound asserts
-    * this feeds). */
-  private def jobsOf[A](body: => A): (A, Int) = {
-    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        counter.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val result =
-      try { val r = body; Thread.sleep(300); r }
-      finally spark.sparkContext.removeSparkListener(listener)
-    (result, counter.get())
-  }
-
   private def base = {
     import spark.implicits._
     Seq((1L, 10L, "A"), (2L, 20L, "B"), (3L, 30L, "C")).toDF("k", "v", "s")

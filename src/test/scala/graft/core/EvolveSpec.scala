@@ -317,16 +317,15 @@ class EvolveSpec extends SparkSpec {
     }
   }
 
-  test("widening a PROJECTED column rebuilds the projection wide (r12)") {
+  test("widening a PROJECTED column: the probe serves pre- and post-widen rows (r12)") {
     import spark.implicits._
-    val (cat, wh) = freshCat(autoCompact = false)
+    val (cat, _) = freshCat(autoCompact = false)
     cat.createTable("wp", "k",
       Seq((1L, 1), (2L, 2), (3L, 3)).toDF("k", "v"))
     cat.createProjection("wp", "v")
     cat.widenColumn("wp", "v", "bigint")
-    // post-widen commits append BIGINT pairs to the projection — without
-    // the rebuild the directory would mix int32 and int64 files and the
-    // probe's schema-inferred read would fail or resolve by listing order
+    // post-widen commits append BIGINT pairs to the projection, beside
+    // its int32 files; the probe reads both under the declared bigint
     cat.commit("wp", Txn.empty.insert(
       Seq((4L, 4000000000L)).toDF("k", "v")))
     cat.commit("wp", Txn.empty.update(col("k") === 1L,
@@ -334,9 +333,6 @@ class EvolveSpec extends SparkSpec {
     val probed = cat.probeProjected("wp", "v", col("v") >= 2L)
     assert(probed.collect().map(_.getLong(0)).toSet === Set(1L, 2L, 3L, 4L),
       "the projection-served probe must see pre- AND post-widen rows")
-    // and the projection directory is uniformly wide
-    val pj = spark.read.parquet(s"$wh/wp/proj/v")
-    assert(pj.schema("v").dataType.typeName === "long")
   }
 
   test("SQL: ALTER TABLE ALTER COLUMN TYPE routes to widenColumn (r11)") {

@@ -53,6 +53,61 @@ class ProjectionSpec extends SparkSpec {
     expectEq("cat", col("cat") === 99L && col("price") > 0L)
   }
 
+  test("building a projection probe starts no Spark job") {
+    // the side table reads under the lineage's declared types; a
+    // schema-less read started one inference job per probe
+    val (cat, _) = freshCatalog()
+    cat.createTable("t", "k", rows(200))
+    cat.createProjection("t", "cat")
+    cat.commit("t", Txn.empty.update(col("k") === 1L, Map("cat" -> lit(7L))))
+    cat.probeProjected("t", "cat", col("cat") === 7L) // warm up
+    val (probed, jobs) = jobsOf(cat.probeProjected("t", "cat", col("cat") === 7L))
+    assert(jobs === 0, s"building the probe ran $jobs jobs")
+    assert(probed.count() === 5L)
+  }
+
+  test("a projection on a renamed or re-added column serves through " +
+      "commits, a fold and a reopen") {
+    import spark.implicits._
+    // rename v -> v2 (physical v), and drop-then-re-add w (physical w_r1):
+    // in both the logical column is not the name its files carry
+    val cases = Seq[(String, Catalog => Unit, String)](
+      ("v2", _.renameColumn("t", "v", "v2"), "\"v2\""),
+      ("w", { c => c.dropColumn("t", "w"); c.addColumn("t", "w", "bigint") },
+        "\"w_r1\""))
+    for ((column, evolve, phys) <- cases) {
+      val (cat, wh) = freshCatalog()
+      cat.createTable("t", "k",
+        Seq((1L, 10L, 100L), (2L, 20L, 200L), (3L, 30L, 300L))
+          .toDF("k", "v", "w"))
+      evolve(cat)
+      assert(new String(Files.readAllBytes(
+        java.nio.file.Paths.get(s"$wh/t/_graft.json"))).contains(phys))
+      cat.createProjection("t", column)
+      val pred = col(column) >= 30L
+      def check(c: Catalog, step: String): Unit = {
+        val got = c.probeProjected("t", column, pred)
+          .collect().map(_.toSeq).toSet
+        val want = c.getTable("t").snapshot.where(pred)
+          .collect().map(_.toSeq).toSet
+        assert(got === want, s"$column: probe diverged $step")
+        val txn = new java.io.File(s"$wh/_txn")
+        assert(Option(txn.list()).forall(_.isEmpty),
+          s"$column: _txn holds ${Option(txn.list()).map(_.toSeq)} $step")
+      }
+      check(cat, "after createProjection")
+      val cols = cat.getTable("t").dataCols
+      cat.commit("t", Txn.empty.insert(Seq((4L, 40L, 400L)).toDF(cols: _*)))
+      check(cat, "after the insert")
+      cat.commit("t", Txn.empty.update(col("k") === 1L,
+        Map(column -> lit(500L))))
+      check(cat, "after the update")
+      cat.foldTail("t")
+      check(cat, "after foldTail")
+      check(new Catalog(spark, wh, autoCompact = false), "after a reopen")
+    }
+  }
+
   test("projection maintenance is O(delta): a commit appends delta rows only") {
     val (cat, wh) = freshCatalog()
     cat.createTable("t", "k", rows(1000))

@@ -50,6 +50,19 @@ class VectorIndexSpec extends SparkSpec {
       inline.orderBy("qid", "rnk").collect().map(_.toSeq).toSeq)
   }
 
+  test("reading the index starts only its collect job") {
+    // the sidecar reads under its footer schema; a schema-less read
+    // started an inference job before the collect
+    val wh = Files.createTempDirectory("graft_vecidx_jobs_").toString
+    val cat = new Catalog(spark, wh, autoCompact = false)
+    cat.createTable("e", "vec_id", embeddings)
+    cat.createVectorIndex("e", "embedding", nCentroids = 8, iters = 1)
+    cat.vectorIndex("e") // warm up
+    val (idx, jobs) = jobsOf(cat.vectorIndex("e"))
+    assert(jobs <= 1, s"vectorIndex ran $jobs jobs")
+    assert(idx.exists(_._3.nonEmpty))
+  }
+
   test("staleness is advisory: probes after commits stay exact IVF over the live snapshot") {
     val wh = Files.createTempDirectory("graft_vecidx_stale_").toString
     val cat = new Catalog(spark, wh, autoCompact = false)

@@ -41,6 +41,19 @@ class StreamCdfSpec extends SparkSpec {
       (2L, 20L, "B", 3L, "delete")))  // commit 2, op 2: tombstone w/ state
   }
 
+  test("draining one commit's feed starts one Spark job") {
+    // the micro-batch write; the output reads back under the plan's
+    // schema, where a schema-less read started an inference job
+    val (cat, t) = freshTable()
+    cat.commit(t, Txn.empty.update(col("k") === 1L, Map("s" -> col("s"))))
+    val feed = StreamOps.changeFeed(spark, cat, t)
+    StreamOps.drainAppend(spark, feed) // warm up
+    val (out, jobs) = jobsOf(StreamOps.drainAppend(spark, feed))
+    assert(jobs <= 1, s"the drain ran $jobs jobs")
+    assert(out.select("k", "op").collect().map(r =>
+      (r.getLong(0), r.getString(1))).toSeq === Seq((1L, "upsert")))
+  }
+
   test("checkpointed consumer resumes: second drain sees ONLY new commits") {
     val (cat, t) = freshTable()
     cat.commit(t, Txn.empty.update(col("k") === 1L, Map("s" -> col("s"))))
